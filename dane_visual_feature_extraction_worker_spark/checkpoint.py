@@ -30,6 +30,7 @@ import json
 import os
 import time
 from typing import Callable
+from urllib.parse import urlparse
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -83,7 +84,14 @@ class CheckpointedRunner:
         self.entity_col = entity_col
 
     # -- checkpoint table ------------------------------------------------
-    def load_checkpoints(self) -> DataFrame:
+    def _read_checkpoints(self) -> DataFrame | None:
+        """The ``_checkpoints`` table, or None when it does not exist yet.
+
+        Only a missing path counts as "no table": any other read error
+        (a corrupt or foreign file) propagates, so a damaged table fails
+        the run instead of silently re-running every bucket."""
+        from pyspark.errors import AnalysisException
+
         from dane_visual_feature_extraction_worker_spark.sources.maintenance import (
             _recover_interrupted_swap,
         )
@@ -91,20 +99,41 @@ class CheckpointedRunner:
         # a crash mid-compaction leaves the table at <dir>.__old__;
         # recover before reading so resume never sees an empty table
         _recover_interrupted_swap(self.checkpoint_dir)
+        # a plain local path can be checked without a Spark read (no
+        # FileNotFound traces on every fresh run); URIs go to the reader
+        if not urlparse(self.checkpoint_dir).scheme and not os.path.exists(
+            self.checkpoint_dir
+        ):
+            return None
         try:
-            return self.spark.read.parquet(self.checkpoint_dir)
-        except Exception:
+            # the declared schema skips the footer-reading inference job
+            return self.spark.read.schema(CHECKPOINT_SCHEMA).parquet(
+                self.checkpoint_dir
+            )
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
+            return None
+
+    def load_checkpoints(self) -> DataFrame:
+        cps = self._read_checkpoints()
+        if cps is None:
             return self.spark.createDataFrame([], CHECKPOINT_SCHEMA)
+        return cps
+
+    def _progress(self) -> tuple[dict[int, int], int]:
+        """({done bucket: rows}, last attempt) from ONE collect of the
+        checkpoint table (n_buckets small rows)."""
+        cps = self._read_checkpoints()
+        if cps is None:
+            return {}, 0
+        rows = cps.select("bucket", "status", "rows", "attempt").collect()
+        done = {r["bucket"]: r["rows"] for r in rows if r["status"] == "done"}
+        attempts = [r["attempt"] for r in rows if r["attempt"] is not None]
+        return done, max(attempts, default=0)
 
     def done_buckets(self) -> set[int]:
-        cps = self.load_checkpoints()
-        return {
-            r["bucket"]
-            for r in cps.where(F.col("status") == "done")
-            .select("bucket")
-            .distinct()
-            .collect()
-        }
+        return set(self._progress()[0])
 
     def _record(self, row: dict) -> None:
         self.spark.createDataFrame([row], CHECKPOINT_SCHEMA).write.mode(
@@ -127,11 +156,10 @@ class CheckpointedRunner:
             ProvenanceTracker,
         )
 
-        done = self.done_buckets()
+        done, last_attempt = self._progress()
         pending = [b for b in range(self.n_buckets) if b not in done]
-        attempt = 1 + (
-            self.load_checkpoints().agg(F.max("attempt")).collect()[0][0] or 0
-        )
+        attempt = 1 + last_attempt
+        output_rows = sum(done.values())
         prov = ProvenanceTracker(
             "checkpointed_run",
             params={
@@ -229,6 +257,7 @@ class CheckpointedRunner:
                 }
             )
             completed += 1
+            output_rows += rows
             if fail_after is not None and completed >= fail_after:
                 raise RuntimeError(f"injected failure after {completed} buckets")
         # success: staging no longer needed (a crashed attempt leaves it;
@@ -254,6 +283,9 @@ class CheckpointedRunner:
             "n_buckets": self.n_buckets,
             "source_scans": 1,
             "staged_writes": staged_writes,
+            # sum of ``rows`` over every done checkpoint row: the output
+            # size without re-reading the output
+            "output_rows": output_rows,
         }
         prov.persist(
             os.path.join(self.output_dir, f"_provenance_attempt{attempt}.json"),

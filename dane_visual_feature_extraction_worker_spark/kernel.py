@@ -21,6 +21,14 @@ machine, while keeping the *execution shape* identical:
   stats — the zero-temporal-leakage contract,
 - absent inputs zero-filled (reference: data_handling.py:93-99).
 
+Two physical strategies compute the same float32 features bit-for-bit:
+``feature_vectors`` (the grouped-pandas kernel above, also the fixture
+oracle) and ``feature_vectors_windows`` (the default scale path: pure
+Catalyst window aggregates, narrow packed shuffle, no Python stage).
+Both build their JVM-side text features from SQL expression text, one
+``selectExpr`` per stage, so a plan costs a few hundred Py4J calls to
+build rather than one per expression node.
+
 Feature vector (D = 32 float32), per (conv_id, ts) anchor, from history
 rows with ts <= anchor:
   f0  n_turns_so_far            f1  cum_text_chars
@@ -101,81 +109,91 @@ def _token_hash_bucket(tok: str) -> int:
     return b
 
 
-def with_text_features(
-    transcripts: DataFrame, passthrough: tuple[str, ...] = ()
-) -> DataFrame:
+# Plan text. Every stage below is ONE ``selectExpr`` over SQL expression
+# strings: Python builds the text and the JVM parses it, so a stage costs
+# one Py4J round trip per expression string, where the Column API pays
+# one per expression node (~9,000 per flagship plan, ~1 s of build
+# time). The select boundaries are the ones the plans have always had,
+# so CollapseProject sees the same tree and the optimized plan is
+# unchanged.
+#
+# Literals are spelled so parsing never depends on session conf: typed
+# doubles (``0.0D``) rather than decimal ``0.0``, and no backslash in any
+# string literal — ``spark.sql.parser.escapedStringLiterals`` changes how
+# backslashes unescape (and mis-parses raw ``r'...'`` literals on Spark
+# 4.1), so the tokenizer's ``\s`` is spelled ``chr(92)``, which constant
+# folding turns back into the literal regex ``(?U)\s+``.
+_ROLE_CODE_SQL = (
+    "CASE "
+    + " ".join(f"WHEN role = '{r}' THEN {j}" for r, j in _ROLE_IDX.items())
+    + " ELSE -1 END"
+)
+# (?U): Unicode-aware \s so the JVM tokenizer agrees with the Python
+# oracle's str.split() on NBSP & friends (ADVICE r1). (Residual edge:
+# U+001C..1F separators — Python isspace() true, Unicode White_Space
+# false — are not treated as spaces here.)
+_TOKENS_SQL = (
+    "filter(split(coalesce(text, ''), concat('(?U)', chr(92), 's+')), "
+    "t -> t != '')"
+)
+_TOKEN_BUCKET_SQL = f"t -> pmod(crc32(t), {_HASH_BUCKETS})"
+_CHARS_SQL = "length(coalesce(text, ''))"
+_BAGS = [f"bag{b}" for b in range(_HASH_BUCKETS)]
+
+
+def _bucket_count_sql(b: int) -> str:
+    """Tokens of the row's ``__h`` bucket list that landed in bucket b."""
+    return f"size(filter(__h, h -> h = {b}))"
+
+
+def _l2_bag(counts: DataFrame, keep: list[str]) -> DataFrame:
+    """``keep`` + bag0..bag15: the ``__c0..__c15`` bucket counts
+    l2-normalized (all-zero rows stay zero)."""
+    norm_sq = " + ".join(f"__c{b} * __c{b}" for b in range(_HASH_BUCKETS))
+    normed = counts.selectExpr("*", f"sqrt({norm_sq}) AS __norm")
+    return normed.selectExpr(
+        *keep,
+        *[
+            f"CASE WHEN __norm > 0 THEN __c{b} / __norm ELSE 0.0D END AS bag{b}"
+            for b in range(_HASH_BUCKETS)
+        ],
+    )
+
+
+def with_text_features(transcripts: DataFrame) -> DataFrame:
     """JVM-side text features: chars, words, l2-normalized 16-bucket
     token bag (bag0..bag15), role_code, has_tool.
 
     Whole-stage-codegen'd column expressions — Python never touches the
     text, which is what keeps the kernel memory-light and scalable (text
     handling in the Python workers was the measured scaling ceiling).
-    Staged selects materialize toks/hashes so project-collapse cannot
-    re-inline the regex split / md5 per reference (see dedup.py).
-
-    ``passthrough``: extra columns carried through unchanged (e.g. a
-    pre-computed shuffle/sort key)."""
-    pt = list(passthrough)
-    roles = (
-        F.when(F.col("role") == "user", 0)
-        .when(F.col("role") == "assistant", 1)
-        .when(F.col("role") == "tool", 2)
-        .when(F.col("role") == "system", 3)
-        .otherwise(-1)
-    )
-    s1 = transcripts.select(
-        *pt,
+    Staged selects materialize the token hashes so project-collapse
+    cannot re-inline the regex split / crc32 per reference (see
+    dedup.py)."""
+    keep = ["conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars"]
+    s1 = transcripts.selectExpr(
         "conv_id",
         "turn_idx",
         "ts",
-        roles.alias("role_code"),
-        F.col("tool").isNotNull().cast("int").alias("has_tool"),
-        F.length(F.coalesce(F.col("text"), F.lit(""))).cast("double").alias("chars"),
-        # (?U): Unicode-aware \s so the JVM tokenizer agrees with the
-        # Python oracle's str.split() on NBSP & friends (ADVICE r1).
-        # (Residual edge: U+001C..1F separators — Python isspace() true,
-        # Unicode White_Space false — are not treated as spaces here.)
-        F.filter(
-            F.split(F.coalesce(F.col("text"), F.lit("")), r"(?U)\s+"),
-            lambda t: t != "",
-        ).alias("__toks"),
+        f"{_ROLE_CODE_SQL} AS role_code",
+        "CAST(tool IS NOT NULL AS INT) AS has_tool",
+        f"CAST({_CHARS_SQL} AS DOUBLE) AS chars",
+        f"{_TOKENS_SQL} AS __toks",
     )
-    s2 = s1.select(
-        *pt,
-        "conv_id",
-        "turn_idx",
-        "ts",
-        "role_code",
-        "has_tool",
-        "chars",
-        F.size("__toks").cast("double").alias("words"),
-        F.transform(
-            F.col("__toks"), lambda t: F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS))
-        ).alias("__h"),
+    s2 = s1.selectExpr(
+        *keep,
+        "CAST(size(__toks) AS DOUBLE) AS words",
+        f"transform(__toks, {_TOKEN_BUCKET_SQL}) AS __h",
     )
-    raw = [
-        F.size(F.filter(F.col("__h"), lambda h: h == b)).cast("double").alias(f"__c{b}")
-        for b in range(_HASH_BUCKETS)
-    ]
-    s3 = s2.select(
-        *pt, "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars",
-        "words", *raw
+    s3 = s2.selectExpr(
+        *keep,
+        "words",
+        *[
+            f"CAST({_bucket_count_sql(b)} AS DOUBLE) AS __c{b}"
+            for b in range(_HASH_BUCKETS)
+        ],
     )
-    norm_sq = None
-    for b in range(_HASH_BUCKETS):
-        t = F.col(f"__c{b}") * F.col(f"__c{b}")
-        norm_sq = t if norm_sq is None else norm_sq + t
-    s4 = s3.withColumn("__norm", F.sqrt(norm_sq))
-    bags = [
-        F.when(F.col("__norm") > 0, F.col(f"__c{b}") / F.col("__norm"))
-        .otherwise(F.lit(0.0))
-        .alias(f"bag{b}")
-        for b in range(_HASH_BUCKETS)
-    ]
-    return s4.select(
-        *pt, "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars",
-        "words", *bags
-    )
+    return _l2_bag(s3, [*keep, "words"])
 
 
 def compute_features_numeric(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -506,43 +524,22 @@ def _packed_text_features(transcripts: DataFrame) -> DataFrame:
       bucket, so words == sum of the 16 counts, recovered lane-side.
     l2 normalization happens post-shuffle from the exact integer
     counts — bit-identical to normalizing map-side."""
-    toks = F.filter(
-        F.split(F.coalesce(F.col("text"), F.lit("")), r"(?U)\s+"),
-        lambda t: t != "",
-    )
-    roles = (
-        F.when(F.col("role") == "user", 0)
-        .when(F.col("role") == "assistant", 1)
-        .when(F.col("role") == "tool", 2)
-        .when(F.col("role") == "system", 3)
-        .otherwise(-1)
-    )
-    s1 = transcripts.select(
-        F.xxhash64("conv_id").alias("__ck"),
+    s1 = transcripts.selectExpr(
+        "xxhash64(conv_id) AS __ck",
         "conv_id",
         "turn_idx",
         "ts",
-        (
-            F.length(F.coalesce(F.col("text"), F.lit(""))).cast("bigint") * 256
-            + (roles + 1).cast("bigint") * 32
-            + F.col("tool").isNotNull().cast("bigint")
-            + 1
-        ).alias("__meta"),
-        F.transform(
-            toks, lambda t: F.pmod(F.crc32(t), F.lit(_HASH_BUCKETS))
-        ).alias("__h"),
+        f"CAST({_CHARS_SQL} AS BIGINT) * 256"
+        f" + CAST(({_ROLE_CODE_SQL}) + 1 AS BIGINT) * 32"
+        " + CAST(tool IS NOT NULL AS BIGINT) + 1 AS __meta",
+        f"transform({_TOKENS_SQL}, {_TOKEN_BUCKET_SQL}) AS __h",
     )
     packs = [
-        (
-            F.size(F.filter(F.col("__h"), lambda h: h == 2 * k)).cast("bigint")
-            * F.lit(1 << 32)
-            + F.size(F.filter(F.col("__h"), lambda h: h == 2 * k + 1)).cast(
-                "bigint"
-            )
-        ).alias(f"__p{k}")
+        f"CAST({_bucket_count_sql(2 * k)} AS BIGINT) * {1 << 32}"
+        f" + CAST({_bucket_count_sql(2 * k + 1)} AS BIGINT) AS __p{k}"
         for k in range(_HASH_BUCKETS // 2)
     ]
-    return s1.select("__ck", "conv_id", "turn_idx", "ts", "__meta", *packs)
+    return s1.selectExpr("__ck", "conv_id", "turn_idx", "ts", "__meta", *packs)
 
 
 def _unpack_text_features(df: DataFrame) -> DataFrame:
@@ -552,54 +549,41 @@ def _unpack_text_features(df: DataFrame) -> DataFrame:
     exact integer counts."""
     cs = []
     for k in range(_HASH_BUCKETS // 2):
-        cs.append(F.shiftright(F.col(f"__p{k}"), 32).cast("double"))
-        cs.append(
-            (F.col(f"__p{k}") - F.shiftright(F.col(f"__p{k}"), 32) * F.lit(1 << 32))
-            .cast("double")
-        )
-    words = None
-    for c in cs:
-        words = c if words is None else words + c
-    s3 = df.select(
+        hi = f"shiftright(__p{k}, 32)"
+        cs += [f"CAST({hi} AS DOUBLE)", f"CAST(__p{k} - {hi} * {1 << 32} AS DOUBLE)"]
+    counts = df.selectExpr(
         "__ck",
         "conv_id",
         "turn_idx",
         "ts",
-        (F.shiftright(F.col("__meta"), 8)).cast("double").alias("chars"),
-        (
-            F.shiftright(F.col("__meta") - F.shiftright(F.col("__meta"), 8) * 256, 5)
-            - 1
-        )
-        .cast("int")
-        .alias("role_code"),
-        (
-            (F.col("__meta") - F.shiftright(F.col("__meta"), 5) * 32) - 1
-        )
-        .cast("int")
-        .alias("has_tool"),
-        words.alias("words"),
-        *[c.alias(f"__c{b}") for b, c in enumerate(cs)],
+        "CAST(shiftright(__meta, 8) AS DOUBLE) AS chars",
+        "CAST(shiftright(__meta - shiftright(__meta, 8) * 256, 5) - 1 AS INT)"
+        " AS role_code",
+        "CAST(__meta - shiftright(__meta, 5) * 32 - 1 AS INT) AS has_tool",
+        f"{' + '.join(cs)} AS words",
+        *[f"{c} AS __c{b}" for b, c in enumerate(cs)],
     )
-    norm_sq = None
-    for b in range(_HASH_BUCKETS):
-        t = F.col(f"__c{b}") * F.col(f"__c{b}")
-        norm_sq = t if norm_sq is None else norm_sq + t
-    s4 = s3.withColumn("__norm", F.sqrt(norm_sq))
-    bags = [
-        F.when(F.col("__norm") > 0, F.col(f"__c{b}") / F.col("__norm"))
-        .otherwise(F.lit(0.0))
-        .alias(f"bag{b}")
-        for b in range(_HASH_BUCKETS)
-    ]
-    return s4.select(
-        "__ck", "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars",
-        "words", *bags
+    return _l2_bag(
+        counts,
+        ["__ck", "conv_id", "turn_idx", "ts", "role_code", "has_tool", "chars", "words"],
     )
 
 
-def feature_vectors_windows(
-    transcripts: DataFrame, narrow_shuffle: bool = True
-) -> DataFrame:
+# the flagship windows: running prefix per conversation, and whole session
+_W_CONV = "PARTITION BY __ck, conv_id ORDER BY ts, turn_idx"
+_W_RUN = f"{_W_CONV} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
+_W_SESS = (
+    "PARTITION BY __ck, conv_id, session_id"
+    " ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING"
+)
+# epoch micros / 1e6 as double, same value path as the numpy kernel
+# (via TIMESTAMP: parquet reads give TIMESTAMP_NTZ, which cannot cast
+# to double directly — functions.epoch_seconds)
+_TS_S = "CAST(CAST(ts AS TIMESTAMP) AS DOUBLE)"
+_LAG_TS_S = f"lag({_TS_S}, 1) OVER ({_W_CONV})"
+
+
+def feature_vectors_windows(transcripts: DataFrame) -> DataFrame:
     """Pure-Catalyst physical strategy: the same 32 features as window
     expressions — NO Python stage at all.
 
@@ -618,13 +602,15 @@ def feature_vectors_windows(
     transfer + Python workers is what lifts multi-core scaling
     efficiency (BENCH/BASELINE.md): whole-stage codegen end to end.
 
-    ``narrow_shuffle=True`` (default, r5): tokenize/count map-side and
-    move 10 packed bigints per row through the exchange + sort instead
+    Narrow shuffle (r5): text is tokenized and counted map-side, and
+    10 packed bigints per row move through the exchange + sort instead
     of the raw text/role/tool strings (``_packed_text_features``) —
     bytes through the shuffle and the sort working set are the
-    memory-bus lever the r4 scaling analysis identified. ``False``
-    keeps the r2-r4 raw-rows-first plan (A/B twin; bit-identical
-    output, asserted in tests).
+    memory-bus lever the r4 scaling analysis identified.
+
+    Each stage is one ``selectExpr`` over SQL text with shared window
+    specs (see the plan-text note above ``with_text_features``): the
+    whole plan costs ~300 Py4J calls to build instead of ~9,000.
 
     ``__ck`` = xxhash64(conv_id) leads every sort key: string conv_ids
     share long prefixes, which defeats the radix/prefix comparator — a
@@ -632,35 +618,14 @@ def feature_vectors_windows(
     partition spec, so a (astronomically unlikely) hash collision
     still cannot merge two conversations.
     """
-    from pyspark.sql import Window
-
-    from dane_visual_feature_extraction_worker_spark.functions import epoch_seconds
-
     cols = ["conv_id", "turn_idx", "role", "text", "tool", "ts"]
-    if narrow_shuffle:
-        packed = _packed_text_features(transcripts.select(*cols))
-        shuffled = packed.repartition("__ck").sortWithinPartitions(
-            "__ck", "conv_id", "ts", "turn_idx"
-        )
-        tf = _unpack_text_features(shuffled)
-    else:
-        raw = transcripts.select(*cols).withColumn("__ck", F.xxhash64("conv_id"))
-        raw = raw.repartition("__ck").sortWithinPartitions(
-            "__ck", "conv_id", "ts", "turn_idx"
-        )
-        tf = with_text_features(raw, passthrough=("__ck",))
+    packed = _packed_text_features(transcripts.select(*cols))
+    shuffled = packed.repartition("__ck").sortWithinPartitions(
+        "__ck", "conv_id", "ts", "turn_idx"
+    )
+    tf = _unpack_text_features(shuffled)
 
-    w = Window.partitionBy("__ck", "conv_id").orderBy("ts", "turn_idx")
-    wrun = w.rowsBetween(Window.unboundedPreceding, 0)
-    # epoch micros / 1e6 as double, same value path as the numpy kernel
-    # (route via epoch_seconds: parquet reads give TIMESTAMP_NTZ, which
-    # cannot cast to double directly)
-    ts_s = epoch_seconds("ts")
-    lag_ts = F.lag(ts_s, 1).over(w)
-    gap = F.coalesce(ts_s - lag_ts, F.lit(0.0))
-    rn = F.row_number().over(w).cast("double")
-
-    s1 = tf.select(
+    s1 = tf.selectExpr(
         "__ck",
         "conv_id",
         "turn_idx",
@@ -669,66 +634,55 @@ def feature_vectors_windows(
         "has_tool",
         "chars",
         "words",
-        *[f"bag{b}" for b in range(_HASH_BUCKETS)],
-        ts_s.alias("__ts_s"),
-        F.unix_micros(F.col("ts").cast("timestamp")).alias("__ts_us"),
-        gap.alias("__gap"),
-        rn.alias("__rn"),
+        *_BAGS,
+        f"{_TS_S} AS __ts_s",
+        "unix_micros(CAST(ts AS TIMESTAMP)) AS __ts_us",
+        f"coalesce({_TS_S} - {_LAG_TS_S}, 0.0D) AS __gap",
+        f"CAST(row_number() OVER ({_W_CONV}) AS DOUBLE) AS __rn",
         # new-session flag: first row of the conv, or gap > threshold
-        F.when(lag_ts.isNull() | (ts_s - lag_ts > SESSION_GAP_S), F.lit(1))
-        .otherwise(F.lit(0))
-        .alias("__new"),
+        f"CASE WHEN {_LAG_TS_S} IS NULL OR {_TS_S} - {_LAG_TS_S} > {SESSION_GAP_S}D"
+        " THEN 1 ELSE 0 END AS __new",
     )
-    s2 = s1.select(
+    s2 = s1.selectExpr(
         "*",
-        (F.sum("__new").over(wrun) - 1).cast("bigint").alias("session_id"),
+        f"CAST(sum(__new) OVER ({_W_RUN}) - 1 AS BIGINT) AS session_id",
         # index/ts of the most recent session boundary (running last)
-        F.last(F.when(F.col("__new") == 1, F.col("__rn")), ignorenulls=True)
-        .over(wrun)
-        .alias("__sess_rn"),
-        F.last(F.when(F.col("__new") == 1, F.col("__ts_s")), ignorenulls=True)
-        .over(wrun)
-        .alias("__sess_ts"),
-        F.sum("chars").over(wrun).alias("__cum_chars"),
+        f"last(CASE WHEN __new = 1 THEN __rn END, true) OVER ({_W_RUN})"
+        " AS __sess_rn",
+        f"last(CASE WHEN __new = 1 THEN __ts_s END, true) OVER ({_W_RUN})"
+        " AS __sess_ts",
+        f"sum(chars) OVER ({_W_RUN}) AS __cum_chars",
         # f5 numerator: exact telescoping gap sum in integer micros
-        F.first("__ts_us").over(wrun).alias("__ts0_us"),
-        F.max("__gap").over(wrun).alias("__max_gap"),
+        f"first(__ts_us) OVER ({_W_RUN}) AS __ts0_us",
+        f"max(__gap) OVER ({_W_RUN}) AS __max_gap",
         *[
-            F.sum((F.col("role_code") == j).cast("double")).over(wrun).alias(f"__r{j}")
+            f"sum(CAST(role_code = {j} AS DOUBLE)) OVER ({_W_RUN}) AS __r{j}"
             for j in range(4)
         ],
-        F.sum(F.col("has_tool").cast("double")).over(wrun).alias("__cum_tool"),
+        f"sum(CAST(has_tool AS DOUBLE)) OVER ({_W_RUN}) AS __cum_tool",
     )
-    ws = Window.partitionBy("__ck", "conv_id", "session_id").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    ff = F.col  # shorthand
     feats = [
-        ff("__rn").cast("float").alias("f0"),
-        ff("__cum_chars").cast("float").alias("f1"),
-        (ff("__cum_chars") / ff("__rn")).cast("float").alias("f2"),
-        ff("chars").cast("float").alias("f3"),
-        ff("__gap").cast("float").alias("f4"),
-        (
-            (ff("__ts_us") - ff("__ts0_us")).cast("double") / F.lit(1e6) / ff("__rn")
-        )
-        .cast("float")
-        .alias("f5"),
-        ff("__max_gap").cast("float").alias("f6"),
-        ff("session_id").cast("float").alias("f7"),
-        *[ff(f"__r{j}").cast("float").alias(f"f{8 + j}") for j in range(4)],
-        ff("__cum_tool").cast("float").alias("f12"),
-        (ff("__rn") - ff("__sess_rn") + 1).cast("float").alias("f13"),
-        (ff("__ts_s") - ff("__sess_ts")).cast("float").alias("f14"),
-        ff("words").cast("float").alias("f15"),
-        *[ff(f"bag{b}").cast("float").alias(f"f{16 + b}") for b in range(_HASH_BUCKETS)],
+        "__rn",
+        "__cum_chars",
+        "__cum_chars / __rn",
+        "chars",
+        "__gap",
+        "CAST(__ts_us - __ts0_us AS DOUBLE) / 1000000.0D / __rn",
+        "__max_gap",
+        "session_id",
+        *[f"__r{j}" for j in range(4)],
+        "__cum_tool",
+        "__rn - __sess_rn + 1",
+        "__ts_s - __sess_ts",
+        "words",
+        *_BAGS,
     ]
-    return s2.select(
+    return s2.selectExpr(
         "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
+        "CAST(turn_idx AS INT) AS turn_idx",
         "ts",
         "session_id",
-        F.min("ts").over(ws).alias("session_start"),
-        F.max("ts").over(ws).alias("session_end"),
-        *feats,
+        f"min(ts) OVER ({_W_SESS}) AS session_start",
+        f"max(ts) OVER ({_W_SESS}) AS session_end",
+        *[f"CAST({e} AS FLOAT) AS f{i}" for i, e in enumerate(feats)],
     )

@@ -71,9 +71,9 @@ def main(argv: list[str] | None = None) -> int:
         n_buckets=args.n_buckets,
         entity_col=args.entity_col,
     )
-    summary = runner.run(transcripts, pit_features)
-    out_rows = runner.result().count()
-    print(json.dumps({**summary, "output_rows": out_rows}))
+    # summary["output_rows"] sums the done checkpoint rows: no re-read
+    # of the output
+    print(json.dumps(runner.run(transcripts, pit_features)))
     return 0
 
 

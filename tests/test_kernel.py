@@ -269,3 +269,88 @@ def test_unicode_whitespace_tokenizer_matches_sql_oracle(spark):
         g = got[f"f{b}"].to_numpy().astype("float64")
         r = ref[f"f{b}"].to_numpy()
         assert (g == r).all(), f"f{b} diverges on unicode whitespace"
+
+
+def _whitespace_frame(spark):
+    """Two conversations whose text mixes exotic whitespace with literal
+    backslashes (the characters SQL-literal unescaping would change)."""
+    texts = [
+        "plain ascii words",
+        "nbsp\u00a0separated\u3000tokens",
+        "back\\slash \\s not\\tspace",
+        "tab\tand\nnewline  double",
+        "",
+        None,
+    ]
+    n = len(texts)
+    return spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "conv_id": ["a", "b"] * (n // 2),
+                "turn_idx": np.arange(n, dtype="int32"),
+                "role": ["user", "assistant", "tool", "system", "other", None],
+                "text": texts,
+                "tool": [None, "search", None, None, "x", None],
+                "ts": pd.date_range("2024-01-01", periods=n, freq="20min"),
+            }
+        )
+    )
+
+
+def test_plan_build_py4j_calls_bounded(spark):
+    """The flagship plan is built from SQL expression text, one
+    ``selectExpr`` per stage: its Py4J traffic is a few hundred commands,
+    not one per Column node (~9,000 when each expression node was its
+    own call)."""
+    import gc
+
+    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
+        pit_features,
+    )
+
+    df = _whitespace_frame(spark)
+    client = spark.sparkContext._gateway._gateway_client
+    real = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        # "m\nd\n" releases a dead Python proxy of any earlier object;
+        # when those arrive depends on the collector, not on this build
+        if not command.startswith("m\nd\n"):
+            sent.append(command)
+        return real(command, *args, **kwargs)
+
+    gc.collect()
+    client.send_command = counting
+    try:
+        pit_features(df)
+    finally:
+        del client.send_command
+    assert 0 < len(sent) <= 400, f"{len(sent)} Py4J commands to build the plan"
+
+
+def test_windows_output_independent_of_escaped_string_literals(spark):
+    """The tokenizer regex lives in SQL text; its spelling must mean the
+    same under ``spark.sql.parser.escapedStringLiterals=true`` (where
+    backslashes are not unescaped and raw ``r'...'`` literals mis-parse),
+    so the features may not change with that conf."""
+    from dane_visual_feature_extraction_worker_spark.kernel import (
+        feature_vectors_windows,
+    )
+
+    df = _whitespace_frame(spark)
+
+    def rows():
+        out = feature_vectors_windows(df).toPandas()
+        return out.sort_values("turn_idx").reset_index(drop=True)
+
+    key = "spark.sql.parser.escapedStringLiterals"
+    base = rows()
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        escaped = rows()
+    finally:
+        spark.conf.set(key, prev)
+    assert base["f15"].tolist() == [3.0, 3.0, 3.0, 4.0, 0.0, 0.0]
+    pd.testing.assert_frame_equal(base, escaped)

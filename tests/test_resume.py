@@ -171,3 +171,50 @@ def test_prebucketed_source_rejects_mismatched_buckets(
     r = _runner(spark, str(tmp_path), "mismatch", n_buckets=8)
     with pytest.raises(ValueError, match="incompatible with n_buckets"):
         r.run(src, lambda df: df)
+
+
+def test_run_pipeline_resume_reports_output_rows(spark, transcripts, tmp_path, capsys):
+    """Kill a checkpointed run, resume it through ``run_pipeline.main``:
+    the printed ``output_rows`` (summed from the done checkpoint rows,
+    no re-read of the output) equals a DuckDB count of the output."""
+    import json
+
+    import duckdb
+
+    from dane_visual_feature_extraction_worker_spark.plans.pipeline import (
+        pit_features as pit_features_flat,
+    )
+    from jobs import run_pipeline
+
+    tmp = str(tmp_path)
+    src, out, cps = f"{tmp}/src", f"{tmp}/out", f"{tmp}/cp"
+    transcripts.write.parquet(src)
+    killed = CheckpointedRunner(spark, out, cps, n_buckets=4)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        killed.run(spark.read.parquet(src), pit_features_flat, fail_after=1)
+
+    capsys.readouterr()
+    args = ["--input", src, "--output", out, "--checkpoints", cps, "--n-buckets", "4"]
+    assert run_pipeline.main(args) == 0
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert summary["skipped"] == 1 and summary["computed"] == 3
+
+    counted = duckdb.sql(
+        f"SELECT count(*) FROM read_parquet('{out}/bucket=*/*.parquet')"
+    ).fetchone()[0]
+    assert summary["output_rows"] == counted == transcripts.count()
+
+
+def test_corrupt_checkpoint_table_fails_loudly(spark, transcripts, tmp_path):
+    """Only a missing ``_checkpoints`` path means "nothing done yet"; an
+    unreadable table must fail the run, not re-run every bucket."""
+    import os
+
+    r = _runner(spark, str(tmp_path), "corrupt", n_buckets=2)
+    os.makedirs(r.checkpoint_dir)
+    with open(os.path.join(r.checkpoint_dir, "part-0.parquet"), "wb") as f:
+        f.write(b"not a parquet file")
+    with pytest.raises(Exception) as err:
+        r.run(transcripts, lambda df: df)
+    assert "injected failure" not in str(err.value)
+    assert not os.path.exists(r.output_dir + "/bucket=0")
