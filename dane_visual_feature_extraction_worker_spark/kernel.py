@@ -375,98 +375,6 @@ def compute_features_pd(pdf: pd.DataFrame) -> pd.DataFrame:
     )
 
 
-def compute_features_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Whole-bucket kernel: one sort + numpy slice loop per conversation.
-
-    Produces byte-identical output to per-conv ``compute_features_pd``
-    (same formulas, same float32 ops) but skips pandas per-group
-    plumbing (~3 ms/group → ~30 µs/group): shared columns are converted
-    to numpy ONCE, conversations become index slices.
-    """
-    pdf = pdf.sort_values(["conv_id", "ts", "turn_idx"], kind="mergesort").reset_index(
-        drop=True
-    )
-    n = len(pdf)
-    if n == 0:
-        return pd.DataFrame(
-            {
-                "conv_id": pd.Series(dtype=object),
-                "turn_idx": pd.Series(dtype="int32"),
-                "ts": pd.Series(dtype="datetime64[us]"),
-                "session_id": pd.Series(dtype="int64"),
-                "features": pd.Series(dtype=object),
-            }
-        )
-    text = pdf["text"].fillna("").to_numpy(dtype=object)
-    role = pdf["role"].fillna("").to_numpy(dtype=object)
-    tool_notna = pd.notna(pdf["tool"].to_numpy(dtype=object)).astype(np.float64)
-    ts_s = ts_seconds_pd(pdf["ts"]).to_numpy()
-    ts_us = pdf["ts"].to_numpy().astype("datetime64[us]").astype("int64")
-
-    chars = np.fromiter((len(t) for t in text), dtype=np.float64, count=n)
-    tok_lists = [t.split() if t else [] for t in text]
-    words = np.fromiter((len(tl) for tl in tok_lists), dtype=np.float64, count=n)
-    bag = np.zeros((n, _HASH_BUCKETS), dtype=np.float64)
-    for i, tl in enumerate(tok_lists):
-        if not tl:
-            continue
-        row = bag[i]
-        for tok in tl:
-            row[_token_hash_bucket(tok)] += 1.0
-        norm = np.sqrt((row**2).sum())
-        if norm > 0:
-            row /= norm
-
-    codes, _ = pd.factorize(pdf["conv_id"], sort=False)
-    starts = np.flatnonzero(np.r_[True, codes[1:] != codes[:-1]])
-    ends = np.r_[starts[1:], n]
-
-    feats = np.empty((n, FEATURE_DIM), dtype=np.float64)
-    sess_all = np.empty(n, dtype=np.int64)
-    role_eq = {r: (role == r).astype(np.float64) for r in _ROLE_IDX}
-    for a, b in zip(starts, ends):
-        m = b - a
-        tss = ts_s[a:b]
-        gaps = np.diff(tss, prepend=tss[0])
-        gaps[0] = 0.0
-        idx1 = np.arange(1, m + 1, dtype=np.float64)
-        cum_chars = np.cumsum(chars[a:b])
-        cum_gap_s = (ts_us[a:b] - ts_us[a]).astype(np.float64) / 1e6
-        new_sess = (gaps > SESSION_GAP_S).astype(np.int64)
-        new_sess[0] = 1
-        sess_id = np.cumsum(new_sess) - 1
-        idx = np.arange(m)
-        sess_start = np.maximum.accumulate(np.where(new_sess == 1, idx, 0))
-        out = feats[a:b]
-        out[:, 0] = idx1
-        out[:, 1] = cum_chars
-        out[:, 2] = cum_chars / idx1
-        out[:, 3] = chars[a:b]
-        out[:, 4] = gaps
-        out[:, 5] = cum_gap_s / idx1
-        out[:, 6] = np.maximum.accumulate(gaps)
-        out[:, 7] = sess_id
-        for r, j in _ROLE_IDX.items():
-            out[:, 8 + j] = np.cumsum(role_eq[r][a:b])
-        out[:, 12] = np.cumsum(tool_notna[a:b])
-        out[:, 13] = idx - sess_start + 1
-        out[:, 14] = tss - tss[sess_start]
-        out[:, 15] = words[a:b]
-        out[:, 16:] = bag[a:b]
-        sess_all[a:b] = sess_id
-
-    f32 = feats.astype(np.float32)
-    return pd.DataFrame(
-        {
-            "conv_id": pdf["conv_id"],
-            "turn_idx": pdf["turn_idx"].astype("int32"),
-            "ts": pdf["ts"],
-            "session_id": sess_all,
-            "features": list(f32),
-        }
-    )
-
-
 def with_feature_array(df: DataFrame) -> DataFrame:
     """Collapse flat f0..f31 back into ``features array<float>``
     (fixture/golden-comparison form, FIXTURES.md §5)."""

@@ -1,10 +1,13 @@
 """Driver-contract queries (SURVEY.md §2B) over /root/testdata tables.
 
-Each function takes ``(spark, sf_dir)`` and returns a DataFrame; the
-matching ANSI-SQL oracle string lives in ``ORACLES`` (DuckDB runs it on
-the same parquet, pre-registered views). Column aliases MATCH between
-the two on purpose — the driver's comparator sorts columns by name and
-hashes values.
+One function per key: a query is named by its key, registered in
+``QUERIES`` by ``@query`` where it is defined, takes ``(spark, sf_dir)``
+and returns a DataFrame. Its ANSI-SQL oracle is ``ORACLES[key]`` (DuckDB
+runs it on the same parquet, pre-registered views). Column aliases
+MATCH between the two on purpose — the driver's comparator sorts
+columns by name and hashes values. Operators are called through their
+module (``textstats.vocab_topk``), so a query may share its operator's
+name.
 
 The ``events`` table ``(event_id int64, ts timestamp, user_id int64,
 event_type string, value double, props string)`` plays the transcript
@@ -20,17 +23,67 @@ in the same frame order (ROUND half-tie semantics differ; floor cannot).
 
 from __future__ import annotations
 
+import contextlib
+import glob
+import hashlib
+import os
+import shutil
+import tempfile
+import time
+
+import numpy as np
+import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from dane_visual_feature_extraction_worker_spark.functions import (
-    epoch_seconds,
-    ts_seconds_pd,
+from dane_visual_feature_extraction_worker_spark import (
+    checkpoint,
+    jpeg,
+    kernel,
+    multimodal,
 )
-from dane_visual_feature_extraction_worker_spark.operators.asof import asof_join_sorted
-from dane_visual_feature_extraction_worker_spark.operators.intervals import interval_join
-from dane_visual_feature_extraction_worker_spark.operators.joins import outer_merge, salted_join
-from dane_visual_feature_extraction_worker_spark.operators.sessionize import session_stats
+from dane_visual_feature_extraction_worker_spark.functions import cacheutil, timeutil
+from dane_visual_feature_extraction_worker_spark.operators import (
+    asof,
+    bpe,
+    dedup,
+    dq,
+    encoding,
+    funnel,
+    graph,
+    integrity,
+    intervals,
+    joins,
+    labels,
+    layout,
+    linalg,
+    lm,
+    merge,
+    packing,
+    quota,
+    recency,
+    retrieval,
+    rollup,
+    sampling,
+    scd2,
+    sessionize,
+    similarity,
+    sketches,
+    stats,
+    survival,
+    textstats,
+    toolusage,
+    turns,
+    windows,
+)
+from dane_visual_feature_extraction_worker_spark.sources import archives, catalog
+from dane_visual_feature_extraction_worker_spark.streaming import (
+    dedup as stream_dedup,
+    enrich as stream_enrich,
+    joins as stream_joins,
+    stateful as stream_stateful,
+    windows as stream_windows,
+)
 
 
 #: Memoized parquet SCHEMAS per path — metadata only, never data.
@@ -113,8 +166,19 @@ def _r6(c) -> F.Column:
     return F.floor(c * F.lit(1_000_000.0)) / F.lit(1_000_000.0)
 
 
+#: Every driver query by key (``queries()``); see ``query``.
+QUERIES: dict = {}
+
+
+def query(fn):
+    """Register ``fn`` in ``QUERIES`` under its own name."""
+    QUERIES[fn.__name__] = fn
+    return fn
+
+
 # ---------------------------------------------------------------- scans
 
+@query
 def scan_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1/A2: scan with pushed predicate + pruned columns (the reference
     pushes its samplerate predicate into the glob, data_handling.py:50-51;
@@ -125,6 +189,7 @@ def scan_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A8: constant-folded normalization + projection (reference z-norm
     (x-mu)/sigma, misc/spectrogram_example2/get_sepectogram.py:63-64)."""
@@ -137,6 +202,7 @@ def project_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def sorted_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A4: stable per-entity ordering exposed as a rank column
     (reference sorts its timestamp key list, data_handling.py:33)."""
@@ -147,6 +213,7 @@ def sorted_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def grouped_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A13 generalized: grouped aggregation with partial (map-side)
     aggregation — one shuffle on the group key."""
@@ -160,6 +227,7 @@ def grouped_count(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # -------------------------------------------------------------- windows
 
+@query
 def lag_lead_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A22 offset form: prev/next value + gap seconds per entity."""
     e = _events(spark, sf_dir)
@@ -171,11 +239,13 @@ def lag_lead_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("value", 1).over(w).alias("prev_value"),
         F.lead("value", 1).over(w).alias("next_value"),
         _r6(
-            epoch_seconds("ts") - F.lag(epoch_seconds("ts"), 1).over(w)
+            timeutil.epoch_seconds("ts")
+            - F.lag(timeutil.epoch_seconds("ts"), 1).over(w)
         ).alias("gap_s"),
     )
 
 
+@query
 def rolling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A22: trailing 5-row aggregates ending AT the anchor
     (rowsBetween(-4, 0) — leakage-free frame)."""
@@ -196,6 +266,7 @@ def rolling_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def backfill_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3/A7 generalized: point-in-time forward fill of a sparse signal
     (purchase value) to every row; -1 sentinel before first observation
@@ -217,11 +288,12 @@ def backfill_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gap sessionization (>3600 s starts a new session) + per-session
     rollup. Uses the engine operator (operators/sessionize.py)."""
     e = _events(spark, sf_dir)
-    return session_stats(
+    return sessionize.session_stats(
         e, gap_seconds=3600.0, entity="user_id", ts="ts", order=["ts", "event_id"]
     ).select(
         "user_id",
@@ -232,6 +304,7 @@ def sessionize_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def tumbling_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A23: epoch-aligned 1-day tumbling buckets per event_type."""
     e = _events(spark, sf_dir)
@@ -263,47 +336,46 @@ def _asof_sides(spark: SparkSession, sf_dir: str):
     return purchases, clicks
 
 
+@query
 def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """THE flagship (A5 degenerate): for each purchase anchor, the latest
     click with click.ts <= purchase.ts per user — default scale path:
     pure-JVM union-window as-of (operators/asof.py asof_join_union;
     one shuffle + one sort, whole-stage codegen, no Python)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_union,
-    )
-
     purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_union(
+    return asof.asof_join_union(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id",
     )
 
 
+@query
 def asof_join_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arrow physical path of the same as-of semantics: bucket-cogrouped
     ``pandas.merge_asof`` (the reference-shaped vectorized batch kernel).
     Verified against the identical oracle as ``asof_join``."""
     purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_sorted(
+    return asof.asof_join_sorted(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id",
     )
 
 
+@query
 def interval_join_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5+A6+A7: containment join into a derived interval table
     (per user × event_type [min ts, max ts]), first-by-start dedup,
     sentinel -1 on miss (data_handling.py:121-129)."""
     e = _events(spark, sf_dir)
-    intervals = e.groupBy("user_id", "event_type").agg(
+    shots = e.groupBy("user_id", "event_type").agg(
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts")
     ).select("user_id", "start_ts", "end_ts", F.col("event_type").alias("label"))
     probes = e.where(F.col("event_type") == "purchase").select(
         "event_id", "user_id", "ts"
     )
-    out = interval_join(
+    out = intervals.interval_join(
         probes,
-        intervals,
+        shots,
         entity="user_id",
         ts="ts",
         probe_keys=["event_id"],
@@ -319,6 +391,7 @@ def interval_join_shots(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def outer_merge_modalities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A3+A7: full-outer merge of two per-entity feature tables with
     zero-fill for the absent side (data_handling.py:93-99 zero tensors)."""
@@ -331,7 +404,7 @@ def outer_merge_modalities(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_purchases"),
         _dsum("value").alias("purchase_value"),
     )
-    return outer_merge(
+    return joins.outer_merge(
         clicks,
         purchases,
         keys=["user_id"],
@@ -344,6 +417,7 @@ def outer_merge_modalities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6: first row per key by deterministic order
     (hits[0] rule, data_handling.py:124-126)."""
@@ -356,6 +430,7 @@ def dedup_first(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def union_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A11: unionByName of per-run outputs (torch.cat of batch results,
     feature_extraction.py:75-81)."""
@@ -369,6 +444,7 @@ def union_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return a.unionByName(b)
 
 
+@query
 def salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigated join (north rule): salt fact keys, explode the dim
     side; result identical to the plain join, so the oracle is unsalted."""
@@ -377,7 +453,7 @@ def salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         e.select("user_id").distinct()
         .withColumn("tier", F.pmod(F.col("user_id"), F.lit(5)).cast("bigint"))
     )
-    joined = salted_join(e, dim, key="user_id", n_salts=8)
+    joined = joins.salted_join(e, dim, key="user_id", n_salts=8)
     return joined.groupBy("tier").agg(
         F.count(F.lit(1)).alias("n"), _dsum("value").alias("sum_value")
     )
@@ -385,6 +461,7 @@ def salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------- kernel
 
+@query
 def feature_vector_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A10/A12: vectorized Arrow kernel — per-entity grouped applyInPandas
     computing an 8-dim point-in-time feature row per event, every feature
@@ -392,9 +469,6 @@ def feature_vector_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
     batched apply_model (feature_extraction.py:17-32) with deterministic
     numpy math; SQL-oracle-checkable because the features are scalar
     prefix stats."""
-    import numpy as np
-    import pandas as pd
-
     e = _events(spark, sf_dir).select(
         "event_id", "user_id", "ts", "event_type", "value", "props"
     )
@@ -418,7 +492,7 @@ def feature_vector_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         # exact decimal arithmetic: values carry 2 decimals; cumsum in
         # integer cents is order-independent and bit-stable
         cents = np.round(val * 100.0).astype(np.int64)
-        ts_s = ts_seconds_pd(pdf["ts"]).to_numpy()
+        ts_s = timeutil.ts_seconds_pd(pdf["ts"]).to_numpy()
         err_flag = (pdf["event_type"] == "error").to_numpy(dtype=np.float64)
 
         idx1 = np.empty(n)
@@ -641,25 +715,6 @@ ORACLES: dict[str, str] = {
     """,
 }
 
-QUERIES = {
-    "scan_transcripts": scan_transcripts,
-    "project_filter": project_filter,
-    "sorted_turns": sorted_turns,
-    "grouped_count": grouped_count,
-    "lag_lead_turns": lag_lead_turns,
-    "rolling_agg": rolling_agg,
-    "backfill_pit": backfill_pit,
-    "sessionize_gaps": sessionize_gaps,
-    "tumbling_window_agg": tumbling_window_agg,
-    "asof_join": asof_join,
-    "interval_join_shots": interval_join_shots,
-    "outer_merge_modalities": outer_merge_modalities,
-    "dedup_first": dedup_first,
-    "union_runs": union_runs,
-    "salted_hot_join": salted_hot_join,
-    "feature_vector_udf": feature_vector_udf,
-}
-
 
 # ------------------------------------------------- training-data pipeline
 
@@ -671,13 +726,13 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
 
 
+@query
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup via content-digest groupBy (operators/dedup.py)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import exact_dedup
-
-    return exact_dedup(_documents(spark, sf_dir))
+    return dedup.exact_dedup(_documents(spark, sf_dir))
 
 
+@query
 def dedup_jaccard(
     spark: SparkSession, sf_dir: str, max_df: int = 1000
 ) -> DataFrame:
@@ -688,29 +743,23 @@ def dedup_jaccard(
     Jaccard VALUES are always exact (hot-shingle correction), but a
     pair whose every common shingle is hot is skipped — raise max_df on
     stop-shingle-dominated corpora (ADVICE r2)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import jaccard_pairs
-
-    return jaccard_pairs(_documents(spark, sf_dir), threshold=0.5, max_df=max_df)
+    return dedup.jaccard_pairs(_documents(spark, sf_dir), threshold=0.5, max_df=max_df)
 
 
+@query
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash(8)+LSH(4 bands) candidate pairs (operators/dedup.py)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
-    return minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id"))
+    return dedup.minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id"))
 
 
+@query
 def simhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs (Hamming<=8, 120-bit two-word sigs —
     13-14-bit band keys, VERDICT r2 scale fix). Banding with
     max_hamming+1 chunks has exact recall (pigeonhole), so the DuckDB
     oracle is a brute-force all-pairs Hamming filter over the same
     majority-vote signatures."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import simhash_pairs
-
-    return simhash_pairs(_fan(_documents(spark, sf_dir), "doc_id"), max_hamming=8)
+    return dedup.simhash_pairs(_fan(_documents(spark, sf_dir), "doc_id"), max_hamming=8)
 
 
 def _simhash_oracle_sql(max_hamming: int = 8, bits: int = 120) -> str:
@@ -719,13 +768,10 @@ def _simhash_oracle_sql(max_hamming: int = 8, bits: int = 120) -> str:
     [15w+1, 15w+15] as a 60-bit int (bit b of word w = bit b%4 of hex
     digit 15(w+1) - b//4), per-bit majority vote, total popcount of the
     per-word XORs <= max_hamming over all pairs."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        MAX_TOKENS,
-        WORD_BITS,
-    )
-
-    n_words = (bits + WORD_BITS - 1) // WORD_BITS
-    word_bits = [min(WORD_BITS, bits - w * WORD_BITS) for w in range(n_words)]
+    n_words = (bits + dedup.WORD_BITS - 1) // dedup.WORD_BITS
+    word_bits = [
+        min(dedup.WORD_BITS, bits - w * dedup.WORD_BITS) for w in range(n_words)
+    ]
     digits = ",\n                   ".join(
         f"(strpos('0123456789abcdef', substr(hx, {i}, 1)) - 1) AS g{i}"
         for i in range(1, 15 * n_words + 1)
@@ -754,7 +800,7 @@ def _simhash_oracle_sql(max_hamming: int = 8, bits: int = 120) -> str:
                  unnest(list_slice(
                    list_filter(string_split_regex(lower(text), '\\s+'),
                                x -> x <> ''),
-                   1, {MAX_TOKENS})) AS tok
+                   1, {dedup.MAX_TOKENS})) AS tok
           FROM documents
         ), hx AS (
           SELECT doc_id, substr(md5(tok), 1, {15 * n_words}) AS hx FROM tok
@@ -778,30 +824,24 @@ def _simhash_oracle_sql(max_hamming: int = 8, bits: int = 120) -> str:
     """
 
 
+@query
 def lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import lang_id as _li
-
-    return _li(_documents(spark, sf_dir))
+    return textstats.lang_id(_documents(spark, sf_dir))
 
 
+@query
 def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        quality_score as _qs,
-    )
-
-    return _qs(_documents(spark, sf_dir))
+    return textstats.quality_score(_documents(spark, sf_dir))
 
 
+@query
 def token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import token_stats
-
-    return token_stats(_documents(spark, sf_dir))
+    return textstats.token_stats(_documents(spark, sf_dir))
 
 
+@query
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import fingerprint
-
-    return fingerprint(_documents(spark, sf_dir))
+    return textstats.fingerprint(_documents(spark, sf_dir))
 
 
 def _query_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -810,11 +850,10 @@ def _query_vec(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A24: brute-force cosine top-10 vs the vec_id=0 query vector."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import topk_cosine
-
-    return topk_cosine(
+    return similarity.topk_cosine(
         _embeddings(spark, sf_dir), _query_vec(spark, sf_dir), k=10
     )
 
@@ -822,37 +861,32 @@ def topk_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ANN_BITS = 4  # 16 buckets at test SF; production sizes via lsh_bits_for
 
 
+@query
 def topk_blas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BLAS (matmul pandas-UDF) physical path of brute-force cosine
     top-10 — identical output to ``topk_similarity`` (same oracle): the
     matmul only gates candidacy; survivors are re-scored with the
     oracle-reproducible JVM fold."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        topk_cosine_blas,
-    )
-
-    return topk_cosine_blas(
+    return similarity.topk_cosine_blas(
         _embeddings(spark, sf_dir), _query_vec(spark, sf_dir), k=10
     )
 
 
+@query
 def ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane sign-LSH bucketed approximate top-5 (scale path
     of A24). Hyperplanes are seeded constants shared with the oracle."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import ann_topk
-
-    return ann_topk(
+    return similarity.ann_topk(
         _embeddings(spark, sf_dir), _query_vec(spark, sf_dir), k=5, n_bits=_ANN_BITS
     )
 
 
+@query
 def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-5: inverted-file buckets from 16 data-derived
     centroids (the 16 smallest vec_ids — deterministic so the oracle
     rebuilds the identical index), nprobe=2."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import ivf_topk
-
-    return ivf_topk(
+    return similarity.ivf_topk(
         _embeddings(spark, sf_dir),
         _query_vec(spark, sf_dir),
         k=5,
@@ -861,6 +895,7 @@ def ivf_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def ivf_ann_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF top-5 against a PERSISTED index (operators/similarity.
     ivf_index_build / ivf_query — r4 VERDICT item 5): first invocation
@@ -868,50 +903,36 @@ def ivf_ann_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet partitioned by cid), every later invocation skips straight
     to the probe-pruned bucket scan. Same deterministic seed-centroid
     config as ivf_ann, so it shares ivf_ann's oracle."""
-    import hashlib
-    import os
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        ivf_index_build,
-        ivf_index_exists,
-        ivf_query,
-    )
-
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"graft_ivfidx_{tag}")
-    if not ivf_index_exists(path):
-        ivf_index_build(_embeddings(spark, sf_dir), path, n_centroids=16)
-    return ivf_query(
+    if not similarity.ivf_index_exists(path):
+        similarity.ivf_index_build(_embeddings(spark, sf_dir), path, n_centroids=16)
+    return similarity.ivf_query(
         spark, path, _query_vec(spark, sf_dir), k=5, nprobe=2
     )
 
 
+@query
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed embedding near-dup pairs (cos > 0.3 within LSH bucket)."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        near_dup_pairs,
-    )
-
-    return near_dup_pairs(
+    return similarity.near_dup_pairs(
         _embeddings(spark, sf_dir), threshold=0.3, n_bits=_ANN_BITS
     )
 
 
+@query
 def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column plumbing: synthesize payload bytes, extract via
     mapInPandas (multimodal.py). Oracle checks n_bytes + md5 of the
     payload; the (stub) feature array is covered by the rows-only twin
     ``multimodal_features`` and pytest."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        attach_payload,
-        extract_features,
+    mm = multimodal.extract_features(
+        multimodal.attach_payload(_documents(spark, sf_dir))
     )
-
-    mm = extract_features(attach_payload(_documents(spark, sf_dir)))
     return mm.select("doc_id", "n_bytes", "payload_md5")
 
 
+@query
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stub-decode feature vectors, flattened to f0..f7 doubles for the
     driver comparator (raw array<float> is unhashable in its pandas
@@ -920,12 +941,9 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit from ascii() bytes (documents are ASCII by generation).
     The array form stays available via multimodal.extract_features and
     is covered by pytest."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        attach_payload,
-        extract_features,
+    mm = multimodal.extract_features(
+        multimodal.attach_payload(_documents(spark, sf_dir))
     )
-
-    mm = extract_features(attach_payload(_documents(spark, sf_dir)))
     return mm.select(
         "doc_id",
         *[
@@ -935,29 +953,23 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame sampling over binary payloads (every 4th 16-byte frame);
     oracle recomputes each sampled frame's md5 from text substrings
     (payload = UTF-8 of ASCII text)."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        attach_payload,
-        frame_sample,
-    )
-
-    return frame_sample(
-        attach_payload(_documents(spark, sf_dir)), frame_bytes=16, stride=4
+    return multimodal.frame_sample(
+        multimodal.attach_payload(_documents(spark, sf_dir)), frame_bytes=16, stride=4
     )
 
 
+@query
 def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-neighbor payload resize to 8 samples; oracle recomputes
     sample bytes via ascii(substr(text, floor(i*n/8)+1, 1))."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        attach_payload,
-        resize_payload,
+    return multimodal.resize_payload(
+        multimodal.attach_payload(_documents(spark, sf_dir)), out_len=8
     )
-
-    return resize_payload(attach_payload(_documents(spark, sf_dir)), out_len=8)
 
 
 _COS_SQL = """
@@ -970,11 +982,7 @@ _COS_SQL = """
 def _bucket_sql(v: str, n_bits: int = 4, dim: int = 64) -> str:
     """DuckDB twin of operators.similarity.lsh_bucket: same seeded
     Rademacher hyperplane constants, same sequential double fold."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        hyperplane_signs,
-    )
-
-    signs = hyperplane_signs(n_bits, dim)
+    signs = similarity.hyperplane_signs(n_bits, dim)
     terms = []
     for i in range(n_bits):
         h = "[" + ", ".join(f"{float(s):.1f}" for s in signs[i]) + "]"
@@ -1278,45 +1286,18 @@ ORACLES.update(
     }
 )
 
-QUERIES.update(
-    {
-        "dedup_exact": dedup_exact,
-        "dedup_jaccard": dedup_jaccard,
-        "dedup_minhash_lsh": dedup_minhash_lsh,
-        "simhash_dedup": simhash_dedup,
-        "lang_id": lang_id,
-        "quality_score": quality_score,
-        "token_count": token_count,
-        "doc_fingerprint": doc_fingerprint,
-        "topk_similarity": topk_similarity,
-        "topk_blas": topk_blas,
-        "ann_lsh": ann_lsh,
-        "ivf_ann": ivf_ann,
-        "ivf_ann_indexed": ivf_ann_indexed,
-        "embedding_near_dup": embedding_near_dup,
-        "multimodal_decode": multimodal_decode,
-        "multimodal_features": multimodal_features,
-        "multimodal_frame_sample": multimodal_frame_sample,
-        "multimodal_resize": multimodal_resize,
-    }
-)
 
-
+@query
 def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """North-rule resume demo (rows-only check): run a checkpointed
     bucket-partitioned job, crash-inject after 2 buckets, resume; return
     the checkpoint/lineage table. Asserts inside that resume recomputed
     only the remainder (checkpoint.py)."""
-    import shutil
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.checkpoint import CheckpointedRunner
-
     tmp = tempfile.mkdtemp(prefix="ckpt_demo_")
     try:
         e = _events(spark, sf_dir).where(F.col("user_id") < 50).cache()
         e.count()
-        runner = CheckpointedRunner(
+        runner = checkpoint.CheckpointedRunner(
             spark,
             output_dir=f"{tmp}/out",
             checkpoint_dir=f"{tmp}/cp",
@@ -1348,17 +1329,11 @@ def checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
-QUERIES["checkpoint_resume"] = checkpoint_resume
-
-
+@query
 def asof_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The declarative as-of physical path (inequality join + window
     dedup) — same semantics as ``asof_join``; both paths are exposed so
     the driver verifies them independently."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_rangejoin,
-    )
-
     e = _events(spark, sf_dir)
     purchases = e.where(F.col("event_type") == "purchase").select(
         "user_id",
@@ -1372,7 +1347,7 @@ def asof_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_id").alias("click_id"),
         F.col("value").alias("click_value"),
     )
-    return asof_join_rangejoin(
+    return asof.asof_join_rangejoin(
         purchases,
         clicks,
         on="user_id",
@@ -1383,15 +1358,14 @@ def asof_join_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def dependency_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A19: fetch the dependency's latest stored result per entity and
     join it into the consuming job (reference io_util.py:288-295
     fetch_upstream_result). Upstream = latest click row per user;
     consumers = purchases; -1 sentinel when no upstream exists."""
-    from dane_visual_feature_extraction_worker_spark.checkpoint import lookup_upstream
-
     e = _events(spark, sf_dir)
-    upstream = lookup_upstream(
+    upstream = checkpoint.lookup_upstream(
         e.where(F.col("event_type") == "click").select(
             "user_id",
             F.col("ts").alias("up_ts"),
@@ -1420,8 +1394,6 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     ``events.parquet`` DIRECTORY of part files (any Spark-written
     table, e.g. scaled bench data) is itself the source dir — the glob
     would match zero part files and silently stream nothing."""
-    import os
-
     e = _events(spark, sf_dir)
     path = os.path.join(sf_dir, "events.parquet")
     if os.path.isdir(path):
@@ -1448,12 +1420,9 @@ def _pinned_state_partitions(spark: SparkSession):
     first start; here every invocation creates a FRESH checkpoint, so
     the pin is per-run and env-overridable
     (``SPARK_GRAFT_STREAM_STATE_PARTITIONS``, default 4)."""
-    import contextlib
-    import os as _os
-
     @contextlib.contextmanager
     def _cm():
-        n = _os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
+        n = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "4")
         prev = spark.conf.get("spark.sql.shuffle.partitions")
         spark.conf.set("spark.sql.shuffle.partitions", n)
         try:
@@ -1464,6 +1433,7 @@ def _pinned_state_partitions(spark: SparkSession):
     return _cm()
 
 
+@query
 def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical gated streaming sessionization = the APPEND-sink
     production shape (``streaming_sessionize_append`` below). The
@@ -1476,6 +1446,7 @@ def streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_sessionize_append(spark, sf_dir)
 
 
+@query
 def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canonical gated streaming tumbling rollup = the APPEND-sink
     production shape (``streaming_tumbling_append``); complete-mode
@@ -1484,6 +1455,7 @@ def streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     return streaming_tumbling_append(spark, sf_dir)
 
 
+@query
 def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Custom stateful streaming operator (applyInPandasWithState):
     per-entity running totals whose state store persists across
@@ -1499,17 +1471,10 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     complete-mode session entries had before r4 demoted them). The
     final state is then the max-batch row per entity — one distributed
     window over the (touched-entities x batches)-sized update log."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.streaming.stateful import (
-        running_totals,
-    )
-
     stream = _events_stream(spark, sf_dir)
-    out = running_totals(stream, entity="user_id", ts="ts", text="props")
+    out = stream_stateful.running_totals(
+        stream, entity="user_id", ts="ts", text="props"
+    )
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     out_dir = os.path.join(tempfile.gettempdir(), f"graft_srt_{tag}")
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -1550,18 +1515,15 @@ def stateful_running_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def salted_running_sum_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def salted_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe two-phase salted prefix sum (operators/windows.py):
     result identical to the plain running window, so the oracle is the
     unsalted SQL. Decimal cents keep block regrouping exact."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        salted_running_sum,
-    )
-
     e = _events(spark, sf_dir).withColumn(
         "__cents", F.round(F.col("value") * 100).cast("bigint")
     )
-    out = salted_running_sum(
+    out = windows.salted_running_sum(
         e, entity="user_id", ts="ts", value="__cents", block_seconds=86_400.0,
         out="__run_cents", order=["ts", "event_id"],
     )
@@ -1573,13 +1535,14 @@ def salted_running_sum_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def rolling_time_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A22 time form: trailing 1-hour window ending AT the anchor
     (rangeBetween on epoch seconds — leakage-free)."""
     e = _events(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
-        .orderBy(epoch_seconds("ts"))
+        .orderBy(timeutil.epoch_seconds("ts"))
         .rangeBetween(-3600, 0)
     )
     return e.select(
@@ -1661,20 +1624,9 @@ ORACLES.update(
         """,
     }
 )
-QUERIES.update(
-    {
-        "asof_join_range": asof_join_range,
-        "asof_join_pandas": asof_join_pandas,
-        "dependency_lookup": dependency_lookup,
-        "salted_running_sum": salted_running_sum_q,
-        "streaming_sessionize": streaming_sessionize,
-        "streaming_tumbling": streaming_tumbling,
-        "stateful_running_totals": stateful_running_totals,
-        "rolling_time_agg": rolling_time_agg,
-    }
-)
 
 
+@query
 def tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A16 archive ingestion: documents packed into reference-layout
     tarballs (``prep__<i>.tar.gz``, the visxp_prep__<source_id>.tar.gz
@@ -1684,16 +1636,6 @@ def tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     already exist in object storage; only the EXPANSION is the engine
     path under test. Output keys on the doc_id encoded in member names
     so the oracle recomputes (n_bytes, md5) straight from documents."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.sources.archives import (
-        archive_sink,
-        read_tar_members,
-    )
-
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     tar_dir = os.path.join(tempfile.gettempdir(), f"graft_tars_{tag}")
     shutil.rmtree(tar_dir, ignore_errors=True)
@@ -1713,9 +1655,9 @@ def tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         # null-as-empty semantics the driver-side collect path had)
         F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8").alias("payload"),
     )
-    archive_sink(fixture, tar_dir, prefix="prep").count()  # materialize
+    archives.archive_sink(fixture, tar_dir, prefix="prep").count()  # materialize
 
-    members = read_tar_members(spark, tar_dir, member_glob="doc_*.txt")
+    members = archives.read_tar_members(spark, tar_dir, member_glob="doc_*.txt")
     return members.select(
         F.regexp_extract("member", r"doc_(\d+)\.txt", 1)
         .cast("bigint")
@@ -1726,6 +1668,7 @@ def tar_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def multimodal_decode2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real 2-D decode transform: deterministic PPM payloads synthesized
     from document text (Spark-side), decoded with the shipped P6 parser,
@@ -1736,13 +1679,8 @@ def multimodal_decode2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the exact tiling + resize index math and DuckDB FLOAT
     arithmetic matches numpy float32 bit-for-bit, making this
     hash-verified end-to-end."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        decode_transform_2d,
-        synth_ppm_payloads,
-    )
-
-    mm = synth_ppm_payloads(_documents(spark, sf_dir))
-    out = decode_transform_2d(mm, out_h=16, out_w=16)
+    mm = multimodal.synth_ppm_payloads(_documents(spark, sf_dir))
+    out = multimodal.decode_transform_2d(mm, out_h=16, out_w=16)
     return out.select("doc_id", "src_h", "src_w", "z_min", "z_max")
 
 
@@ -1767,6 +1705,7 @@ def _decode2d_minmax_sql(agg: str, out_h: int = 16, out_w: int = 16) -> str:
     )
 
 
+@query
 def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL compressed-image decode under the gate: deterministic PNG
     payloads (zlib DEFLATE + CRC-checked chunks, multimodal.encode_png)
@@ -1781,14 +1720,10 @@ def multimodal_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyframes (data_handling.py:31-32, 106-109) stay behind the same
     decode= seam; PNG is the lossless member of that input family and
     exercises every container/entropy-coding concern stdlib can."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        decode_png,
-        decode_transform_2d,
-        synth_png_payloads,
+    mm = multimodal.synth_png_payloads(_documents(spark, sf_dir))
+    out = multimodal.decode_transform_2d(
+        mm, out_h=16, out_w=16, decode=multimodal.decode_png
     )
-
-    mm = synth_png_payloads(_documents(spark, sf_dir))
-    out = decode_transform_2d(mm, out_h=16, out_w=16, decode=decode_png)
     return out.select("doc_id", "src_h", "src_w", "z_min", "z_max")
 
 
@@ -1808,6 +1743,7 @@ def _decode_png_minmax_sql(agg: str, out_h: int = 16, out_w: int = 16) -> str:
     )
 
 
+@query
 def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL lossy-codec decode under the gate: deterministic
     baseline-sequential JPEG payloads (Annex-K Huffman entropy coding,
@@ -1824,14 +1760,10 @@ def multimodal_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
     rather than the injectable ``decode_stub`` seam; general smooth /
     RGB / subsampled images are covered tolerance- and golden-tested in
     tests/test_jpeg.py."""
-    from dane_visual_feature_extraction_worker_spark.jpeg import decode_jpeg
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        decode_transform_2d,
-        synth_jpeg_payloads,
+    mm = multimodal.synth_jpeg_payloads(_fan(_documents(spark, sf_dir), "doc_id"))
+    out = multimodal.decode_transform_2d(
+        mm, out_h=16, out_w=16, decode=jpeg.decode_jpeg
     )
-
-    mm = synth_jpeg_payloads(_fan(_documents(spark, sf_dir), "doc_id"))
-    out = decode_transform_2d(mm, out_h=16, out_w=16, decode=decode_jpeg)
     return out.select("doc_id", "src_h", "src_w", "z_min", "z_max")
 
 
@@ -1927,16 +1859,9 @@ ORACLES.update(
         """,
     }
 )
-QUERIES.update(
-    {
-        "tar_ingest": tar_ingest,
-        "multimodal_decode2d": multimodal_decode2d,
-        "multimodal_decode_png": multimodal_decode_png,
-        "multimodal_decode_jpeg": multimodal_decode_jpeg,
-    }
-)
 
 
+@query
 def multimodal_decode_npz(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Real NPZ decode — the reference's literal spectrogram format
     (``np.load(npz)["arr_0"]`` + (x - 1.93)/17.89, data_handling.py:
@@ -1946,13 +1871,8 @@ def multimodal_decode_npz(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the byte tiling with byte-indexed SQL: z_min/z_max via the
     monotonic float32 transform of min/max byte, z_mean from the exact
     integer byte sum in float64 — hash-verified end-to-end."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        decode_transform_npz,
-        synth_npz_payloads,
-    )
-
-    mm = synth_npz_payloads(_fan(_documents(spark, sf_dir), "doc_id"))
-    return decode_transform_npz(mm).select(
+    mm = multimodal.synth_npz_payloads(_fan(_documents(spark, sf_dir), "doc_id"))
+    return multimodal.decode_transform_npz(mm).select(
         "doc_id", "n_rows", "n_cols", "z_min", "z_max", "z_mean"
     )
 
@@ -1992,9 +1912,9 @@ ORACLES["multimodal_decode_npz"] = f"""
            ((CAST(sumb AS DOUBLE) / (h * w)) - 1.93) / 17.89 AS z_mean
     FROM mm
 """
-QUERIES["multimodal_decode_npz"] = multimodal_decode_npz
 
 
+@query
 def tar_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A15 archive sink: documents grouped into 50 entities, one
     deterministic tarball per entity written executor-side
@@ -2004,15 +1924,6 @@ def tar_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the documents table; the archive path column is excluded
     (tmp-dir dependent), byte-level round-trip is covered by
     tests/test_archives_decode2d.py."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.sources.archives import (
-        archive_sink,
-    )
-
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     out_dir = os.path.join(tempfile.gettempdir(), f"graft_sink_{tag}")
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -2023,7 +1934,7 @@ def tar_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.encode(F.coalesce(F.col("text"), F.lit("")), "UTF-8").alias("payload"),
     )
-    manifest = archive_sink(docs, out_dir, prefix="assets")
+    manifest = archives.archive_sink(docs, out_dir, prefix="assets")
     return manifest.select("entity", "n_members", "n_bytes")
 
 
@@ -2033,9 +1944,9 @@ ORACLES["tar_sink"] = """
            CAST(sum(octet_length(encode(coalesce(text,'')))) AS BIGINT) AS n_bytes
     FROM documents GROUP BY 1
 """
-QUERIES["tar_sink"] = tar_sink
 
 
+@query
 def streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPEND-mode streaming sessionization to a parquet sink — the
     production twin of ``streaming_sessionize`` (whose complete-mode
@@ -2046,12 +1957,6 @@ def streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     emitted set is byte-identical to the batch rollup — verified by the
     SAME DuckDB oracle. No driver materialization: the rollup streams
     straight to distributed parquet."""
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.streaming.windows import (
-        session_sink_append,
-    )
-
     gap_s, delay_s, margin_s = 3600.0, 3600.0, 7200.0
     e = _events(spark, sf_dir)
     max_ts = e.agg(F.max("ts")).collect()[0][0]
@@ -2062,11 +1967,7 @@ def streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # entity spine cached across invocations (sameSemantics reuse):
     # the distinct() is a full shuffle of the entity column, amortized
     # over bench reps / both streaming entries (r4 VERDICT nit)
-    from dane_visual_feature_extraction_worker_spark.functions.cacheutil import (
-        scoped_persist,
-    )
-
-    spine = scoped_persist(
+    spine = cacheutil.scoped_persist(
         e.select("user_id").distinct(), "streaming_flush_spine_user"
     )
     flush_batch = spine.select(
@@ -2088,7 +1989,7 @@ def streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink_dir, ckpt_dir = f"{tmp}/sink", f"{tmp}/ckpt"
     with _pinned_state_partitions(spark):
-        session_sink_append(
+        stream_windows.session_sink_append(
             stream,
             flush,
             sink_dir,
@@ -2105,30 +2006,21 @@ def streaming_sessionize_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["streaming_sessionize_append"] = ORACLES["streaming_sessionize"]
-QUERIES["streaming_sessionize_append"] = streaming_sessionize_append
 
 
+@query
 def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPEND-mode tumbling rollup to a parquet sink — production twin
     of ``streaming_tumbling`` (complete-mode memory sink). Per-entity
     sentinel rows land > one window + watermark delay past the real max
     ts, closing every real window; sentinel windows never emit. Same
     oracle as the batch rollup."""
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.streaming.windows import (
-        tumbling_sink_append,
-    )
-
     e = _events(spark, sf_dir)
     max_ts = e.agg(F.max("ts")).collect()[0][0]
     tmp = tempfile.mkdtemp(prefix="st_append_")
     sentinel = F.lit(max_ts) + F.expr("INTERVAL 50 HOURS")  # > 1d + 1h delay
-    from dane_visual_feature_extraction_worker_spark.functions.cacheutil import (
-        scoped_persist,
-    )
 
-    spine = scoped_persist(
+    spine = cacheutil.scoped_persist(
         e.select("event_type").distinct(), "streaming_flush_spine_etype"
     )
     flush_batch = spine.select(
@@ -2148,7 +2040,7 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sink_dir, ckpt_dir = f"{tmp}/sink", f"{tmp}/ckpt"
     with _pinned_state_partitions(spark):
-        tumbling_sink_append(
+        stream_windows.tumbling_sink_append(
             _events_stream(spark, sf_dir),
             flush,
             sink_dir,
@@ -2162,7 +2054,6 @@ def streaming_tumbling_append(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["streaming_tumbling_append"] = ORACLES["streaming_tumbling"]
-QUERIES["streaming_tumbling_append"] = streaming_tumbling_append
 
 
 def _fresh_stream_tmp(prefix: str) -> str:
@@ -2171,12 +2062,6 @@ def _fresh_stream_tmp(prefix: str) -> str:
     reused checkpoint would replay as "nothing new" — so without a
     sweep they accumulate forever; the tmpfs-leak lesson from the r4
     scaling campaign). Best-effort: dirs older than an hour go."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-    import time
-
     cutoff = time.time() - 3600
     for d in glob.glob(os.path.join(tempfile.gettempdir(), f"{prefix}*")):
         try:
@@ -2187,6 +2072,7 @@ def _fresh_stream_tmp(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix)
 
 
+@query
 def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact dedup to an append-mode parquet sink: first
     arrival per (user_id, event_type) emitted immediately, state-store
@@ -2196,14 +2082,10 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     out). No sentinel flush plumbing: dedup emits on arrival, not on
     state closure, so availableNow flushes everything. Oracle: batch
     DISTINCT over the same key."""
-    from dane_visual_feature_extraction_worker_spark.streaming.dedup import (
-        dedup_sink_append,
-    )
-
     tmp = _fresh_stream_tmp("st_dedup_")
     sink_dir, ckpt_dir = f"{tmp}/sink", f"{tmp}/ckpt"
     with _pinned_state_partitions(spark):
-        dedup_sink_append(
+        stream_dedup.dedup_sink_append(
             _events_stream(spark, sf_dir),
             sink_dir,
             ckpt_dir,
@@ -2217,7 +2099,6 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 ORACLES["streaming_dedup"] = """
     SELECT DISTINCT user_id, event_type FROM events
 """
-QUERIES["streaming_dedup"] = streaming_dedup
 
 
 def _sample_key_terms_sql() -> str:
@@ -2230,53 +2111,40 @@ def _sample_key_terms_sql() -> str:
     )
 
 
+@query
 def dataset_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 20% corpus sample: md5-keyed integer threshold,
     identical on any engine / partition layout (operators/sampling.py).
     Seeded rand() is not reproducible across engines; this is."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        sample_deterministic,
-    )
-
-    return sample_deterministic(
+    return sampling.sample_deterministic(
         _documents(spark, sf_dir), rate=0.2, salt="r3"
     ).select("doc_id", "lang", "n_chars")
 
 
-def dataset_split_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dataset_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reproducible train/val/test assignment (0.8/0.1/0.1): split is a
     pure function of doc_id — stable across runs, clusters, and
     repartitioning, which is what leakage audits require."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        dataset_split,
-    )
-
-    return dataset_split(_documents(spark, sf_dir)).select("doc_id", "split")
+    return sampling.dataset_split(_documents(spark, sf_dir)).select("doc_id", "split")
 
 
 _STRAT_RATES = {"en": 0.3, "zh": 1.0, "es": 1.0, "de": 0.5, "fr": 0.5}
 
 
-def stratified_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus rebalancing: downsample the dominant language, keep the
     rare ones whole — per-stratum deterministic rates."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        stratified_sample,
-    )
-
-    return stratified_sample(
+    return sampling.stratified_sample(
         _documents(spark, sf_dir), rates=_STRAT_RATES, salt="strat"
     ).select("doc_id", "lang")
 
 
 def _sampling_oracles() -> dict[str, str]:
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        _threshold,
-    )
-
     k = _sample_key_terms_sql()
     strat_case = " ".join(
-        f"WHEN lang = '{s}' THEN {_threshold(r)}"
+        f"WHEN lang = '{s}' THEN {sampling._threshold(r)}"
         for s, r in sorted(_STRAT_RATES.items())
     )
     return {
@@ -2287,7 +2155,7 @@ def _sampling_oracles() -> dict[str, str]:
               FROM documents
             )
             SELECT doc_id, lang, n_chars FROM h
-            WHERE {k} < {_threshold(0.2)}
+            WHERE {k} < {sampling._threshold(0.2)}
         """,
         "dataset_split": f"""
             WITH h AS (
@@ -2296,8 +2164,8 @@ def _sampling_oracles() -> dict[str, str]:
               FROM documents
             )
             SELECT doc_id,
-                   CASE WHEN {k} < {_threshold(0.8)} THEN 'train'
-                        WHEN {k} < {_threshold(0.8 + 0.1)} THEN 'val'
+                   CASE WHEN {k} < {sampling._threshold(0.8)} THEN 'train'
+                        WHEN {k} < {sampling._threshold(0.8 + 0.1)} THEN 'val'
                         ELSE 'test' END AS split
             FROM h
         """,
@@ -2314,34 +2182,21 @@ def _sampling_oracles() -> dict[str, str]:
 
 
 ORACLES.update(_sampling_oracles())
-QUERIES.update(
-    {
-        "dataset_sample": dataset_sample,
-        "dataset_split": dataset_split_q,
-        "stratified_sample": stratified_sample_q,
-    }
-)
 
 
-def vocab_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def vocab_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus vocabulary top-100 (global term frequencies; map-side
     combined count, TakeOrdered top-k — never a full vocab sort)."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        vocab_topk,
-    )
-
-    return vocab_topk(_documents(spark, sf_dir), k=100)
+    return textstats.vocab_topk(_documents(spark, sf_dir), k=100)
 
 
+@query
 def text_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII-style scrub: email/URL/16-digit patterns replaced, per-doc
     match counts + cleaned-text length and digest — pure regexp
     codegen, narrow over the scan."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        scrub_text,
-    )
-
-    return scrub_text(_documents(spark, sf_dir))
+    return textstats.scrub_text(_documents(spark, sf_dir))
 
 
 ORACLES.update(
@@ -2382,9 +2237,9 @@ ORACLES.update(
         """,
     }
 )
-QUERIES.update({"vocab_topk": vocab_topk_q, "text_scrub": text_scrub})
 
 
+@query
 def length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus length distribution per language: exact interpolated
     p50/p90/p99 of n_chars. Exact `percentile` (not approx sketches,
@@ -2407,6 +2262,7 @@ def length_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fixed-width histogram of document lengths (bucket = n_chars
     // 200): one map-side-combined groupBy — the corpus-profiling
@@ -2438,11 +2294,9 @@ ORACLES.update(
         """,
     }
 )
-QUERIES.update(
-    {"length_quantiles": length_quantiles, "length_histogram": length_histogram}
-)
 
 
+@query
 def quality_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Operator composition: per-language top-5 documents by quality —
     the select-best-training-data query (quality scoring → lang join →
@@ -2451,12 +2305,8 @@ def quality_topk_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     per doc), so it is NOT broadcast — a shuffle join on doc_id, which
     AQE co-plans with the scoring scan; the only other shuffle is the
     per-language window."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        quality_score as _qs,
-    )
-
     d = _documents(spark, sf_dir)
-    q = _qs(d).join(d.select("doc_id", "lang"), "doc_id")
+    q = textstats.quality_score(d).join(d.select("doc_id", "lang"), "doc_id")
     w = Window.partitionBy("lang").orderBy(
         F.desc("quality"), F.desc("n_tokens"), F.col("doc_id")
     )
@@ -2479,9 +2329,9 @@ ORACLES["quality_topk_per_lang"] = f"""
     SELECT lang, CAST(rk AS INT) AS rk, doc_id, quality
     FROM j WHERE rk <= 5
 """
-QUERIES["quality_topk_per_lang"] = quality_topk_per_lang
 
 
+@query
 def corpus_dedup_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The dedup pipeline's OUTPUT view: documents reduced to exact-dup
     representatives (lowest doc_id per content digest) — what a
@@ -2496,18 +2346,17 @@ def corpus_dedup_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@query
 def corpus_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup REMOVAL composition: drop every document that appears
     as the higher-id side of a MinHash-LSH candidate pair (canonical
     lowest id survives each near-dup cluster edge-wise). The pair table
     is the already-verified ``dedup_minhash_lsh``; removal is one
     left-anti join — the standard corpus-cleaning final step."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-
     d = _fan(_documents(spark, sf_dir), "doc_id")
-    doomed = minhash_lsh_pairs(d).select(F.col("doc_b").alias("doc_id")).distinct()
+    doomed = (
+        dedup.minhash_lsh_pairs(d).select(F.col("doc_b").alias("doc_id")).distinct()
+    )
     return d.join(doomed, "doc_id", "left_anti").select(
         "doc_id", "lang", "n_chars"
     )
@@ -2527,25 +2376,16 @@ ORACLES.update(
         """,
     }
 )
-QUERIES.update(
-    {
-        "corpus_dedup_filtered": corpus_dedup_filtered,
-        "corpus_near_dedup": corpus_near_dedup,
-    }
-)
 
 
+@query
 def asof_join_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of with bounded staleness (pandas merge_asof tolerance): the
     latest click within 30 minutes before each purchase; staler matches
     null out while the anchor row survives. Same one-shuffle union-
     window plan — tolerance is a pure post-predicate."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_union,
-    )
-
     purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_union(
+    return asof.asof_join_union(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id", tolerance_seconds=1800.0,
     )
@@ -2563,19 +2403,15 @@ ORACLES["asof_join_tolerance"] = """
     QUALIFY row_number() OVER (PARTITION BY p.event_id
                                ORDER BY c.ts DESC, c.event_id DESC) = 1
 """
-QUERIES["asof_join_tolerance"] = asof_join_tolerance
 
 
+@query
 def sequence_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Concat-and-chunk sequence packing coordinates (operators/
     packing.py): md5-sharded corpus, per-shard doc_id-ordered token
     stream, fixed 256-token training sequences. Pure integer window
     math — the oracle replays it exactly."""
-    from dane_visual_feature_extraction_worker_spark.operators.packing import (
-        pack_sequences,
-    )
-
-    return pack_sequences(
+    return packing.pack_sequences(
         _documents(spark, sf_dir), max_tokens=256, n_shards=16, salt="pack"
     )
 
@@ -2605,24 +2441,19 @@ ORACLES["sequence_pack"] = f"""
            tok_offset % 256 AS pack_offset
     FROM off
 """
-QUERIES["sequence_pack"] = sequence_pack
 
 
-def temperature_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """mT5-style temperature resampling (alpha=0.5 — the sqrt route,
     correctly rounded on every IEEE engine; operators/sampling.py):
     per-language keep-rates q_l ∝ sqrt(n_l) under a 50% corpus budget,
     applied via the portable md5 threshold. Gated output is the
     per-language audit row (count, rate, kept)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        temperature_sample,
-        temperature_sample_rates,
-    )
-
     docs = _documents(spark, sf_dir)
-    rates = temperature_sample_rates(docs, alpha=0.5, budget_frac=0.5)
+    rates = sampling.temperature_sample_rates(docs, alpha=0.5, budget_frac=0.5)
     kept = (
-        temperature_sample(docs, alpha=0.5, budget_frac=0.5, salt="temp")
+        sampling.temperature_sample(docs, alpha=0.5, budget_frac=0.5, salt="temp")
         .groupBy("lang")
         .agg(F.count(F.lit(1)).alias("n_kept"))
     )
@@ -2662,9 +2493,9 @@ ORACLES["temperature_sample"] = f"""
     SELECT r.lang, r.n_docs, r.rate, COALESCE(k.n_kept, 0) AS n_kept
     FROM rates r LEFT JOIN kept k USING (lang)
 """
-QUERIES["temperature_sample"] = temperature_sample_q
 
 
+@query
 def feature_vector_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe twin of ``feature_vector_udf``: the full block
     decomposition of all 8 prefix features (operators/windows.py
@@ -2674,14 +2505,10 @@ def feature_vector_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     regrouping (decimal cents / ints / max) makes the output
     bit-identical to the unsalted kernel, so it shares the SAME DuckDB
     oracle."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        salted_prefix_features,
-    )
-
     e = _events(spark, sf_dir).select(
         "event_id", "user_id", "ts", "event_type", "value", "props"
     )
-    return salted_prefix_features(e, block_seconds=86_400.0).select(
+    return windows.salted_prefix_features(e, block_seconds=86_400.0).select(
         "event_id", "user_id", "ts",
         "f0", "f1", "f2", "f3", "f4", "f5", "f6", "f7",
     )
@@ -2689,9 +2516,9 @@ def feature_vector_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 ORACLES["ivf_ann_indexed"] = ORACLES["ivf_ann"]
 ORACLES["feature_vector_salted"] = ORACLES["feature_vector_udf"]
-QUERIES["feature_vector_salted"] = feature_vector_salted
 
 
+@query
 def feature_vector_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-routed kernel (operators/windows.auto_salt_prefix_features):
     entities below the hot threshold take the one-window plain plan,
@@ -2702,35 +2529,27 @@ def feature_vector_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sf0.01 per-user median so BOTH paths execute under the gate;
     the production default is the measured ~10^6-row crossover
     (BENCH/BASELINE.md skew study)."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        auto_salt_prefix_features,
-    )
-
     e = _events(spark, sf_dir).select(
         "event_id", "user_id", "ts", "event_type", "value", "props"
     )
-    return auto_salt_prefix_features(e, hot_threshold=70).select(
+    return windows.auto_salt_prefix_features(e, hot_threshold=70).select(
         "event_id", "user_id", "ts",
         "f0", "f1", "f2", "f3", "f4", "f5", "f6", "f7",
     )
 
 
 ORACLES["feature_vector_routed"] = ORACLES["feature_vector_udf"]
-QUERIES["feature_vector_routed"] = feature_vector_routed
 
 
-def contamination_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Decontamination pass (operators/dedup.contamination_check):
     every ~97th document plays the benchmark/eval set; corpus docs
     sharing >= 2 distinct 3-gram shingles with it are flagged. Probe
     shingles broadcast — the corpus is never shuffled on shingle."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        contamination_check,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
     probe = docs.where(F.col("doc_id") % 97 == 0)
-    return contamination_check(docs, probe, k=3, min_overlap=2)
+    return dedup.contamination_check(docs, probe, k=3, min_overlap=2)
 
 
 ORACLES["contamination_check"] = r"""
@@ -2750,18 +2569,14 @@ ORACLES["contamination_check"] = r"""
            COALESCE(h.n_overlap, 0) >= 2 AS contaminated
     FROM documents d LEFT JOIN hits h ON d.doc_id = h.doc_id
 """
-QUERIES["contamination_check"] = contamination_check_q
 
 
-def repetition_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality filters (operators/textstats.
     repetition_stats): duplicate 3-gram fraction + top-token mass per
     doc, narrow array expressions, zero shuffle."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        repetition_stats,
-    )
-
-    return repetition_stats(_fan(_documents(spark, sf_dir), "doc_id"), k=3)
+    return textstats.repetition_stats(_fan(_documents(spark, sf_dir), "doc_id"), k=3)
 
 
 ORACLES["repetition_stats"] = r"""
@@ -2794,9 +2609,9 @@ ORACLES["repetition_stats"] = r"""
            dup_gram_frac > 0.3 OR top_token_frac > 0.2 AS repetitive
     FROM s
 """
-QUERIES["repetition_stats"] = repetition_stats_q
 
 
+@query
 def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clustering: MinHash-LSH candidate pairs → connected
     components (iterative min-label propagation, operators/dedup.
@@ -2804,14 +2619,9 @@ def near_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     smallest id. The DuckDB oracle replays the pair SQL and computes
     min-reachable-id with a recursive CTE — an ITERATIVE Spark
     algorithm verified against a recursive SQL fixpoint."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    pairs = minhash_lsh_pairs(docs)
-    return connected_components(pairs, docs.select("doc_id"))
+    pairs = dedup.minhash_lsh_pairs(docs)
+    return dedup.connected_components(pairs, docs.select("doc_id"))
 
 
 ORACLES["near_dup_clusters"] = r"""
@@ -2849,18 +2659,14 @@ ORACLES["near_dup_clusters"] = r"""
     SELECT node AS doc_id, min(lab) AS cluster_id
     FROM reach GROUP BY node
 """
-QUERIES["near_dup_clusters"] = near_dup_clusters
 
 
-def tfidf_top_terms_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 tf-idf terms per document (operators/textstats.
     tfidf_top_terms): one token explode feeds tf and df aggregations,
     per-doc window top-N, lexicographic tie-break."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        tfidf_top_terms,
-    )
-
-    return tfidf_top_terms(_fan(_documents(spark, sf_dir), "doc_id"), top_n=3)
+    return textstats.tfidf_top_terms(_fan(_documents(spark, sf_dir), "doc_id"), top_n=3)
 
 
 ORACLES["tfidf_top_terms"] = r"""
@@ -2890,9 +2696,9 @@ ORACLES["tfidf_top_terms"] = r"""
       FROM scored
     ) WHERE rank <= 3
 """
-QUERIES["tfidf_top_terms"] = tfidf_top_terms_q
 
 
+@query
 def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FLAGSHIP transcript kernel itself under the oracle gate:
     events projected into the transcript schema (conv_id, turn_idx,
@@ -2908,10 +2714,6 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ADVICE r4); the one residual divergence is U+001C..001F, which
     Java's isWhitespace()-based split does NOT treat as \\s either, so
     the engines agree on every codepoint."""
-    from dane_visual_feature_extraction_worker_spark.kernel import (
-        feature_vectors_windows,
-    )
-
     e = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     role = (
@@ -2935,7 +2737,7 @@ def pit_features_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     # float32 can't hold value*1e6 past ~16 — a float32 column would
     # corrupt its own values inside the harness (debugged r4: 1353.7114
     # → 1353.7115 through the float32 round-trip)
-    return feature_vectors_windows(tr).select(
+    return kernel.feature_vectors_windows(tr).select(
         "conv_id",
         "turn_idx",
         "session_id",
@@ -3080,7 +2882,6 @@ ORACLES["pit_features_core"] = rf"""
     FROM s2
     WINDOW ws AS (PARTITION BY conv_id, session_id)
 """
-QUERIES["pit_features_core"] = pit_features_core
 
 
 # ---------------------------------------------------------------------------
@@ -3088,18 +2889,15 @@ QUERIES["pit_features_core"] = pit_features_core
 # ---------------------------------------------------------------------------
 
 
-def quota_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def quota_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language document cap (operators/quota.quota_sample): keep at
     most 100 docs per lang, deterministically by md5 key. Under-cap
     languages pass through narrow (no shuffle/sort); over-cap languages
     are key-prefiltered to ~8x cap rows before the per-entity rank, so
     the hot entity's sort input is bounded regardless of its size —
     the 100 TB domain-cap shape."""
-    from dane_visual_feature_extraction_worker_spark.operators.quota import (
-        quota_sample,
-    )
-
-    out = quota_sample(
+    out = quota.quota_sample(
         _documents(spark, sf_dir), entity_col="lang", cap=100, salt="q5"
     )
     return out.select("doc_id", "lang", "source")
@@ -3120,20 +2918,16 @@ ORACLES["quota_sample"] = f"""
     )
     SELECT doc_id, lang, source FROM ranked WHERE rk <= 100
 """
-QUERIES["quota_sample"] = quota_sample_q
 
 
-def unigram_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def unigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-unigram-LM quality score (operators/textstats.
     unigram_logprob_score): per-doc mean -ln p(term) under the corpus's
     own top-256 unigram model, OOV penalized at ln(2N). Per-term
     logprobs are floor-quantized to integer micro-nats, so every
     aggregate is exact int64 — no float-sum ordering anywhere."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        unigram_logprob_score,
-    )
-
-    return unigram_logprob_score(_documents(spark, sf_dir), vocab_k=256)
+    return textstats.unigram_logprob_score(_documents(spark, sf_dir), vocab_k=256)
 
 
 ORACLES["unigram_quality"] = r"""
@@ -3167,20 +2961,16 @@ ORACLES["unigram_quality"] = r"""
     FROM scored
     GROUP BY doc_id
 """
-QUERIES["unigram_quality"] = unigram_quality_q
 
 
-def merge_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC upsert (operators/merge.merge_upsert): base snapshot = the
     documents table at rev 1; updates = every doc_id % 7 == 3 rewritten
     at rev 2 plus a disjoint block of brand-new keys at rev 2.
     Latest-rev-wins via ONE map-side-combined max_by aggregation — no
     sort, no window, never both versions through the shuffle. This is
     Iceberg MERGE INTO semantics run engine-side."""
-    from dane_visual_feature_extraction_worker_spark.operators.merge import (
-        merge_upsert,
-    )
-
     docs = _documents(spark, sf_dir)
     base = docs.select(
         "doc_id", "text", "lang", "source", F.lit(1).cast("bigint").alias("rev")
@@ -3199,7 +2989,7 @@ def merge_upsert_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         F.lit(2).cast("bigint").alias("rev"),
     )
-    merged = merge_upsert(
+    merged = merge.merge_upsert(
         base, changed.unionByName(fresh), key_col="doc_id", version_col="rev"
     )
     return merged.select("doc_id", "rev", "lang", "source", F.md5("text").alias("digest"))
@@ -3226,7 +3016,6 @@ ORACLES["merge_upsert"] = """
     SELECT doc_id, rev, lang, source, md5(text) AS digest
     FROM ranked WHERE rk = 1
 """
-QUERIES["merge_upsert"] = merge_upsert_q
 
 
 # ---------------------------------------------------------------------------
@@ -3234,16 +3023,13 @@ QUERIES["merge_upsert"] = merge_upsert_q
 # ---------------------------------------------------------------------------
 
 
-def doc_chunk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def doc_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking (operators/packing.
     chunk_documents): window 64, stride 48 — one narrow explode over
     the scan, no shuffle; chunk text is gated by md5 so the oracle
     replays the exact slice."""
-    from dane_visual_feature_extraction_worker_spark.operators.packing import (
-        chunk_documents,
-    )
-
-    return chunk_documents(_documents(spark, sf_dir), window=64, stride=48)
+    return packing.chunk_documents(_documents(spark, sf_dir), window=64, stride=48)
 
 
 ORACLES["doc_chunk"] = r"""
@@ -3271,18 +3057,14 @@ ORACLES["doc_chunk"] = r"""
                           least(chunk_id * 48 + 64, n)), ' ')) AS chunk_md5
     FROM c
 """
-QUERIES["doc_chunk"] = doc_chunk_q
 
 
-def bigram_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bigram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus bigram top-100 (operators/textstats.ngram_topk): sliding
     2-token window, map-side-combined count, TakeOrdered top-k — the
     collocation/boilerplate sibling of vocab_topk."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        ngram_topk,
-    )
-
-    return ngram_topk(_documents(spark, sf_dir), n=2, k=100)
+    return textstats.ngram_topk(_documents(spark, sf_dir), n=2, k=100)
 
 
 ORACLES["bigram_topk"] = r"""
@@ -3300,18 +3082,14 @@ ORACLES["bigram_topk"] = r"""
     GROUP BY gram HAVING count(*) >= 1
     ORDER BY n DESC, gram LIMIT 100
 """
-QUERIES["bigram_topk"] = bigram_topk_q
 
 
-def corpus_shuffle_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def corpus_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seeded deterministic corpus shuffle (operators/sampling.
     shuffle_assign): md5-keyed (shard, pos) coordinates, 8 shards —
     one hash shuffle + per-shard window, no global sort."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        shuffle_assign,
-    )
-
-    return shuffle_assign(_documents(spark, sf_dir), n_shards=8, salt="r5s")
+    return sampling.shuffle_assign(_documents(spark, sf_dir), n_shards=8, salt="r5s")
 
 
 ORACLES["corpus_shuffle"] = f"""
@@ -3328,30 +3106,25 @@ ORACLES["corpus_shuffle"] = f"""
                               ORDER BY key, doc_id) AS pos
     FROM keyed
 """
-QUERIES["corpus_shuffle"] = corpus_shuffle_q
 
 
-def dedup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delta-vs-index exact dedup (operators/dedup.incremental_dedup):
     base index = fingerprints of doc_id % 3 == 0; delta = the remaining
     docs PLUS replicas of doc_id % 5 == 1 at shifted ids (within-batch
     dupes). Survivors: first-in-delta holders of fingerprints the index
     has never seen. Both shuffles key on the uniform md5 digest."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        canonical_fingerprint,
-        incremental_dedup,
-    )
-
     docs = _documents(spark, sf_dir)
     base_index = docs.where(F.col("doc_id") % 3 == 0).select(
-        canonical_fingerprint().alias("fingerprint")
+        dedup.canonical_fingerprint().alias("fingerprint")
     )
     delta = docs.where(F.col("doc_id") % 3 != 0).unionByName(
         docs.where(F.col("doc_id") % 5 == 1).withColumn(
             "doc_id", F.col("doc_id") + 5_000_000
         )
     )
-    return incremental_dedup(delta, base_index)
+    return dedup.incremental_dedup(delta, base_index)
 
 
 ORACLES["dedup_incremental"] = r"""
@@ -3376,19 +3149,15 @@ ORACLES["dedup_incremental"] = r"""
     SELECT doc_id, fingerprint, n_in_delta FROM first
     WHERE fingerprint NOT IN (SELECT fingerprint FROM base)
 """
-QUERIES["dedup_incremental"] = dedup_incremental_q
 
 
-def pit_snapshot_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pit_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-store point-in-time snapshot (operators/asof.
     pit_snapshot): latest event per user at the 2024-01-15 cutoff via
     ONE map-side-combined max_by — no window, no sort; rows after the
     cutoff never enter the plan (zero temporal leakage)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        pit_snapshot,
-    )
-
-    return pit_snapshot(
+    return asof.pit_snapshot(
         _events(spark, sf_dir),
         cutoff="2024-01-15 00:00:00",
         entity_col="user_id",
@@ -3408,20 +3177,16 @@ ORACLES["pit_snapshot"] = """
     SELECT user_id, ts, event_id, event_type, value
     FROM ranked WHERE rk = 1
 """
-QUERIES["pit_snapshot"] = pit_snapshot_q
 
 
-def embedding_centroids_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding centroids (operators/similarity.
     label_centroids): 2^-24 integer quantization makes the mean exact
     and layout-independent; one posexplode + one map-side-combined
     groupBy — the shuffle carries |labels x dim| partials."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        label_centroids,
-    )
-
     emb = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    return label_centroids(emb)
+    return similarity.label_centroids(emb)
 
 
 ORACLES["embedding_centroids"] = """
@@ -3439,20 +3204,16 @@ ORACLES["embedding_centroids"] = """
                  * 1000000.0) / 1000000.0 AS centroid
     FROM q GROUP BY label, pos
 """
-QUERIES["embedding_centroids"] = embedding_centroids_q
 
 
-def asof_join_nearest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def asof_join_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nearest-direction as-of (operators/asof.asof_join_nearest):
     closer of latest-past / earliest-future click per purchase anchor,
     ties backward — same one-shuffle one-sort union plan as the
     flagship, two window frames over the single sorted run."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_nearest,
-    )
-
     purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_nearest(
+    return asof.asof_join_nearest(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id",
     )
@@ -3472,19 +3233,15 @@ ORACLES["asof_join_nearest"] = """
         CASE WHEN c.ts <= p.ts THEN -c.event_id ELSE c.event_id END
     ) = 1
 """
-QUERIES["asof_join_nearest"] = asof_join_nearest_q
 
 
-def rolling_median_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 10-row median per user (operators/windows.
     rolling_median): decimal-cents routing makes every window median
     the exact midpoint of two ints — engine-identical; Catalyst
     `percentile` window, no Python."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        rolling_median,
-    )
-
-    return rolling_median(_events(spark, sf_dir), window_rows=10)
+    return windows.rolling_median(_events(spark, sf_dir), window_rows=10)
 
 
 ORACLES["rolling_median"] = """
@@ -3495,18 +3252,14 @@ ORACLES["rolling_median"] = """
              AS median_value
     FROM events
 """
-QUERIES["rolling_median"] = rolling_median_q
 
 
-def rank_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rank_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user rank block (operators/windows.rank_features):
     row_number / percent_rank / cume_dist / ntile(4) — one shuffle,
     one sort, all Catalyst."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        rank_features,
-    )
-
-    return rank_features(_events(spark, sf_dir), n_tiles=4)
+    return windows.rank_features(_events(spark, sf_dir), n_tiles=4)
 
 
 ORACLES["rank_features"] = """
@@ -3518,10 +3271,10 @@ ORACLES["rank_features"] = """
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
-QUERIES["rank_features"] = rank_features_q
 
 
-def rollup_hour_user_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rollup_hour_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     """GROUPING SETS rollup: (user, hour) -> (user) -> () in ONE pass —
     Spark expands the sets into a single map-side-combined aggregation,
     so the multi-granularity report costs one shuffle, not three jobs.
@@ -3553,7 +3306,6 @@ ORACLES["rollup_hour_user"] = """
     FROM events
     GROUP BY ROLLUP (user_id, date_trunc('hour', ts))
 """
-QUERIES["rollup_hour_user"] = rollup_hour_user_q
 
 
 #: fixed pivot domain — explicit values keep the plan ONE pass (Spark
@@ -3562,7 +3314,8 @@ QUERIES["rollup_hour_user"] = rollup_hour_user_q
 _EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
 
-def pivot_event_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pivot_event_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """User x event-type count matrix via `groupBy().pivot(values=...)`:
     pinning the domain skips the distinct-discovery JOB; the plan is
     Spark's two-level pivot aggregation — (user, type) pre-count, then
@@ -3594,10 +3347,10 @@ ORACLES["pivot_event_matrix"] = """
            count(*) FILTER (event_type = 'view')     AS n_view
     FROM events GROUP BY user_id
 """
-QUERIES["pivot_event_matrix"] = pivot_event_matrix_q
 
 
-def corpus_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END training-data pipeline, one lazy plan: exact dedup
     (md5 groups, min-id survivor) → quality filter (>= 0.7) →
     temperature resampling (alpha=0.5, budget 0.5, rates computed on
@@ -3613,36 +3366,21 @@ def corpus_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame — vs 12 corpus scans / 24 exchanges with no persist.
     Output: (doc_id, shard, pos) — exactly what a shard-writer
     consumes."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        exact_dedup,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        shuffle_assign,
-        temperature_sample,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        quality_score,
-    )
-
-    from dane_visual_feature_extraction_worker_spark.functions.cacheutil import (
-        scoped_persist,
-    )
-
     docs = _documents(spark, sf_dir)
-    reps = exact_dedup(docs).select(F.col("rep_id").alias("doc_id"))
+    reps = dedup.exact_dedup(docs).select(F.col("rep_id").alias("doc_id"))
     kept = docs.join(reps, "doc_id")
     good = (
-        quality_score(kept).where(F.col("quality") >= 0.7).select("doc_id")
+        textstats.quality_score(kept).where(F.col("quality") >= 0.7).select("doc_id")
     )
-    filtered = scoped_persist(
+    filtered = cacheutil.scoped_persist(
         kept.join(good, "doc_id").select("doc_id", "lang"),
         "corpus_pipeline_filtered",
     )
-    sampled = temperature_sample(
+    sampled = sampling.temperature_sample(
         filtered, alpha=0.5, budget_frac=0.5, stratum_col="lang",
         salt="pipe_t",
     )
-    return shuffle_assign(sampled, n_shards=8, salt="pipe_s")
+    return sampling.shuffle_assign(sampled, n_shards=8, salt="pipe_s")
 
 
 ORACLES["corpus_pipeline"] = rf"""
@@ -3703,10 +3441,10 @@ ORACLES["corpus_pipeline"] = rf"""
                               ORDER BY key, doc_id) AS pos
     FROM skeyed
 """
-QUERIES["corpus_pipeline"] = corpus_pipeline_q
 
 
-def json_props_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def json_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured column surface: parse the events `props` JSON
     with a declared schema (`from_json` — JVM-side Jackson, no UDF)
     and aggregate the extracted field per event type. At 100 TB the
@@ -3740,21 +3478,17 @@ ORACLES["json_props_stats"] = """
              AS max_k
     FROM events GROUP BY event_type
 """
-QUERIES["json_props_stats"] = json_props_stats_q
 
 
-def asof_join_forward_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def asof_join_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversion attribution (operators/asof.asof_join_forward): for
     each click, the earliest purchase strictly after it within 1 hour
     — the next-event primitive on the flagship's one-shuffle one-sort
     union plan."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_forward,
-    )
-
     purchases, clicks = _asof_sides(spark, sf_dir)
     # anchors are the CLICKS here; the matched row is the next purchase
-    return asof_join_forward(
+    return asof.asof_join_forward(
         clicks, purchases, on="user_id", left_ts="ts", right_ts="ts",
         right_order="purchase_id", tolerance_seconds=3600.0,
     )
@@ -3773,10 +3507,10 @@ ORACLES["asof_join_forward"] = """
     QUALIFY row_number() OVER (PARTITION BY c.click_id
                                ORDER BY p.ts, p.purchase_id) = 1
 """
-QUERIES["asof_join_forward"] = asof_join_forward_q
 
 
-def user_event_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def user_event_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array-aggregation surface: per-user behavioral profile — the
     sorted distinct event-type set (as CSV for cross-engine hashing),
     span bounds, and exact distinct count. One map-side-combined
@@ -3803,10 +3537,10 @@ ORACLES["user_event_profile"] = """
            max(ts) AS last_seen
     FROM events GROUP BY user_id
 """
-QUERIES["user_event_profile"] = user_event_profile_q
 
 
-def customer_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def customer_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic dim-enrichment on the TPC-H tables: customers joined
     through nation to region with BOTH dims broadcast (they are
     O(25)/O(5) rows at any scale — the textbook broadcast-join case;
@@ -3836,10 +3570,10 @@ ORACLES["customer_enrich"] = """
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name, c.c_mktsegment
 """
-QUERIES["customer_enrich"] = customer_enrich_q
 
 
-def lineitem_pricing_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def lineitem_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The canonical OLAP scan-aggregate (TPC-H Q1 shape) over the
     engine's biggest table: shipdate predicate pushed to the parquet
     scan, ONE map-side-combined groupBy over a 4-value key. All money
@@ -3890,10 +3624,10 @@ ORACLES["lineitem_pricing"] = """
     WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
     GROUP BY l_returnflag, l_linestatus
 """
-QUERIES["lineitem_pricing"] = lineitem_pricing_q
 
 
-def order_revenue_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def order_revenue_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Big-big join + top-k (TPC-H Q3 shape): BUILDING-segment
     customers (broadcast semi filter) x orders x lineitem on the
     orderkey — the one genuinely large shuffle join in the TPC-H
@@ -3941,18 +3675,14 @@ ORACLES["order_revenue_topk"] = """
     GROUP BY o.o_orderkey, o.o_orderdate, o.o_orderpriority
     ORDER BY revenue DESC, o.o_orderkey LIMIT 10
 """
-QUERIES["order_revenue_topk"] = order_revenue_topk_q
 
 
-def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC row diff (operators/merge.snapshot_diff): v1 = documents;
     v2 = drop doc_id % 11 == 0, rewrite doc_id % 7 == 3, insert a
     shifted block — classified insert/update/delete in one full-outer
     join + digest compare."""
-    from dane_visual_feature_extraction_worker_spark.operators.merge import (
-        snapshot_diff,
-    )
-
     docs = _documents(spark, sf_dir)
     old = docs.select("doc_id", "text", "lang", "source")
     new = (
@@ -3970,7 +3700,7 @@ def snapshot_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    return snapshot_diff(old, new, key_col="doc_id")
+    return merge.snapshot_diff(old, new, key_col="doc_id")
 
 
 ORACLES["snapshot_diff"] = """
@@ -4000,18 +3730,14 @@ ORACLES["snapshot_diff"] = """
     FROM od FULL OUTER JOIN nd ON od.doc_id = nd.doc_id
     WHERE (od.doc_id IS NULL OR nd.doc_id IS NULL OR od.d <> nd.d)
 """
-QUERIES["snapshot_diff"] = snapshot_diff_q
 
 
-def skew_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostic on events.user_id (operators/joins.
     skew_report): the one-row report that picks the auto-salt
     routing threshold."""
-    from dane_visual_feature_extraction_worker_spark.operators.joins import (
-        skew_report,
-    )
-
-    return skew_report(_events(spark, sf_dir), key_col="user_id")
+    return joins.skew_report(_events(spark, sf_dir), key_col="user_id")
 
 
 ORACLES["skew_report"] = """
@@ -4030,19 +3756,15 @@ ORACLES["skew_report"] = """
              AS skew_factor
     FROM c
 """
-QUERIES["skew_report"] = skew_report_q
 
 
-def streaming_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast join (streaming/enrich.py): the events
     stream enriched per micro-batch with a batch-computed per-user dim
     (min event type + first-seen) — stateless, zero stream shuffle;
     availableNow-bounded for the gate, unbounded in production.
     Oracle: the identical batch join."""
-    from dane_visual_feature_extraction_worker_spark.streaming.enrich import (
-        enrich_sink_append,
-    )
-
     e = _events(spark, sf_dir)
     dim = e.groupBy("user_id").agg(
         F.min("event_type").alias("first_type"),
@@ -4050,7 +3772,7 @@ def streaming_enrich_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tmp = _fresh_stream_tmp("st_enrich_")
     sink_dir, ckpt_dir = f"{tmp}/sink", f"{tmp}/ckpt"
-    enrich_sink_append(
+    stream_enrich.enrich_sink_append(
         _events_stream(spark, sf_dir).select("event_id", "user_id", "ts"),
         dim,
         on="user_id",
@@ -4069,41 +3791,33 @@ ORACLES["streaming_enrich"] = """
                  min(ts) AS first_seen
           FROM events GROUP BY user_id) d USING (user_id)
 """
-QUERIES["streaming_enrich"] = streaming_enrich_q
 
 
-def asof_join_salted_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def asof_join_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-safe as-of twin (operators/asof.asof_join_salted):
     time-block decomposition parallelizes a hot conversation across
     (entity, block) partitions; block summaries + a tiny carry window
     restore the exact global match. Row-identical to `asof_join` —
     shares its oracle (6-hour blocks so the sf tables span many)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_salted,
-    )
-
     purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_salted(
+    return asof.asof_join_salted(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id", block_seconds=6 * 3600.0,
     )
 
 
 ORACLES["asof_join_salted"] = ORACLES["asof_join"]
-QUERIES["asof_join_salted"] = asof_join_salted_q
 
 
-def asof_join_routed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def asof_join_routed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-routed as-of (operators/asof.asof_join_routed): the
     threshold sits at the sf0.01 per-user median so BOTH the plain and
     salted paths execute under the gate; same oracle as asof_join
     (routing is purely physical)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        asof_join_routed,
-    )
-
     purchases, clicks = _asof_sides(spark, sf_dir)
-    return asof_join_routed(
+    return asof.asof_join_routed(
         purchases, clicks, on="user_id", left_ts="ts", right_ts="ts",
         right_order="click_id", hot_threshold=30,
         block_seconds=6 * 3600.0,
@@ -4111,10 +3825,10 @@ def asof_join_routed_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLES["asof_join_routed"] = ORACLES["asof_join"]
-QUERIES["asof_join_routed"] = asof_join_routed_q
 
 
-def promo_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q14 shape (promo revenue share): one month of lineitem
     joined to the part dim, conditional decimal revenue ratio. The dim
     is broadcast (never shuffles lineitem on partkey); date filter
@@ -4165,10 +3879,10 @@ ORACLES["promo_revenue"] = """
              AS promo_pct
     FROM j
 """
-QUERIES["promo_revenue"] = promo_revenue_q
 
 
-def supplier_balance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def supplier_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier account-balance rollup through the nation/region dims
     (both broadcast): count + exact decimal sum + decimal-cents max
     per region — touches the last otherwise-unused input table."""
@@ -4201,24 +3915,20 @@ ORACLES["supplier_balance"] = """
     JOIN region r ON n.n_regionkey = r.r_regionkey
     GROUP BY r.r_name
 """
-QUERIES["supplier_balance"] = supplier_balance_q
 
 
 # ------------------------------------------------- event-sequence suite
 
 
-def funnel_conversion_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Strictly-ordered funnel view -> click -> purchase per user
     (operators/funnel.funnel_steps): first view, first click strictly
     after it, first purchase strictly after that. ONE window pass +
     an exchange-reusing groupBy — no per-step self-joins. The ordered
     traversal is the reference's sorted-key loop (data_handling.py:33)
     asked the classic sequence question."""
-    from dane_visual_feature_extraction_worker_spark.operators.funnel import (
-        funnel_steps,
-    )
-
-    return funnel_steps(
+    return funnel.funnel_steps(
         _events(spark, sf_dir), steps=("view", "click", "purchase")
     )
 
@@ -4255,19 +3965,15 @@ ORACLES["funnel_conversion"] = """
     FROM s2
     GROUP BY user_id
 """
-QUERIES["funnel_conversion"] = funnel_conversion_q
 
 
-def retention_cohorts_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-N retention matrix (operators/funnel.retention_matrix):
     cohort = day of first event per user; one tiny min-per-user agg
     joined back on the same key (exchange reuse), then one exact
     count_distinct per (cohort, offset)."""
-    from dane_visual_feature_extraction_worker_spark.operators.funnel import (
-        retention_matrix,
-    )
-
-    return retention_matrix(_events(spark, sf_dir), bucket="day")
+    return funnel.retention_matrix(_events(spark, sf_dir), bucket="day")
 
 
 ORACLES["retention_cohorts"] = """
@@ -4282,20 +3988,16 @@ ORACLES["retention_cohorts"] = """
     FROM events e JOIN firsts f USING (user_id)
     GROUP BY 1, 2
 """
-QUERIES["retention_cohorts"] = retention_cohorts_q
 
 
-def decayed_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def decayed_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dyadic time-decayed rolling sum (operators/windows.decayed_sum):
     sum_{k<16} value[t-k] * 2^-k per user — recency-weighted activity,
     leakage-free (all terms at-or-before the anchor). Exact cross-
     engine: integer cents x dyadic weights, every term and the sum
     bit-identical in float64 — no rounding gate."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        decayed_sum,
-    )
-
-    return decayed_sum(_events(spark, sf_dir), n_terms=16)
+    return windows.decayed_sum(_events(spark, sf_dir), n_terms=16)
 
 
 ORACLES["decayed_features"] = """
@@ -4309,10 +4011,10 @@ ORACLES["decayed_features"] = """
     FROM events
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
-QUERIES["decayed_features"] = decayed_features_q
 
 
-def transcript_digest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def transcript_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation order-sensitive digest
     (operators/integrity.ordered_digest): md5 over (event_id|type)
     payloads in stable (ts, event_id) order — the north rule's
@@ -4320,11 +4022,7 @@ def transcript_digest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(|entities|)-sized relation. Partition-layout independent: the
     stable order is re-established by sort_array AFTER the partial
     merges."""
-    from dane_visual_feature_extraction_worker_spark.operators.integrity import (
-        ordered_digest,
-    )
-
-    return ordered_digest(_events(spark, sf_dir))
+    return integrity.ordered_digest(_events(spark, sf_dir))
 
 
 ORACLES["transcript_digest"] = """
@@ -4335,13 +4033,13 @@ ORACLES["transcript_digest"] = """
     FROM events
     GROUP BY user_id
 """
-QUERIES["transcript_digest"] = transcript_digest_q
 
 
 # --------------------------------------------------- encoding + splits
 
 
-def target_encode_pit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def target_encode_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leakage-free target encoding (operators/encoding.target_encode_pit):
     per-row mean of value over STRICTLY EARLIER rows of the same
     category (frame ends at -1; the row's own target never leaks).
@@ -4349,11 +4047,7 @@ def target_encode_pit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     One window; skew note in the operator docstring (category domains
     are small — route hot categories through the salted prefix
     machinery at scale)."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        target_encode_pit,
-    )
-
-    return target_encode_pit(_events(spark, sf_dir))
+    return encoding.target_encode_pit(_events(spark, sf_dir))
 
 
 ORACLES["target_encode_pit"] = """
@@ -4369,18 +4063,14 @@ ORACLES["target_encode_pit"] = """
     WINDOW w AS (PARTITION BY event_type ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 """
-QUERIES["target_encode_pit"] = target_encode_pit_q
 
 
-def hashed_cross_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hashed_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick feature cross (operators/encoding.hashed_cross):
     (event_type x user_id) folded into 1024 buckets via md5 first-8-hex
     — zero shuffles, zero vocabulary build, engine-replayable."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        hashed_cross,
-    )
-
-    return hashed_cross(
+    return encoding.hashed_cross(
         _events(spark, sf_dir), cols=("event_type", "user_id"), n_buckets=1024
     ).select("event_id", "cross_bucket")
 
@@ -4395,19 +4085,15 @@ ORACLES["hashed_cross"] = f"""
            ({_sample_key_terms_sql()}) % 1024 AS cross_bucket
     FROM h
 """
-QUERIES["hashed_cross"] = hashed_cross_q
 
 
-def holdout_last_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def holdout_last_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal train/eval split (operators/sampling.holdout_last_k):
     each user's last 5 events are eval, the rest train — the
     leakage-safe split for time-ordered corpora. One reversed-order
     row_number on the shared per-entity exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        holdout_last_k,
-    )
-
-    return holdout_last_k(_events(spark, sf_dir), k=5).select(
+    return sampling.holdout_last_k(_events(spark, sf_dir), k=5).select(
         "event_id", "user_id", "ts", "split"
     )
 
@@ -4419,10 +4105,10 @@ ORACLES["holdout_last_k"] = """
                 THEN 'eval' ELSE 'train' END AS split
     FROM events
 """
-QUERIES["holdout_last_k"] = holdout_last_k_q
 
 
-def session_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def session_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-row session descriptors with NO join
     (operators/sessionize.session_features): gap sessionization +
     position-in-session (PIT-safe) + session size/duration
@@ -4430,11 +4116,7 @@ def session_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     satisfies the (user_id, session_id) clustering, so the second
     window adds a sort but no exchange — one shuffle end to end
     (plan-audit-tested)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sessionize import (
-        session_features,
-    )
-
-    return session_features(
+    return sessionize.session_features(
         _events(spark, sf_dir),
         gap_seconds=3600.0,
         entity="user_id",
@@ -4471,19 +4153,15 @@ ORACLES["session_features"] = """
                   ROWS BETWEEN UNBOUNDED PRECEDING
                   AND UNBOUNDED FOLLOWING)
 """
-QUERIES["session_features"] = session_features_q
 
 
-def standardize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def standardize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global z-normalization (operators/encoding.standardize): the
     reference's z-norm (get_sepectogram.py:63-64) with corpus-level
     stats — one tiny exact-decimal aggregate broadcast into a narrow
     map; the corpus never shuffles."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        standardize,
-    )
-
-    return standardize(_events(spark, sf_dir))
+    return encoding.standardize(_events(spark, sf_dir))
 
 
 ORACLES["standardize"] = """
@@ -4502,7 +4180,6 @@ ORACLES["standardize"] = """
                  * 1000000.0) / 1000000.0 AS z_value
     FROM c, s
 """
-QUERIES["standardize"] = standardize_q
 
 
 _ECDF_DECILES = ", ".join(
@@ -4511,18 +4188,15 @@ _ECDF_DECILES = ", ".join(
 )
 
 
-def quantile_bucketize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def quantile_bucketize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global decile binning (operators/encoding.quantile_bucketize):
     one tiny percentile_disc aggregate broadcast into a narrow
     comparison map — no corpus shuffle, no global sort (the ntile
     alternative is one task at 100 TB). DISCRETE quantiles (actual
     integer cents) because interpolated ones can round 1 ULP apart
     between engines on tied values and flip a boundary row."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        quantile_bucketize,
-    )
-
-    return quantile_bucketize(_events(spark, sf_dir), n_buckets=10)
+    return encoding.quantile_bucketize(_events(spark, sf_dir), n_buckets=10)
 
 
 ORACLES["quantile_bucketize"] = f"""
@@ -4540,20 +4214,16 @@ ORACLES["quantile_bucketize"] = f"""
                 AS INT) AS bucket
     FROM c, t
 """
-QUERIES["quantile_bucketize"] = quantile_bucketize_q
 
 
-def freq_encode_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def freq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency encoding + rare-category collapse
     (operators/encoding.freq_encode): category corpus count/share per
     row, categories under 2000 rows folded to '__other__' (the
     sf0.01 domain straddles 2000, so BOTH branches execute). One tiny
     count agg + broadcast join back — the corpus never shuffles."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        freq_encode,
-    )
-
-    return freq_encode(_events(spark, sf_dir), min_count=2000)
+    return encoding.freq_encode(_events(spark, sf_dir), min_count=2000)
 
 
 ORACLES["freq_encode"] = """
@@ -4567,18 +4237,14 @@ ORACLES["freq_encode"] = """
            CAST(c.cnt AS DOUBLE) / CAST(t.n AS DOUBLE) AS cat_share
     FROM events e JOIN counts c USING (event_type), tot t
 """
-QUERIES["freq_encode"] = freq_encode_q
 
 
-def winsorize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorization at the global [p01, p99] (operators/encoding.
     winsorize): discrete-quantile clamp, same two-pass broadcast shape
     as quantile_bucketize — robust preprocessing before standardize."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        winsorize,
-    )
-
-    return winsorize(_events(spark, sf_dir), lower=0.01, upper=0.99)
+    return encoding.winsorize(_events(spark, sf_dir), lower=0.01, upper=0.99)
 
 
 ORACLES["winsorize"] = """
@@ -4597,20 +4263,16 @@ ORACLES["winsorize"] = """
              AS value_winsor
     FROM c, t
 """
-QUERIES["winsorize"] = winsorize_q
 
 
-def group_kfold_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped 5-fold CV assignment (operators/sampling.group_kfold):
     fold = md5-key(user_id) mod 5, so every event of an entity shares a
     fold — the grouped analogue of dataset_split's leakage guarantee.
     Pure narrow map: NO shuffle, no group-table join; stable as the
     corpus grows."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        group_kfold,
-    )
-
-    return group_kfold(_events(spark, sf_dir), k=5, group="user_id").select(
+    return sampling.group_kfold(_events(spark, sf_dir), k=5, group="user_id").select(
         "event_id", "user_id", "fold"
     )
 
@@ -4625,10 +4287,10 @@ ORACLES["group_kfold"] = f"""
            CAST(({_sample_key_terms_sql()}) % 5 AS INT) AS fold
     FROM h
 """
-QUERIES["group_kfold"] = group_kfold_q
 
 
-def future_window_label_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def future_window_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Training-label construction (operators/labels.
     future_window_label): label=1 iff a 'purchase' occurs for the same
     user STRICTLY after the row (stable (ts, event_id) order) within 24
@@ -4639,11 +4301,7 @@ def future_window_label_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     class is documented in BENCH/BASELINE.md); the oracle uses the
     declarative following-frame min, which DuckDB evaluates via segment
     trees — same values, each engine's natural plan."""
-    from dane_visual_feature_extraction_worker_spark.operators.labels import (
-        future_window_label,
-    )
-
-    return future_window_label(
+    return labels.future_window_label(
         _events(spark, sf_dir),
         target="purchase",
         horizon_s=86400,
@@ -4669,10 +4327,10 @@ ORACLES["future_window_label"] = """
            nt - mic AS tte_micros
     FROM nxt
 """
-QUERIES["future_window_label"] = future_window_label_q
 
 
-def tool_usage_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def tool_usage_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIT-safe tool-usage features over the transcript projection
     (operators/toolusage.tool_usage_profile): prior tool-call count,
     prior DISTINCT tool count (running sum of first-occurrence flags —
@@ -4680,10 +4338,6 @@ def tool_usage_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     are mapped ('pay', 'retry') so the distinct counter genuinely
     advances past 1. Both windows cluster by conv_id, so Catalyst's
     subset rule keeps it ONE exchange + two sorts, zero joins."""
-    from dane_visual_feature_extraction_worker_spark.operators.toolusage import (
-        tool_usage_profile,
-    )
-
     e = _events(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     tr = e.select(
@@ -4694,7 +4348,7 @@ def tool_usage_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("tool"),
         F.col("ts").cast("timestamp").alias("ts"),
     )
-    return tool_usage_profile(tr)
+    return toolusage.tool_usage_profile(tr)
 
 
 ORACLES["tool_usage_profile"] = """
@@ -4725,20 +4379,18 @@ ORACLES["tool_usage_profile"] = """
     WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 """
-QUERIES["tool_usage_profile"] = tool_usage_profile_q
 
 
-def bigram_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bigram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bigram-LM quality score (operators/textstats.
     bigram_logprob_score): context-sensitive sibling of
     unigram_quality — scrambled-word spam scores high here while
     passing the unigram filter. Same integer micro-nat quantization,
     same two-shuffle plan; vocab_k=1024 word pairs."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        bigram_logprob_score,
+    return textstats.bigram_logprob_score(
+        _fan(_documents(spark, sf_dir), "doc_id"), vocab_k=1024
     )
-
-    return bigram_logprob_score(_fan(_documents(spark, sf_dir), "doc_id"), vocab_k=1024)
 
 
 ORACLES["bigram_quality"] = r"""
@@ -4777,7 +4429,6 @@ ORACLES["bigram_quality"] = r"""
     FROM scored
     GROUP BY doc_id
 """
-QUERIES["bigram_quality"] = bigram_quality_q
 
 
 _TR_PROJ_SQL = """
@@ -4843,16 +4494,15 @@ def _tr_proj_lean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def sft_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def sft_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SFT example extraction (operators/turns.sft_pairs): adjacent
     user→assistant turn pairs become (prompt, response) rows; pairs
     with an intervening turn are excluded (the response wasn't
     conditioned on the prompt alone). One lag window, NO self-join —
     the naive turn_idx+1 self-join is a second corpus shuffle plus a
     probe per row."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import sft_pairs
-
-    return sft_pairs(_tr_proj(spark, sf_dir))
+    return turns.sft_pairs(_tr_proj(spark, sf_dir))
 
 
 ORACLES["sft_pairs"] = f"""
@@ -4869,20 +4519,16 @@ ORACLES["sft_pairs"] = f"""
     FROM lagged
     WHERE role = 'assistant' AND prev_role = 'user'
 """
-QUERIES["sft_pairs"] = sft_pairs_q
 
 
-def context_window_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def context_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling 4-turn context assembly (operators/turns.
     context_window): each turn carries the concatenation of its last 4
     turns — the fixed-size context a next-turn model trains on. Bounded
     rows frame (O(n·k) incremental, never the O(n²) unbounded class);
     output flattened to one string so the row is sink-ready."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        context_window,
-    )
-
-    return context_window(_tr_proj(spark, sf_dir), k=4)
+    return turns.context_window(_tr_proj(spark, sf_dir), k=4)
 
 
 ORACLES["context_window"] = f"""
@@ -4896,10 +4542,10 @@ ORACLES["context_window"] = f"""
     WINDOW w AS (PARTITION BY conv_id ORDER BY ts, turn_idx
                  ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)
 """
-QUERIES["context_window"] = context_window_q
 
 
-def collapse_repeats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def collapse_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-duplicate collapse (operators/turns.
     collapse_repeats): adjacent same-(role, text) turns — retry-loop
     artifacts — fold into their first occurrence with the run length.
@@ -4907,14 +4553,10 @@ def collapse_repeats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     first character (adjacent events sharing a props prefix collapse);
     the operator itself is content-agnostic. Run-numbering via a
     running sum of start flags: no join, one exchange end to end."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        collapse_repeats,
-    )
-
     tr = _tr_proj(spark, sf_dir).withColumn(
         "text", F.substring(F.col("text"), 1, 1)
     )
-    return collapse_repeats(tr)
+    return turns.collapse_repeats(tr)
 
 
 ORACLES["collapse_repeats"] = f"""
@@ -4944,20 +4586,16 @@ ORACLES["collapse_repeats"] = f"""
     FROM runs
     GROUP BY conv_id, run
 """
-QUERIES["collapse_repeats"] = collapse_repeats_q
 
 
-def grouped_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def grouped_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type exact quantile profile (operators/encoding.
     grouped_quantiles): p25/p50/p75/p90 of value per category —
     DISCRETE quantiles over integer cents (actual data values, no
     interpolation to diverge between engines); one hash shuffle into a
     sort-based percentile aggregate, |groups| output rows."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        grouped_quantiles,
-    )
-
-    return grouped_quantiles(_events(spark, sf_dir))
+    return encoding.grouped_quantiles(_events(spark, sf_dir))
 
 
 ORACLES["grouped_quantiles"] = """
@@ -4982,20 +4620,16 @@ ORACLES["grouped_quantiles"] = """
     FROM ranked
     GROUP BY event_type
 """
-QUERIES["grouped_quantiles"] = grouped_quantiles_q
 
 
-def mad_outliers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median/MAD robust outlier flag (operators/encoding.
     robust_outliers): |x - median| > 3*MAD over integer cents — the
     50%-breakdown twin of the mean/std gate `standardize` enables.
     Three tiny discrete-quantile aggregates broadcast back; the corpus
     never shuffles; the flag itself is pure int64 comparison."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        robust_outliers,
-    )
-
-    return robust_outliers(_events(spark, sf_dir), value="value", k=3)
+    return encoding.robust_outliers(_events(spark, sf_dir), value="value", k=3)
 
 
 ORACLES["mad_outliers"] = """
@@ -5019,27 +4653,23 @@ ORACLES["mad_outliers"] = """
            (abs(c.c - med.m) > 3 * mad.md) AS is_outlier
     FROM c, med, mad
 """
-QUERIES["mad_outliers"] = mad_outliers_q
 
 
-def feature_label_corr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def feature_label_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-screening Pearson r (operators/stats.pearson_corr_exact):
     two candidate features (props length in chars, hour of day) vs the
     cents label, every moment an exact decimal(38,0) sum in ONE
     map-side-combined aggregate — the corpus is read once and never
     shuffled; floats appear only in the final |features|-sized formula
     with a fixed IEEE op order (cov / sqrt(vx*vy))."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        pearson_corr_exact,
-    )
-
     e = _events(spark, sf_dir)
     label = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     feats = {
         "props_len": F.length(F.coalesce(F.col("props"), F.lit(""))),
         "hour_of_day": F.hour(F.col("ts")),
     }
-    return pearson_corr_exact(e, feats, label)
+    return stats.pearson_corr_exact(e, feats, label)
 
 
 ORACLES["feature_label_corr"] = """
@@ -5075,19 +4705,15 @@ ORACLES["feature_label_corr"] = """
                 ELSE NULL END AS r
     FROM u
 """
-QUERIES["feature_label_corr"] = feature_label_corr_q
 
 
-def rolling_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rolling_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-8-row distinct event types per user (operators/windows.
     rolling_distinct): bounded collect_list frame (O(n*k), the
     context_window class) reduced by array_distinct/size — all JVM
     codegen, one shuffle + sort on the entity, PIT-safe frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        rolling_distinct,
-    )
-
-    return rolling_distinct(
+    return windows.rolling_distinct(
         _events(spark, sf_dir),
         entity="user_id",
         order=("ts", "event_id"),
@@ -5105,13 +4731,13 @@ ORACLES["rolling_distinct"] = """
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN 7 PRECEDING AND CURRENT ROW)
 """
-QUERIES["rolling_distinct"] = rolling_distinct_q
 
 
 _MIX_WEIGHTS = {"src0": 0.4, "src1": 2.5, "src2": 1.0, "src3": 1.5}
 
 
-def dataset_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dataset_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weighted dataset mixing with fractional epochs (operators/
     sampling.dataset_mix): floor(w) full copies + one md5-decided
     extra with probability frac(w) — down-sampling and epoch
@@ -5119,27 +4745,19 @@ def dataset_mix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (CASE + explode), zero shuffles; sources outside the manifest are
     dropped. Weights straddle 1.0 so all three branches (drop, keep,
     oversample) execute at sf0.01."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        dataset_mix,
-    )
-
-    return dataset_mix(
+    return sampling.dataset_mix(
         _documents(spark, sf_dir), weights=_MIX_WEIGHTS, salt="mix"
     )
 
 
 def _dataset_mix_oracle() -> str:
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        _threshold,
-    )
-
     k = _sample_key_terms_sql()
     whole_case = " ".join(
         f"WHEN source = '{s}' THEN {int(w)}"
         for s, w in sorted(_MIX_WEIGHTS.items())
     )
     frac_case = " ".join(
-        f"WHEN source = '{s}' THEN {_threshold(w - int(w))}"
+        f"WHEN source = '{s}' THEN {sampling._threshold(w - int(w))}"
         for s, w in sorted(_MIX_WEIGHTS.items())
     )
     return f"""
@@ -5161,20 +4779,16 @@ def _dataset_mix_oracle() -> str:
 
 
 ORACLES["dataset_mix"] = _dataset_mix_oracle()
-QUERIES["dataset_mix"] = dataset_mix_q
 
 
-def pmi_collocations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 collocations by PMI (operators/textstats.pmi_topk):
     ln(p(ab)/(p(a)p(b))) from exact decimal(38,0) count products,
     quantized to integer micro-nats (the _lm_score contract);
     min_count=3 suppresses the singleton-pair pathology. One explode
     per shape, two uniform-key joins, TakeOrdered top-k."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        pmi_topk,
-    )
-
-    return pmi_topk(_documents(spark, sf_dir), k=50, min_count=3)
+    return textstats.pmi_topk(_documents(spark, sf_dir), k=50, min_count=3)
 
 
 ORACLES["pmi_collocations"] = r"""
@@ -5209,22 +4823,17 @@ ORACLES["pmi_collocations"] = r"""
     ORDER BY pmi_micro DESC, bi.w1, bi.w2
     LIMIT 50
 """
-QUERIES["pmi_collocations"] = pmi_collocations_q
 
 
-def negative_sampling_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive negatives for the SFT pairs (operators/turns.
     negative_pairs): seeded md5 ring shift within 8 shards — one
     narrow key map + ONE hash exchange + per-shard sort; example i's
     negative is example i+1's response, the shard tail wraps to its
     head; is_self flags degenerate draws."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        negative_pairs,
-        sft_pairs,
-    )
-
-    return negative_pairs(
-        sft_pairs(_tr_proj(spark, sf_dir)), n_shards=8, salt="neg"
+    return turns.negative_pairs(
+        turns.sft_pairs(_tr_proj(spark, sf_dir)), n_shards=8, salt="neg"
     )
 
 
@@ -5259,38 +4868,28 @@ ORACLES["negative_sampling"] = f"""
     FROM keyed
     WINDOW w AS (PARTITION BY key % 8 ORDER BY key, conv_id, turn_idx)
 """
-QUERIES["negative_sampling"] = negative_sampling_q
 
 
-def approx_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def approx_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sketch profile (operators/sketches.approx_profile): per-user
     HLL++ distinct event types + GK approximate p50/p95 of value in
     ONE map-side-combined pass — fixed KB of state per group at any
     corpus size. APPROXIMATE by construction, so no SQL oracle
     (rows-only gate); the numeric contract is the tolerance test vs
     the exact twins (tests/test_sketches.py)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        approx_profile,
-    )
-
-    return approx_profile(_events(spark, sf_dir))
+    return sketches.approx_profile(_events(spark, sf_dir))
 
 
-QUERIES["approx_profile"] = approx_profile_q
-
-
-def behavior_entropy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def behavior_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user distribution-shape features (operators/stats.
     behavior_profile): Shannon entropy of the event-type mix in
     term-level-quantized integer micro-nats (the _lm_score contract —
     each ln is of a bare integer count) + Herfindahl concentration as
     one IEEE divide of exact ints. One corpus exchange on (user, type),
     then a histogram-sized rollup."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        behavior_profile,
-    )
-
-    return behavior_profile(_events(spark, sf_dir))
+    return stats.behavior_profile(_events(spark, sf_dir))
 
 
 ORACLES["behavior_entropy"] = """
@@ -5312,21 +4911,17 @@ ORACLES["behavior_entropy"] = """
            CAST(s2 AS DOUBLE) / CAST(n * n AS DOUBLE) AS hhi
     FROM per
 """
-QUERIES["behavior_entropy"] = behavior_entropy_q
 
 
-def session_cooccurrence_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def session_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-session event-type co-occurrence (operators/sessionize.
     session_cooccurrence): for each unordered type pair, the number of
     1h-gap sessions containing both — sessionize window → bounded
     per-session collect_set → codegen i<j pair explode → one
     |types|²-key count. The self-join formulation shuffles the session
     table twice; this shuffles it never."""
-    from dane_visual_feature_extraction_worker_spark.operators.sessionize import (
-        session_cooccurrence,
-    )
-
-    return session_cooccurrence(
+    return sessionize.session_cooccurrence(
         _events(spark, sf_dir),
         gap_seconds=3600.0,
         entity="user_id",
@@ -5363,21 +4958,17 @@ ORACLES["session_cooccurrence"] = """
     SELECT cat_a, cat_b, CAST(count(*) AS BIGINT) AS n_sessions
     FROM pairs GROUP BY cat_a, cat_b
 """
-QUERIES["session_cooccurrence"] = session_cooccurrence_q
 
 
-def cusum_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM level-shift detector (operators/windows.cusum_drift):
     s_i = max(0, s_{i-1} + (x_i − k)) — the recursion has the closed
     windowed form s_i = P_i − min(0, min_{j≤i} P_j) with P the running
     Σ(x−k), so the whole detector is one exchange + one sort with two
     running aggregates (sum, min) in pure codegen, exact integer
     cents; no applyInPandas, no recursion. k = 50.00, h = 550.00."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        cusum_drift,
-    )
-
-    return cusum_drift(
+    return windows.cusum_drift(
         _events(spark, sf_dir),
         entity="user_id",
         order=("ts", "event_id"),
@@ -5405,20 +4996,16 @@ ORACLES["cusum_drift"] = """
     WINDOW w2 AS (PARTITION BY user_id ORDER BY ts, event_id
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
 """
-QUERIES["cusum_drift"] = cusum_drift_q
 
 
-def rolling_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rolling_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-16-row least-squares trend per user (operators/windows.
     rolling_slope): slope from exact int64 bounded-frame sums
     (Σx/Σx² closed-form in the frame length, Σy/Σxy as integer
     aggregate folds over the ≤16-element frame list), ONE IEEE divide
     chain at the end — engine-exact. One exchange + one sort."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        rolling_slope,
-    )
-
-    return rolling_slope(
+    return windows.rolling_slope(
         _events(spark, sf_dir),
         entity="user_id",
         order=("ts", "event_id"),
@@ -5455,24 +5042,19 @@ ORACLES["rolling_slope"] = """
                 ELSE NULL END AS slope
     FROM s
 """
-QUERIES["rolling_slope"] = rolling_slope_q
 
 
-def doc_pagerank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def doc_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Integer PageRank (3 rounds, d=0.85) over the MinHash-LSH
     candidate graph (operators/dedup.pagerank_fixed): centrality-based
     canonical-representative scoring for near-dup clusters. Ranks in
     integer micro-units with `div` contributions — every round is
     exact int64, so the unrolled SQL twin replays all three rounds bit
     for bit (the float formulation CANNOT be gated; this one can)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-        pagerank_fixed,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    pairs = minhash_lsh_pairs(docs)
-    return pagerank_fixed(pairs, docs.select("doc_id"), iters=3)
+    pairs = dedup.minhash_lsh_pairs(docs)
+    return dedup.pagerank_fixed(pairs, docs.select("doc_id"), iters=3)
 
 
 def _pagerank_oracle(iters: int = 3, damping_pct: int = 85) -> str:
@@ -5539,10 +5121,10 @@ def _pagerank_oracle(iters: int = 3, damping_pct: int = 85) -> str:
 
 
 ORACLES["doc_pagerank"] = _pagerank_oracle()
-QUERIES["doc_pagerank"] = doc_pagerank_q
 
 
-def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join (streaming/joins.py): clicks and
     purchases as two watermarked unbounded streams, purchases
     attributed to clicks within 1 h — state bounded by the interval +
@@ -5550,10 +5132,6 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow-bounded for the gate with a conservative lateness
     budget (inner stream-stream joins drop late rows by design; the
     oracle is the identical batch range join)."""
-    from dane_visual_feature_extraction_worker_spark.streaming.joins import (
-        interval_join_sink_append,
-    )
-
     s = _events_stream(spark, sf_dir)
     clicks = s.where(F.col("event_type") == "click").select(
         F.col("event_id").alias("click_id"),
@@ -5577,7 +5155,7 @@ def streaming_interval_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
-        interval_join_sink_append(
+        stream_joins.interval_join_sink_append(
             clicks,
             purchases,
             on="user_id",
@@ -5606,20 +5184,16 @@ ORACLES["streaming_interval_join"] = """
      AND p.ts >= c.ts
      AND p.ts <= c.ts + INTERVAL 3600 SECONDS
 """
-QUERIES["streaming_interval_join"] = streaming_interval_join_q
 
 
-def weighted_sample_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weighted sampling without replacement (operators/
     sampling.weighted_sample, Efraimidis-Spirakis A-Res): top-100 docs
     by ln(u)/n_chars with the md5 uniform — inclusion ∝ length,
     engine-replayable. Pure narrow scoring + TakeOrdered, zero
     shuffles."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        weighted_sample,
-    )
-
-    return weighted_sample(
+    return sampling.weighted_sample(
         _documents(spark, sf_dir), k=100, weight_col="n_chars", salt="ws5"
     )
 
@@ -5643,19 +5217,15 @@ ORACLES["weighted_sample"] = f"""
     ORDER BY score_micro DESC, doc_id
     LIMIT 100
 """
-QUERIES["weighted_sample"] = weighted_sample_q
 
 
-def null_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def null_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality null/empty/NaN profile of the events table
     (operators/stats.null_profile): ONE map-side-combined aggregate —
     every counter a CASE sum, no per-column jobs — exploded to a
     |columns|-row report."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        null_profile,
-    )
-
-    return null_profile(_events(spark, sf_dir))
+    return stats.null_profile(_events(spark, sf_dir))
 
 
 ORACLES["null_profile"] = """
@@ -5695,19 +5265,15 @@ ORACLES["null_profile"] = """
     UNION ALL
     SELECT 'props', n, nu_props, em_props, NULL FROM m
 """
-QUERIES["null_profile"] = null_profile_q
 
 
-def quantile_normalize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ECDF rank transform (operators/encoding.quantile_normalize):
     exact P(X <= x) per row WITHOUT a global sort — distinct-cent
     counts + a domain-bound running sum, broadcast back; cume_dist by
     definition, which is exactly what the oracle runs."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        quantile_normalize,
-    )
-
-    return quantile_normalize(_events(spark, sf_dir))
+    return encoding.quantile_normalize(_events(spark, sf_dir))
 
 
 ORACLES["quantile_normalize"] = """
@@ -5717,19 +5283,15 @@ ORACLES["quantile_normalize"] = """
            ) AS ecdf
     FROM events
 """
-QUERIES["quantile_normalize"] = quantile_normalize_q
 
 
-def source_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise source shingle-Jaccard matrix (operators/dedup.
     source_overlap): dataset-level contamination diagnostic. Distinct
     (source, shingle) reduction → per-shingle self-join with
     |groups|-bounded fan-out → exact-int Jaccard."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        source_overlap,
-    )
-
-    return source_overlap(_fan(_documents(spark, sf_dir), "doc_id"))
+    return dedup.source_overlap(_fan(_documents(spark, sf_dir), "doc_id"))
 
 
 ORACLES["source_overlap"] = r"""
@@ -5756,20 +5318,16 @@ ORACLES["source_overlap"] = r"""
     JOIN sizes sa ON sa.g = c.g_a
     JOIN sizes sb ON sb.g = c.g_b
 """
-QUERIES["source_overlap"] = source_overlap_q
 
 
-def embedding_quantize_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector scalar quantization to int8-range codes (operators/
     similarity.quantize_embeddings): the 4x-compression map stage of a
     quantized ANN index — pure narrow array math, zero shuffles; codes
     bit-identical across engines (exact float32->double lift, fixed op
     order, floor)."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        quantize_embeddings,
-    )
-
-    return quantize_embeddings(_embeddings(spark, sf_dir))
+    return similarity.quantize_embeddings(_embeddings(spark, sf_dir))
 
 
 ORACLES["embedding_quantize"] = """
@@ -5793,18 +5351,16 @@ ORACLES["embedding_quantize"] = """
              'string_agg', ',') AS codes
     FROM s
 """
-QUERIES["embedding_quantize"] = embedding_quantize_q
 
 
-def scd2_build_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 dimension build (operators/scd2.scd2_build): collapse the
     per-user event log into type-2 validity intervals — change
     detection (null-safe lag compare) and interval close (lead) ride
     ONE entity exchange + one sort; no-op re-statements are absorbed
     into the open version."""
-    from dane_visual_feature_extraction_worker_spark.operators.scd2 import scd2_build
-
-    return scd2_build(
+    return scd2.scd2_build(
         _events(spark, sf_dir),
         entity_col="user_id",
         ts_col="ts",
@@ -5831,23 +5387,18 @@ ORACLES["scd2_build"] = """
     FROM opens
     WINDOW w AS (PARTITION BY user_id ORDER BY valid_from, event_id)
 """
-QUERIES["scd2_build"] = scd2_build_q
 
 
-def scd2_lookup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time SCD2 read (operators/scd2.scd2_lookup): purchases
     enriched with the browsing-mode version in force at purchase time.
     Because SCD2 intervals TILE time per entity, the lookup compiles to
     the flagship union-window as-of join (one shuffle) instead of an
     interval join's O(|facts| x |versions|) candidate blow-up — the
     oracle states the interval semantics directly and must agree."""
-    from dane_visual_feature_extraction_worker_spark.operators.scd2 import (
-        scd2_build,
-        scd2_lookup,
-    )
-
     ev = _events(spark, sf_dir)
-    dim = scd2_build(
+    dim = scd2.scd2_build(
         ev.where(F.col("event_type").isin("view", "click")),
         entity_col="user_id",
         ts_col="ts",
@@ -5860,7 +5411,7 @@ def scd2_lookup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ts",
         "value",
     )
-    return scd2_lookup(facts, dim, entity_col="user_id", fact_ts="ts")
+    return scd2.scd2_lookup(facts, dim, entity_col="user_id", fact_ts="ts")
 
 
 ORACLES["scd2_lookup"] = """
@@ -5890,22 +5441,18 @@ ORACLES["scd2_lookup"] = """
      AND d.valid_from <= p.ts
      AND (d.valid_to IS NULL OR p.ts < d.valid_to)
 """
-QUERIES["scd2_lookup"] = scd2_lookup_q
 
 
-def embedding_gram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def embedding_gram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact quantized Gramian (operators/linalg.gram_matrix): the one
     aggregate behind PCA/whitening. 2^-24 integer quantization makes
     every product-sum exact integer arithmetic (engine- and
     layout-independent); Arrow batches compute int64 einsum partials
     (d(d+1)/2 rows per batch), ONE map-side-combined groupBy totals
     them as decimal(38,0) — the exchange never carries vectors."""
-    from dane_visual_feature_extraction_worker_spark.operators.linalg import (
-        gram_matrix,
-    )
-
     emb = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
-    return gram_matrix(emb)
+    return linalg.gram_matrix(emb)
 
 
 ORACLES["embedding_gram"] = """
@@ -5923,19 +5470,17 @@ ORACLES["embedding_gram"] = """
     WHERE a.pos <= b.pos
     GROUP BY 1, 2
 """
-QUERIES["embedding_gram"] = embedding_gram_q
 
 
-def chunk_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sub-document repeated-span removal (operators/dedup.chunk_dedup):
     8-word chunks, keep the globally-first occurrence, reassemble —
     the C4/MassiveText boilerplate rule; doc-level dedup is the
     degenerate case (fully-duplicated docs drop). Two uniform shuffles
     (chunk digest, then doc_id)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import chunk_dedup
-
     docs = _read_parquet(spark, f"{sf_dir}/documents.parquet")
-    return chunk_dedup(docs, window=8)
+    return dedup.chunk_dedup(docs, window=8)
 
 
 ORACLES["chunk_dedup"] = """
@@ -5966,19 +5511,15 @@ ORACLES["chunk_dedup"] = """
            any_value(n_chunks) AS n_chunks
     FROM kept GROUP BY doc_id
 """
-QUERIES["chunk_dedup"] = chunk_dedup_q
 
 
-def session_paths_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 in-session event trigram paths (operators/sessionize.
     session_paths): ordered behavioral n-grams, session-bounded —
     sessionize's entity exchange + leads on the same sorted run
     (subset rule), one map-side-combined path count, TakeOrdered."""
-    from dane_visual_feature_extraction_worker_spark.operators.sessionize import (
-        session_paths,
-    )
-
-    return session_paths(
+    return sessionize.session_paths(
         _events(spark, sf_dir),
         gap_seconds=3600.0,
         entity="user_id",
@@ -6015,10 +5556,10 @@ ORACLES["session_paths"] = """
     WHERE last_step IS NOT NULL
     GROUP BY path ORDER BY n DESC, path LIMIT 20
 """
-QUERIES["session_paths"] = session_paths_q
 
 
-def big_orders_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q18 shape (large-volume orders): pre-aggregate lineitem
     quantities BEFORE the orders join — the exchange carries one row
     per order key, not per line item; exact decimal sums; the filter
@@ -6049,19 +5590,15 @@ ORACLES["big_orders"] = """
     GROUP BY 1, 2, 3, 4
     HAVING sum(CAST(l_quantity AS DECIMAL(18,2))) > 250
 """
-QUERIES["big_orders"] = big_orders_q
 
 
-def time_travel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-log time travel (operators/merge.time_travel_read): events
     as an append-only upsert/tombstone log (errors delete the key);
     state AS OF 70% of the max sequence. Lazy scalar cut (broadcast
     crossJoin, no driver round-trip), one max_by aggregate, tombstones
     filtered AFTER the agg so a delete can win and suppress its key."""
-    from dane_visual_feature_extraction_worker_spark.operators.merge import (
-        time_travel_read,
-    )
-
     ev = _events(spark, sf_dir)
     log = ev.select(
         "user_id",
@@ -6074,7 +5611,7 @@ def time_travel_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     cut = ev.agg(F.max("event_id").alias("__m")).select(
         F.expr("__m * 7 DIV 10").cast("bigint").alias("as_of")
     )
-    return time_travel_read(
+    return merge.time_travel_read(
         log, key_col="user_id", version_col="event_id", op_col="op", as_of=cut
     )
 
@@ -6096,19 +5633,15 @@ ORACLES["time_travel"] = """
     SELECT user_id, event_id, op, event_type, value, ts
     FROM latest WHERE op <> 'D'
 """
-QUERIES["time_travel"] = time_travel_q
 
 
-def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hard-negative mining (operators/similarity.hard_negatives): per
     class anchor (first vector of each label), the top-5 most-similar
     DIFFERENT-label vectors — one Arrow matmul scan keeping per-query
     partition-local top-2k, exact JVM re-score of survivors, floored
     1e-6 ranking with id tie-break."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        hard_negatives,
-    )
-
     emb = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     firsts = (
         emb.groupBy("label")
@@ -6120,7 +5653,7 @@ def hard_negatives_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qe"),
         F.col("label").alias("qlabel"),
     )
-    return hard_negatives(emb, queries, k=5)
+    return similarity.hard_negatives(emb, queries, k=5)
 
 
 ORACLES["hard_negatives"] = """
@@ -6149,17 +5682,15 @@ ORACLES["hard_negatives"] = """
     QUALIFY row_number() OVER (
       PARTITION BY qid ORDER BY cos DESC, vec_id) <= 5
 """
-QUERIES["hard_negatives"] = hard_negatives_q
 
 
-def psi_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Categorical drift monitor (operators/stats.psi_drift): PSI terms
     per event_type between the first and second time half — micro-nat
     integer ln decomposition, exact rational (p−q), one corpus read,
     the corpus never shuffles."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import psi_drift
-
-    return psi_drift(_events(spark, sf_dir))
+    return stats.psi_drift(_events(spark, sf_dir))
 
 
 ORACLES["psi_drift"] = """
@@ -6196,19 +5727,15 @@ ORACLES["psi_drift"] = """
            END AS psi_term
     FROM counts, tot
 """
-QUERIES["psi_drift"] = psi_drift_q
 
 
-def purged_folds_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def purged_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Purged time-series k-fold (operators/sampling.purged_folds):
     5 folds, 1 h embargo on both sides of each validation window —
     integer-microsecond boundaries, zero shuffles (lazy broadcast
     bounds + narrow fold explode)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        purged_folds,
-    )
-
-    return purged_folds(
+    return sampling.purged_folds(
         _events(spark, sf_dir), ts="ts", id_col="event_id", k=5,
         embargo_seconds=3600.0,
     )
@@ -6232,10 +5759,10 @@ ORACLES["purged_folds"] = """
                 ELSE 'train' END AS split
     FROM r
 """
-QUERIES["purged_folds"] = purged_folds_q
 
 
-def bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Co-located bucketed join (sources/catalog.write_bucketed): both
     per-user aggregate tables persisted hash-bucketed (8 buckets,
     sorted) on the join key, then joined with ZERO exchanges on either
@@ -6245,10 +5772,6 @@ def bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_sources.py's bucketed-join audit and re-checked here).
     The oracle states the plain join — bucketing may never change
     results, only the plan."""
-    from dane_visual_feature_extraction_worker_spark.sources.catalog import (
-        write_bucketed,
-    )
-
     ev = _events(spark, sf_dir)
     clicks = ev.where(F.col("event_type") == "click").groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_clicks"),
@@ -6265,17 +5788,14 @@ def bucketed_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     # a fresh session's catalog does not know a previous run's managed
     # tables, but their warehouse directories survive — drop both ways
     # or saveAsTable raises LOCATION_ALREADY_EXISTS
-    import os
-    import shutil
-
     wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
     for t in ("bj_clicks", "bj_purchases"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
         loc = os.path.join(wh.removeprefix("file:"), t)
         if "://" not in wh and os.path.isdir(loc):
             shutil.rmtree(loc)
-    write_bucketed(clicks, "bj_clicks", 8, "user_id", "user_id")
-    write_bucketed(purchases, "bj_purchases", 8, "user_id", "user_id")
+    catalog.write_bucketed(clicks, "bj_clicks", 8, "user_id", "user_id")
+    catalog.write_bucketed(purchases, "bj_purchases", 8, "user_id", "user_id")
     # disable broadcast so the plan exercises (and the assert pins) the
     # bucketed sort-merge path — at 100 TB neither side broadcasts
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -6309,24 +5829,17 @@ ORACLES["bucketed_join"] = """
            p.n_purchases, p.purchase_value
     FROM c JOIN p ON c.user_id = p.user_id
 """
-QUERIES["bucketed_join"] = bucketed_join_q
 
 
-def overlap_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-interval overlap join (operators/intervals.
     overlap_join): user sessions × per-user event-type activity spans
     that intersect in time — grid-cell equi-join candidates (1-day
     cells), distinct pair dedup, exact overlap predicate; never a
     theta/cross join."""
-    from dane_visual_feature_extraction_worker_spark.operators.intervals import (
-        overlap_join,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.sessionize import (
-        session_stats,
-    )
-
     ev = _events(spark, sf_dir)
-    sessions = session_stats(
+    sessions = sessionize.session_stats(
         ev, gap_seconds=3600.0, entity="user_id", ts="ts",
         order=["ts", "event_id"],
     ).select(
@@ -6340,7 +5853,7 @@ def overlap_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "user_id", F.col("event_type").alias("r_id"), "r_start", "r_end"
     )
-    return overlap_join(
+    return intervals.overlap_join(
         sessions, spans, entity="user_id", cell_seconds=86400.0
     )
 
@@ -6374,10 +5887,10 @@ ORACLES["overlap_join"] = """
     FROM s JOIN r ON r.user_id = s.user_id
      AND s.l_start <= r.r_end AND r.r_start <= s.l_end
 """
-QUERIES["overlap_join"] = overlap_join_q
 
 
-def training_set_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def training_set_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end TRAINING-SET build composed from this round's gated
     operators in ONE lazy plan (the corpus_pipeline discipline applied
     to the feature side): purchases → point-in-time SCD2 browsing-mode
@@ -6389,16 +5902,8 @@ def training_set_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     COMPOSITION — Catalyst fuses the whole thing into one DAG (the
     as-of exchange, the window sort, the narrow fold math, one final
     fact-key join)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        purged_folds,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.scd2 import (
-        scd2_build,
-        scd2_lookup,
-    )
-
     ev = _events(spark, sf_dir)
-    dim = scd2_build(
+    dim = scd2.scd2_build(
         ev.where(F.col("event_type").isin("view", "click")),
         entity_col="user_id",
         ts_col="ts",
@@ -6408,7 +5913,7 @@ def training_set_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     facts = ev.where(F.col("event_type") == "purchase").select(
         F.col("event_id").alias("purchase_id"), "user_id", "ts", "value"
     )
-    enriched = scd2_lookup(facts, dim, entity_col="user_id", fact_ts="ts").select(
+    enriched = scd2.scd2_lookup(facts, dim, entity_col="user_id", fact_ts="ts").select(
         "purchase_id", "user_id", "ts", "value", "mode"
     )
     w = (
@@ -6424,7 +5929,7 @@ def training_set_pipeline_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("roll_sum"),
     )
-    split = purged_folds(
+    split = sampling.purged_folds(
         facts, ts="ts", id_col="purchase_id", k=5, embargo_seconds=3600.0
     ).where(F.col("fold") == 0)
     return feat.join(split.select("purchase_id", "split"), "purchase_id")
@@ -6482,17 +5987,15 @@ ORACLES["training_set_pipeline"] = """
     SELECT feat.*, split.split
     FROM feat JOIN split USING (purchase_id)
 """
-QUERIES["training_set_pipeline"] = training_set_pipeline_q
 
 
-def oov_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-coverage diagnostic (operators/textstats.oov_rate):
     per-doc OOV fraction vs the corpus top-50 vocabulary — broadcast
     vocab membership probe, one doc rollup shuffle."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import oov_rate
-
     docs = _read_parquet(spark, f"{sf_dir}/documents.parquet")
-    return oov_rate(docs, vocab_k=50)
+    return textstats.oov_rate(docs, vocab_k=50)
 
 
 ORACLES["oov_rate"] = """
@@ -6517,23 +6020,19 @@ ORACLES["oov_rate"] = """
     FROM toks t LEFT JOIN vocab v ON v.term = t.term
     GROUP BY t.doc_id
 """
-QUERIES["oov_rate"] = oov_rate_q
 
 
-def knn_classify_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """kNN majority-vote classification (operators/similarity.
     knn_classify): 8 corpus vectors as queries, modal label of the 10
     nearest (self excluded), vote ties to the smaller label — same
     Arrow-scan + exact-re-score discipline as hard_negatives."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        knn_classify,
-    )
-
     emb = _read_parquet(spark, f"{sf_dir}/embeddings.parquet")
     queries = emb.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    return knn_classify(emb, queries, k=10)
+    return similarity.knn_classify(emb, queries, k=10)
 
 
 ORACLES["knn_classify"] = """
@@ -6565,26 +6064,22 @@ ORACLES["knn_classify"] = """
     QUALIFY row_number() OVER (
       PARTITION BY qid ORDER BY votes DESC, label) = 1
 """
-QUERIES["knn_classify"] = knn_classify_q
 
 
-def zorder_layout_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order clustering key over (ts, user_id) (operators/layout.py):
     equal-quantum integer buckets from one scalar min/max aggregate,
     16+16 bit Morton interleave as pure shift/add codegen, then the
     range exchange + in-partition sort an OPTIMIZE ZORDER write path
     uses. The gate hashes the KEY (layout decisions are row-order
     -independent under the sorted compare)."""
-    from dane_visual_feature_extraction_worker_spark.operators.layout import (
-        zorder_layout,
-    )
-
     ev = _events(spark, sf_dir).select(
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("xv"),
         F.col("user_id").alias("yv"),
     )
-    return zorder_layout(ev, "xv", "yv", bits=16).select("event_id", "zkey")
+    return layout.zorder_layout(ev, "xv", "yv", bits=16).select("event_id", "zkey")
 
 
 def _zinterleave_sql(xb: str, yb: str, bits: int = 16) -> str:
@@ -6614,20 +6109,16 @@ ORACLES["zorder_layout"] = f"""
     SELECT event_id, CAST({_zinterleave_sql("xb", "yb")} AS BIGINT) AS zkey
     FROM k
 """
-QUERIES["zorder_layout"] = zorder_layout_q
 
 
-def bloom_join_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bloom_join_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit Bloom-filter runtime pruning of a fact-dim equi-join
     (operators/joins.bloom_join_prune): urgent-order line items. The
     oracle is the PLAIN join — false positives die in the exact join,
     so the gate proves the prune is sound, and the plan shows the
     fact-side scan filtered by an 8 KB bit-array literal before any
     exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.joins import (
-        bloom_join_prune,
-    )
-
     fact = _read_parquet(spark, f"{sf_dir}/lineitem.parquet").select(
         "l_orderkey", "l_linenumber", "l_extendedprice"
     )
@@ -6636,7 +6127,7 @@ def bloom_join_prune_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("o_orderpriority") == "1-URGENT")
         .select("o_orderkey", "o_orderdate")
     )
-    return bloom_join_prune(
+    return joins.bloom_join_prune(
         fact, dim, "l_orderkey", "o_orderkey", m_bits=65536, k_hashes=3
     ).select("l_orderkey", "l_linenumber", "l_extendedprice", "o_orderdate")
 
@@ -6646,24 +6137,17 @@ ORACLES["bloom_join_prune"] = """
     FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
     WHERE o.o_orderpriority = '1-URGENT'
 """
-QUERIES["bloom_join_prune"] = bloom_join_prune_q
 
 
-def triangle_count_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-node triangle counts over the MinHash-LSH candidate graph
     (operators/graph.triangle_counts): degree-ordered orientation caps
     wedge fan-out at O(sqrt(m)) per node; three uniform equi-joins,
     no theta join. Triangle-rich nodes are members of genuine dup
     CLIQUES (doc_pagerank scores centrality; this scores cohesion)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.graph import (
-        triangle_counts,
-    )
-
-    pairs = minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id"))
-    return triangle_counts(pairs, src="doc_a", dst="doc_b").select(
+    pairs = dedup.minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id"))
+    return graph.triangle_counts(pairs, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "n_triangles"
     )
 
@@ -6697,10 +6181,10 @@ ORACLES["triangle_count"] = f"""
       UNION ALL SELECT tc FROM tri
     ) GROUP BY node
 """
-QUERIES["triangle_count"] = triangle_count_q
 
 
-def grouping_sets_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def grouping_sets_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE aggregate over (event_type, hour-of-day) with an explicit
     grouping id — the one-pass OLAP rollup surface (Spark expands the
     cube with a single Expand node over one exchange; four separate
@@ -6737,10 +6221,10 @@ ORACLES["grouping_sets_agg"] = """
     FROM (SELECT event_type, CAST(hour(ts) AS INT) AS hr, value FROM events)
     GROUP BY CUBE (event_type, hr)
 """
-QUERIES["grouping_sets_agg"] = grouping_sets_agg_q
 
 
-def sliding_window_agg_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def sliding_window_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding (hopping) time windows: 1-hour windows every 30 minutes
     per event type — the native F.window slide form (each event lands
     in size/slide = 2 windows via one Expand node, NOT a range join;
@@ -6783,27 +6267,22 @@ ORACLES["sliding_window_agg"] = """
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
     FROM ex GROUP BY s, event_type
 """
-QUERIES["sliding_window_agg"] = sliding_window_agg_q
 
 
-def pareto_frontier_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pareto_frontier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language Pareto frontier of documents under (maximize
     whitespace-token count, minimize characters) — the density skyline
     a data-curation pass keeps (operators/stats.pareto_frontier): one
     sort exchange + two windows, no dominance self-join. Oracle states
     the NOT EXISTS dominance definition directly — quadratic, but it's
     the SLOW side of the gate that pays."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        pareto_frontier,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
     d = _documents(spark, sf_dir).select(
-        "doc_id", "lang", F.size(_tokens("text")).alias("n_tokens"), "n_chars"
+        "doc_id", "lang", F.size(textstats._tokens("text")).alias("n_tokens"), "n_chars"
     )
-    return pareto_frontier(d, maximize="n_tokens", minimize="n_chars", group="lang")
+    return stats.pareto_frontier(
+        d, maximize="n_tokens", minimize="n_chars", group="lang"
+    )
 
 
 ORACLES["pareto_frontier"] = r"""
@@ -6822,25 +6301,20 @@ ORACLES["pareto_frontier"] = r"""
         AND (j.n_tokens > i.n_tokens OR j.n_chars < i.n_chars)
     )
 """
-QUERIES["pareto_frontier"] = pareto_frontier_q
 
 
-def bm25_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 top-10 keyword retrieval over the documents corpus
     (operators/retrieval.bm25_topk): Lucene-IDF in integer micro-nats
     (ln of BARE integers only), tf normalization with cleared integer
     denominators (22/10/3/9 for k1=1.2, b=0.75), per-term int64 micro
     scores, k-row TakeOrdered.  The postings explode is pruned to the
     3 query terms before any exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.retrieval import (
-        bm25_topk,
+    d = _documents(spark, sf_dir).select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _documents(spark, sf_dir).select("doc_id", _tokens("text").alias("__t"))
-    return bm25_topk(
+    return retrieval.bm25_topk(
         d, F.col("__t"), ["scan", "merge", "vector"], id_col="doc_id", k=10
     )
 
@@ -6879,20 +6353,16 @@ ORACLES["bm25_search"] = r"""
     SELECT doc_id, CAST(micro AS DOUBLE) / 1e6 AS bm25
     FROM sc ORDER BY micro DESC, doc_id LIMIT 10
 """
-QUERIES["bm25_search"] = bm25_search_q
 
 
-def edit1_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def edit1_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance-1 fuzzy-dup pairs on the 12-char text prefix
     (operators/dedup.edit1_pairs): SymSpell deletion-neighborhood
     equi-join (<= 13 codegen substring variants per key, never a
     quadratic theta join), exact levenshtein verify.  The oracle IS
     the quadratic self-join — the slow side the operator replaces."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        edit1_pairs,
-    )
-
-    return edit1_pairs(
+    return dedup.edit1_pairs(
         _fan(_documents(spark, sf_dir), "doc_id"), F.col("text"), id_col="doc_id", key_len=12
     )
 
@@ -6904,19 +6374,15 @@ ORACLES["edit1_dedup"] = """
     FROM k a JOIN k b ON a.doc_id < b.doc_id
     WHERE levenshtein(a.kk, b.kk) <= 1
 """
-QUERIES["edit1_dedup"] = edit1_dedup_q
 
 
-def markov_transitions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order Markov transition matrix of event types per user
     (operators/stats.transition_matrix): one entity exchange for the
     lag window, map-side-combined pair counts, row-normalized over the
     tiny |states|^2 frame. Exact-operand double divide, floor 1e-6."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        transition_matrix,
-    )
-
-    return transition_matrix(
+    return stats.transition_matrix(
         _events(spark, sf_dir),
         entity="user_id",
         ts="ts",
@@ -6942,10 +6408,10 @@ ORACLES["markov_transitions"] = """
                  * 1e6) / 1e6 AS prob
     FROM c
 """
-QUERIES["markov_transitions"] = markov_transitions_q
 
 
-def rollup_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rollup_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental aggregate maintenance (operators/rollup): build the
     algebraic partial state (count / exact-decimal sum / min / max per
     event type) separately over the first and second half of the time
@@ -6954,18 +6420,13 @@ def rollup_merge_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical to recompute, the identity incremental pipelines
     stand on. The time cut is a lazy broadcast scalar (psi_drift
     pattern), never a driver round-trip."""
-    from dane_visual_feature_extraction_worker_spark.operators.rollup import (
-        merge_rollups,
-        rollup_state,
-    )
-
     ev = _events(spark, sf_dir)
     us = F.unix_micros(F.col("ts").cast("timestamp"))
     cut = ev.agg(((F.min(us) + F.max(us)) / 2).cast("bigint").alias("__cut"))
     evc = ev.crossJoin(F.broadcast(cut))
-    old = rollup_state(evc.where(us <= F.col("__cut")), "event_type")
-    delta = rollup_state(evc.where(us > F.col("__cut")), "event_type")
-    m = merge_rollups(old, delta)
+    old = rollup.rollup_state(evc.where(us <= F.col("__cut")), "event_type")
+    delta = rollup.rollup_state(evc.where(us > F.col("__cut")), "event_type")
+    m = rollup.merge_rollups(old, delta)
     return m.select(
         "event_type",
         F.col("n_rows").alias("n_events"),
@@ -6982,24 +6443,19 @@ ORACLES["rollup_merge"] = """
            CAST(max(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS max_value
     FROM events GROUP BY event_type
 """
-QUERIES["rollup_merge"] = rollup_merge_q
 
 
-def lm_perplexity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-self-trained bigram LM quality score per document
     (operators/lm.bigram_lm_scores): the CCNet/Gopher perplexity
     filter. Add-one smoothing makes every log a log of a BARE integer
     -> exact int64 micro-nats; one exact-operand double divide per doc,
     floored 1e-6. V = context vocabulary (rows of the c1 table)."""
-    from dane_visual_feature_extraction_worker_spark.operators.lm import (
-        bigram_lm_scores,
+    d = _fan(_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", _tokens("text").alias("__t"))
-    return bigram_lm_scores(d, F.col("__t"), id_col="doc_id")
+    return lm.bigram_lm_scores(d, F.col("__t"), id_col="doc_id")
 
 
 ORACLES["lm_perplexity"] = r"""
@@ -7036,21 +6492,17 @@ ORACLES["lm_perplexity"] = r"""
              AS avg_nll
     FROM sc
 """
-QUERIES["lm_perplexity"] = lm_perplexity_q
 
 
-def span_corruption_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 span-corruption training pairs (operators/packing.span_corrupt):
     deterministic md5 span masking (rate 0.15, span 3 tokens), per-doc
     sentinel numbering via one running-sum window, order-stable
     reassembly (sort_array over (pos, piece), never bare collect_list).
     One corpus exchange: the groupBy reuses the window's doc_id
     partitioning."""
-    from dane_visual_feature_extraction_worker_spark.operators.packing import (
-        span_corrupt,
-    )
-
-    return span_corrupt(
+    return packing.span_corrupt(
         _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", "text"),
         id_col="doc_id",
         span_tokens=3,
@@ -7126,20 +6578,16 @@ ORACLES["span_corruption"] = (
     FROM asm
 """
 )
-QUERIES["span_corruption"] = span_corruption_q
 
 
-def kmv_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic KMV distinct-count sketch per event type
     (operators/sketches.kmv_distinct, k=64): the md5-keyed twin of HLL
     whose estimate is a pure integer function of the input, so the
     SQL oracle replays it exactly — unlike approx_profile's HLL++
     (engine-internal registers, tolerance-tested instead)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        kmv_distinct,
-    )
-
-    return kmv_distinct(
+    return sketches.kmv_distinct(
         _events(spark, sf_dir), group="event_type", value="user_id", k=64
     )
 
@@ -7175,28 +6623,23 @@ ORACLES["kmv_distinct"] = (
     FROM a
 """
 )
-QUERIES["kmv_distinct"] = kmv_distinct_q
 
 _CMS_PROBES = ["scan", "merge", "vector", "the", "and", "of", "data", "query"]
 
 
-def cms_heavy_hitters_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch frequency estimates vs exact counts for a fixed
     probe set (operators/sketches.cms_estimates, d=4 x w=1024): the
     mergeable O(d*w)-state frequency oracle; md5 row hashes make every
     cell — and thus every estimate — SQL-replayable. estimate >= exact
     by construction (collisions only add)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        cms_estimates,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
     toks = _fan(_documents(spark, sf_dir), "doc_id").select(
-        F.explode(_tokens("text")).alias("term")
+        F.explode(textstats._tokens("text")).alias("term")
     )
-    return cms_estimates(toks, _CMS_PROBES, depth=4, width=1024).orderBy("term")
+    return sketches.cms_estimates(
+        toks, _CMS_PROBES, depth=4, width=1024
+    ).orderBy("term")
 
 
 ORACLES["cms_heavy_hitters"] = (
@@ -7258,20 +6701,18 @@ ORACLES["cms_heavy_hitters"] = (
     ORDER BY term
 """
 )
-QUERIES["cms_heavy_hitters"] = cms_heavy_hitters_q
 
 
-def stopword_discovery_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def stopword_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-driven stopword candidates (>=40% document frequency,
     operators/textstats.stopword_discovery): per-doc DISTINCT term
     pairs shuffle once, N rides a lazy broadcast scalar, the threshold
     is the exact integer cross-product df*1e6 >= 4e5*N — no float in
     the filter."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        stopword_discovery,
+    return textstats.stopword_discovery(
+        _fan(_documents(spark, sf_dir), "doc_id"), min_share=0.4
     )
-
-    return stopword_discovery(_fan(_documents(spark, sf_dir), "doc_id"), min_share=0.4)
 
 
 ORACLES["stopword_discovery"] = r"""
@@ -7292,19 +6733,15 @@ ORACLES["stopword_discovery"] = r"""
     FROM dfreq CROSS JOIN n
     WHERE df * 1000000 >= 400000 * nn
 """
-QUERIES["stopword_discovery"] = stopword_discovery_q
 
 
-def dataset_card_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source dataset card (operators/textstats.dataset_card):
     docs/tokens/langs/exact-dup accounting per source in two map-side
     -combined passes joined on the |sources|-row key; ratios are
     floor-1e-6 single divides of exact int64 operands."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        dataset_card,
-    )
-
-    return dataset_card(_documents(spark, sf_dir))
+    return textstats.dataset_card(_documents(spark, sf_dir))
 
 
 ORACLES["dataset_card"] = r"""
@@ -7335,22 +6772,19 @@ ORACLES["dataset_card"] = r"""
                  * 1e6) / 1e6 AS mean_chars
     FROM base JOIN fps USING (source)
 """
-QUERIES["dataset_card"] = dataset_card_q
 
 
-def dup_cluster_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup cluster-size histogram: the curation metric behind
     "how much of this corpus is one template?" — MinHash-LSH pairs →
     connected components (the near_dup_clusters pipeline) → cluster
     sizes → (cluster_size, n_clusters, n_docs).  Oracle extends the
     recursive-CTE fixpoint with the same two rollups."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    cc = connected_components(minhash_lsh_pairs(docs), docs.select("doc_id"))
+    cc = dedup.connected_components(
+        dedup.minhash_lsh_pairs(docs), docs.select("doc_id")
+    )
     sz = cc.groupBy("cluster_id").agg(
         F.count(F.lit(1)).cast("bigint").alias("cluster_size")
     )
@@ -7373,26 +6807,19 @@ ORACLES["dup_cluster_stats"] = ORACLES["near_dup_clusters"].rsplit(
            CAST(sum(cluster_size) AS BIGINT) AS n_docs
     FROM sz GROUP BY cluster_size
 """
-QUERIES["dup_cluster_stats"] = dup_cluster_stats_q
 
 
-def lpa_communities_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Label-propagation communities over the MinHash-LSH candidate
     graph (operators/graph.label_propagation, 3 synchronous rounds,
     modal-neighbor label with min-label ties): the density view next
     to near_dup_clusters' reachability view.  The oracle unrolls all
     three rounds over the same pair SQL — an ITERATIVE Spark algorithm
     vs a replayed SQL fixture, the doc_pagerank discipline."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.graph import (
-        label_propagation,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    return label_propagation(
-        minhash_lsh_pairs(docs), docs.select("doc_id"), rounds=3
+    return graph.label_propagation(
+        dedup.minhash_lsh_pairs(docs), docs.select("doc_id"), rounds=3
     )
 
 
@@ -7423,10 +6850,10 @@ ORACLES["lpa_communities"] = (
     SELECT node AS doc_id, lab AS community FROM l3
 """
 )
-QUERIES["lpa_communities"] = lpa_communities_q
 
 
-def rfm_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rfm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM feature block per user at the corpus-max cutoff: recency
     (integer microseconds since last event), frequency (count),
     monetary (exact decimal(38,2) sum, widened to double only at the
@@ -7462,10 +6889,10 @@ ORACLES["rfm_features"] = """
     FROM events CROSS JOIN cut
     GROUP BY user_id, cut.c
 """
-QUERIES["rfm_features"] = rfm_features_q
 
 
-def preference_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def preference_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DPO-style preference-pair construction per source: chosen = the
     best document under the deterministic ranking chain (quality desc,
     n_tokens desc, doc_id asc), rejected = the worst under the exact
@@ -7475,12 +6902,8 @@ def preference_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     co-planned), then BOTH extremum windows and the group count ride
     ONE source-partitioned exchange; the chosen x rejected join is
     |sources|-row."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        quality_score as _qs,
-    )
-
     d = _documents(spark, sf_dir)
-    q = _qs(d).join(d.select("doc_id", "source"), "doc_id")
+    q = textstats.quality_score(d).join(d.select("doc_id", "source"), "doc_id")
     wt = Window.partitionBy("source").orderBy(
         F.desc("quality"), F.desc("n_tokens"), F.col("doc_id")
     )
@@ -7526,10 +6949,10 @@ ORACLES["preference_pairs"] = f"""
     FROM (SELECT * FROM j WHERE rt = 1 AND n >= 2) t
     JOIN (SELECT * FROM j WHERE rb = 1 AND n >= 2) b USING (source)
 """
-QUERIES["preference_pairs"] = preference_pairs_q
 
 
-def last_touch_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch revenue attribution: every purchase credits the
     user's most recent prior click's campaign (props.k), purchases
     with no prior click roll up under NULL (unattributed — reported,
@@ -7575,7 +6998,6 @@ ORACLES["last_touch_attribution"] = r"""
                 AS DOUBLE) AS attributed_revenue
     FROM t WHERE event_type = 'purchase' GROUP BY campaign
 """
-QUERIES["last_touch_attribution"] = last_touch_attribution_q
 
 _WEAK_RULES = [
     ("scan", "systems"),
@@ -7589,21 +7011,17 @@ _WEAK_RULES = [
 ]
 
 
-def weak_labels_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def weak_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Snorkel-style weak supervision (operators/labels.weak_label_vote):
     8 keyword labeling functions over 3 classes, presence-fired,
     majority vote with tie-ABSTAIN (label NULL kept, never guessed).
     Broadcast rules; the votes frame, not the corpus, carries the
     window decision."""
-    from dane_visual_feature_extraction_worker_spark.operators.labels import (
-        weak_label_vote,
+    d = _fan(_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", _tokens("text").alias("__t"))
-    return weak_label_vote(d, F.col("__t"), _WEAK_RULES, id_col="doc_id")
+    return labels.weak_label_vote(d, F.col("__t"), _WEAK_RULES, id_col="doc_id")
 
 
 ORACLES["weak_labels"] = r"""
@@ -7644,19 +7062,15 @@ ORACLES["weak_labels"] = r"""
            mx AS n_votes, CAST(tot AS BIGINT) AS n_rules_hit
     FROM win WHERE rn = 1
 """
-QUERIES["weak_labels"] = weak_labels_q
 
 
-def minhash_calibration_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash sketch calibration (operators/dedup.minhash_calibration):
     per LSH candidate pair, the 8-seed agreement estimate next to the
     exact shingle Jaccard — integer DIV for the exact ratio (a double
     divide can round across the floor boundary; integer DIV cannot)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_calibration,
-    )
-
-    return minhash_calibration(_fan(_documents(spark, sf_dir), "doc_id"))
+    return dedup.minhash_calibration(_fan(_documents(spark, sf_dir), "doc_id"))
 
 
 ORACLES["minhash_calibration"] = ORACLES["near_dup_clusters"].split(
@@ -7689,10 +7103,10 @@ ORACLES["minhash_calibration"] = ORACLES["near_dup_clusters"].split(
     JOIN szs sa ON sa.doc_id = g.doc_a
     JOIN szs sb ON sb.doc_id = g.doc_b
 """
-QUERIES["minhash_calibration"] = minhash_calibration_q
 
 
-def woe_encoding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def woe_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weight-of-evidence encoding of the decile-bucketed value column
     against the purchase label: WOE_b = ln(pos_b/POS) - ln(neg_b/NEG),
     decomposed into FOUR logs of bare integers in micro-nats (the
@@ -7701,12 +7115,8 @@ def woe_encoding_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantile_bucketize (broadcast thresholds, corpus never shuffles)
     with one 10-row rollup; the class totals ride a window over that
     10-row frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        quantile_bucketize,
-    )
-
     e = _events(spark, sf_dir)
-    b = quantile_bucketize(
+    b = encoding.quantile_bucketize(
         e, value="value", n_buckets=10, keys=("event_id", "event_type")
     )
     lab = (F.col("event_type") == "purchase").cast("int")
@@ -7761,23 +7171,19 @@ ORACLES["woe_encoding"] = f"""
                 AS DOUBLE) / 1e6 AS woe
     FROM cells
 """
-QUERIES["woe_encoding"] = woe_encoding_q
 
 
-def ann_recall_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ann_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query recall@5 of the sign-LSH ANN vs exact brute force
     (operators/similarity.lsh_recall_report) over queries vec_id 0-7:
     the vector-side calibration sibling of minhash_calibration — the
     measured recall that justifies the n_bits config."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        lsh_recall_report,
-    )
-
     e = _embeddings(spark, sf_dir)
     queries = e.where(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    return lsh_recall_report(e, queries, k=5, n_bits=_ANN_BITS)
+    return similarity.lsh_recall_report(e, queries, k=5, n_bits=_ANN_BITS)
 
 
 _COSF = (
@@ -7821,10 +7227,10 @@ ORACLES["ann_recall_report"] = f"""
              / 1e6 AS recall
     FROM ne LEFT JOIN na USING (qid) LEFT JOIN nh USING (qid)
 """
-QUERIES["ann_recall_report"] = ann_recall_report_q
 
 
-def bpe_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE-style merge training (operators/bpe): 3 rounds of
     corpus-top-pair + greedy left-to-right merge over word tokens —
     the word2phrase / tokenizer-training primitive.  Spark's merge is a
@@ -7834,19 +7240,12 @@ def bpe_merges_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1st, 3rd, ... merge), so the gate PROVES the fold implements
     greedy semantics.  One scalar collect per round (the Lloyd / CC
     precedent)."""
-    from dane_visual_feature_extraction_worker_spark.operators.bpe import (
-        bpe_merge_rounds,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
     d = (
         _fan(_documents(spark, sf_dir), "doc_id")
-        .select("doc_id", _tokens("text").alias("toks"))
+        .select("doc_id", textstats._tokens("text").alias("toks"))
         .where(F.size("toks") > 0)
     )
-    merged, _ = bpe_merge_rounds(d, rounds=3, id_col="doc_id")
+    merged, _ = bpe.bpe_merge_rounds(d, rounds=3, id_col="doc_id")
     return merged.select(
         "doc_id",
         F.size("toks").cast("bigint").alias("n_tokens"),
@@ -7917,21 +7316,19 @@ ORACLES["bpe_merges"] = (
     FROM t3 GROUP BY doc_id
 """
 )
-QUERIES["bpe_merges"] = bpe_merges_q
 
 
-def winnow_fingerprints_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS winnowing fingerprints (operators/dedup.winnow_fingerprints,
     k=3 grams, window w=4): positional local fingerprinting — any
     shared run of >= w+k-1 tokens between two docs shares a selected
     fingerprint, the guarantee whole-document MinHash can't give.
     Selection = window min of struct(hash, -pos): the rightmost-tie
     MOSS rule rides the struct ordering, one exchange, all codegen."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        winnow_fingerprints,
+    return dedup.winnow_fingerprints(
+        _fan(_documents(spark, sf_dir), "doc_id"), k=3, w=4
     )
-
-    return winnow_fingerprints(_fan(_documents(spark, sf_dir), "doc_id"), k=3, w=4)
 
 
 ORACLES["winnow_fingerprints"] = (
@@ -7966,10 +7363,10 @@ ORACLES["winnow_fingerprints"] = (
     FROM sel
 """
 )
-QUERIES["winnow_fingerprints"] = winnow_fingerprints_q
 
 
-def near_dup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def near_dup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental near-dup (operators/dedup.near_dup_index_build /
     near_dup_probe): docs with doc_id % 7 == 3 play the daily-ingest
     delta, the rest the already-indexed corpus.  First invocation
@@ -7979,21 +7376,12 @@ def near_dup_incremental_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle/minhash work is never recomputed.  The oracle proves the
     probe emits exactly the pair set a full-corpus LSH run would emit
     for pairs touching the delta."""
-    import hashlib
-    import os
-    import tempfile
-
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        near_dup_index_build,
-        near_dup_probe,
-    )
-
     d = _fan(_documents(spark, sf_dir), "doc_id")
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"graft_nddx_{tag}")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        near_dup_index_build(d.where(F.col("doc_id") % 7 != 3), path)
-    return near_dup_probe(d.where(F.col("doc_id") % 7 == 3), path)
+        dedup.near_dup_index_build(d.where(F.col("doc_id") % 7 != 3), path)
+    return dedup.near_dup_probe(d.where(F.col("doc_id") % 7 == 3), path)
 
 
 ORACLES["near_dup_incremental"] = f"""
@@ -8002,10 +7390,10 @@ ORACLES["near_dup_incremental"] = f"""
     FROM pairs
     WHERE doc_a % 7 = 3 OR doc_b % 7 = 3
 """
-QUERIES["near_dup_incremental"] = near_dup_incremental_q
 
 
-def shared_passage_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def shared_passage_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MOSS join (operators/dedup.shared_passage_pairs): winnowing
     fingerprints equi-joined across documents → (doc_a, doc_b,
     n_shared) pairs ranked by distinct shared fingerprints.  Finds
@@ -8013,11 +7401,7 @@ def shared_passage_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a fingerprint) that whole-document MinHash structurally misses;
     max_df=20 drops corpus-wide boilerplate fingerprints BEFORE the
     self-join — the quadratic-hot-key guard."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        shared_passage_pairs,
-    )
-
-    return shared_passage_pairs(
+    return dedup.shared_passage_pairs(
         _fan(_documents(spark, sf_dir), "doc_id"), k=3, w=4, min_shared=2, max_df=20
     )
 
@@ -8035,37 +7419,30 @@ ORACLES["shared_passage_pairs"] = f"""
     GROUP BY 1, 2
     HAVING count(*) >= 2
 """
-QUERIES["shared_passage_pairs"] = shared_passage_pairs_q
 
 
-def pq_codes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization codes (operators/similarity.pq_codes): 64
     float32 dims → 4 subspace codes against the deterministic
     16-seed-vector codebook (the ivf_ann seed convention).  All
     codegen: codebook as plan literals, per-subspace squared-L2 folds,
     argmin via array_min over (dist, cid) structs — no join, no
     shuffle, no Python."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        pq_codes,
-    )
-
-    return pq_codes(_fan(_embeddings(spark, sf_dir), "vec_id"))
+    return similarity.pq_codes(_fan(_embeddings(spark, sf_dir), "vec_id"))
 
 
-def pq_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric-distance PQ top-5 (operators/similarity.pq_adc_topk)
     vs the vec_id=0 query: driver-side ||q_s − c_s||² lookup tables as
     literals, approx dist = the EXPLICIT add chain lut0[c0]+…+lut3[c3]
     (fixed order — no group-sum reassociation), TakeOrderedAndProject.
     The 64×-compressed scan shape that replaces the memory-bound float
     scan at corpus scale."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        pq_adc_topk,
-    )
-
     emb = _fan(_embeddings(spark, sf_dir), "vec_id")
     q = [float(x) for x in emb.where(F.col("vec_id") == 0).first()["embedding"]]
-    return pq_adc_topk(emb, q, k=5)
+    return similarity.pq_adc_topk(emb, q, k=5)
 
 
 _PQ_SQDIST = """list_sum([
@@ -8124,22 +7501,17 @@ ORACLES["pq_topk"] = f"""
     SELECT vec_id, floor(dist * 1000000.0) / 1000000.0 AS adc_dist
     FROM adc ORDER BY dist, vec_id LIMIT 5
 """
-QUERIES["pq_codes"] = pq_codes_q
-QUERIES["pq_topk"] = pq_topk_q
 
 
-def pq_recall_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ quantization-loss calibration (operators/similarity.
     pq_recall_report): per query vec_id 0-3, recall@5 of the ADC code
     scan vs exact squared-L2.  Both sides are unioned
     TakeOrderedAndProject branches with the query as an exact literal
     — no exchange, no corpus-wide window; the codes frame is built
     once and scoped-persisted across the Q branches."""
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        pq_recall_report,
-    )
-
-    return pq_recall_report(_embeddings(spark, sf_dir))
+    return similarity.pq_recall_report(_embeddings(spark, sf_dir))
 
 
 ORACLES["pq_recall_report"] = f"""
@@ -8199,10 +7571,10 @@ ORACLES["pq_recall_report"] = f"""
              / 1e6 AS recall
     FROM ne LEFT JOIN na USING (qid) LEFT JOIN nh USING (qid)
 """
-QUERIES["pq_recall_report"] = pq_recall_report_q
 
 
-def streaming_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def streaming_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental near-dup (streaming/dedup.
     near_dup_probe_sink): docs with doc_id % 7 == 3 arrive as a file
     stream in 4-file micro-batches (maxFilesPerTrigger=1); each batch
@@ -8210,17 +7582,10 @@ def streaming_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, so cross-batch delta pairs are found through the index — the
     oracle (full-corpus LSH pairs touching the delta) passes ONLY if
     the cross-batch path works."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        near_dup_index_build,
-    )
-    from dane_visual_feature_extraction_worker_spark.streaming.dedup import (
-        near_dup_probe_sink,
-    )
-
     d = _documents(spark, sf_dir)
     tmp = _fresh_stream_tmp("st_nd_")
     index_dir, delta_dir = f"{tmp}/index", f"{tmp}/delta"
-    near_dup_index_build(d.where(F.col("doc_id") % 7 != 3), index_dir)
+    dedup.near_dup_index_build(d.where(F.col("doc_id") % 7 != 3), index_dir)
     delta = d.where(F.col("doc_id") % 7 == 3)
     delta.repartition(4).write.mode("overwrite").parquet(delta_dir)
     stream = (
@@ -8229,7 +7594,7 @@ def streaming_near_dup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(delta_dir)
     )
     sink_dir, ckpt_dir = f"{tmp}/sink", f"{tmp}/ckpt"
-    near_dup_probe_sink(stream, index_dir, sink_dir, ckpt_dir)
+    stream_dedup.near_dup_probe_sink(stream, index_dir, sink_dir, ckpt_dir)
     return spark.read.parquet(sink_dir).select("doc_a", "doc_b").distinct()
 
 
@@ -8238,10 +7603,10 @@ ORACLES["streaming_near_dup"] = f"""
     SELECT doc_a, doc_b FROM pairs
     WHERE doc_a % 7 = 3 OR doc_b % 7 = 3
 """
-QUERIES["streaming_near_dup"] = streaming_near_dup_q
 
 
-def hybrid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hybrid_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid lexical+semantic retrieval (operators/retrieval.rrf_fuse):
     reciprocal-rank fusion of the BM25 top-20 (terms scan/merge/vector)
     and the cosine top-20 vs the vec_id=0 query vector — doc_id and
@@ -8249,25 +7614,16 @@ def hybrid_search_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     together). rrf_micro = Σ 1e9 DIV (60 + rank): pure-integer fusion
     over two k-row candidate lists; corpus cost is the two upstream
     retrieval plans, fusion itself is corpus-size-independent."""
-    from dane_visual_feature_extraction_worker_spark.operators.retrieval import (
-        bm25_topk,
-        rrf_fuse,
+    d = _fan(_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        topk_cosine,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", _tokens("text").alias("__t"))
-    lex = bm25_topk(
+    lex = retrieval.bm25_topk(
         d, F.col("__t"), ["scan", "merge", "vector"], id_col="doc_id", k=20
     )
-    sem = topk_cosine(
+    sem = similarity.topk_cosine(
         _embeddings(spark, sf_dir), _query_vec(spark, sf_dir), k=20
     )
-    return rrf_fuse([(lex, "bm25", "doc_id"), (sem, "cos", "vec_id")], k=10)
+    return retrieval.rrf_fuse([(lex, "bm25", "doc_id"), (sem, "cos", "vec_id")], k=10)
 
 
 ORACLES["hybrid_search"] = r"""
@@ -8333,19 +7689,15 @@ ORACLES["hybrid_search"] = r"""
     FROM fused GROUP BY id
     ORDER BY rrf_micro DESC, id LIMIT 10
 """
-QUERIES["hybrid_search"] = hybrid_search_q
 
 
-def ks_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KS distance on event value (cents) between the first
     and second time-half (operators/stats.ks_drift): exact-integer
     ECDF numerators maximized over the distinct-cent grid, one final
     floored divide — the numeric-CDF drift twin of psi_drift."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        ks_drift,
-    )
-
-    return ks_drift(_events(spark, sf_dir), ts="ts", value="value")
+    return stats.ks_drift(_events(spark, sf_dir), ts="ts", value="value")
 
 
 ORACLES["ks_drift"] = """
@@ -8379,20 +7731,16 @@ ORACLES["ks_drift"] = """
                  * 1000000.0) / 1000000.0 AS ks
     FROM run GROUP BY n1, n2
 """
-QUERIES["ks_drift"] = ks_drift_q
 
 
-def chi2_select_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def chi2_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-squared categorical feature screening (operators/stats.
     chi2_select): per event_type, the 2x2 chi2 between "user exhibits
     the type" and the label "user has an error event", over the user
     population — exact integer contingency, decimal(38,0) products,
     one floored divide; zero margins emit NULL."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        chi2_select,
-    )
-
-    return chi2_select(
+    return stats.chi2_select(
         _events(spark, sf_dir),
         entity="user_id",
         category="event_type",
@@ -8438,22 +7786,17 @@ ORACLES["chi2_select"] = """
            END AS chi2
     FROM j
 """
-QUERIES["chi2_select"] = chi2_select_q
 
 
-def hashed_bow_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hashed_bow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hashed bag-of-words (operators/encoding.hashed_bow):
     256 signed md5 buckets per document, exact int64 signed counts —
     sparse (doc_id, bucket, v) triplets with no vocabulary build."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        hashed_bow,
+    d = _fan(_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", _tokens("text").alias("__t"))
-    return hashed_bow(d, F.col("__t"), id_col="doc_id", n_buckets=256)
+    return encoding.hashed_bow(d, F.col("__t"), id_col="doc_id", n_buckets=256)
 
 
 ORACLES["hashed_bow"] = r"""
@@ -8479,20 +7822,16 @@ ORACLES["hashed_bow"] = r"""
                          THEN 1 ELSE -1 END) AS BIGINT) AS v
     FROM h GROUP BY 1, 2
 """
-QUERIES["hashed_bow"] = hashed_bow_q
 
 
-def mutual_info_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual information feature screening (operators/stats.
     mutual_info_select): per event_type, the 2x2 MI in micro-nats
     between "user exhibits the type" and the error-user label — the
     information-theoretic twin of chi2_select, same single-exchange
     contingency core, psi_drift's bare-integer ln decomposition."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        mutual_info_select,
-    )
-
-    return mutual_info_select(
+    return stats.mutual_info_select(
         _events(spark, sf_dir),
         entity="user_id",
         category="event_type",
@@ -8555,22 +7894,18 @@ ORACLES["mutual_info"] = """
            CAST(greatest(s, 0) // n AS DOUBLE) / 1000000.0 AS mi_nats
     FROM terms
 """
-QUERIES["mutual_info"] = mutual_info_q
 
 
-def auc_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def auc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC-AUC (operators/stats.auc_exact) of the first embedding
     component (floored micros) as a scorer for the label-0 class — the
     Mann-Whitney rank-sum computed from the score HISTOGRAM (one
     exchange + domain-bounded window), never a corpus sort."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        auc_exact,
-    )
-
     e = _embeddings(spark, sf_dir)
     score = F.floor(F.col("embedding")[0].cast("double") * 1e6)
     label = F.when(F.col("label") == 0, 1).otherwise(0)
-    return auc_exact(e, score, label)
+    return stats.auc_exact(e, score, label)
 
 
 ORACLES["auc_eval"] = """
@@ -8606,27 +7941,21 @@ ORACLES["auc_eval"] = """
            END AS auc
     FROM tot
 """
-QUERIES["auc_eval"] = auc_eval_q
 
 
-def ndcg_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NDCG@10 of the BM25 ranking against graded term-overlap
     relevance (operators/retrieval.ndcg_at_k): rel = distinct query
     terms present per doc; integer micro-unit DCG/IDCG with log2 of
     bare integer ranks; ideal ranking via corpus k-row TakeOrdered."""
-    from dane_visual_feature_extraction_worker_spark.operators.retrieval import (
-        bm25_topk,
-        ndcg_at_k,
+    d = _fan(_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", _tokens("text").alias("__t"))
-    ranked = bm25_topk(
+    ranked = retrieval.bm25_topk(
         d, F.col("__t"), ["scan", "merge", "vector"], id_col="doc_id", k=10
     )
-    return ndcg_at_k(
+    return retrieval.ndcg_at_k(
         d,
         F.col("__t"),
         ["scan", "merge", "vector"],
@@ -8708,19 +8037,15 @@ ORACLES["ndcg_eval"] = r"""
            END AS ndcg
     FROM dcg d, idcg i
 """
-QUERIES["ndcg_eval"] = ndcg_eval_q
 
 
-def packing_stats_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def packing_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Packing-efficiency report (operators/packing.packing_stats) for
     the sequence_pack layout at max_tokens=256, 16 shards: per-shard
     docs/tokens/sequences and the integer-micro fill ratio — ceil
     arithmetic from the per-shard token SUM only, never the offsets."""
-    from dane_visual_feature_extraction_worker_spark.operators.packing import (
-        packing_stats,
-    )
-
-    return packing_stats(
+    return packing.packing_stats(
         _documents(spark, sf_dir), max_tokens=256, n_shards=16
     )
 
@@ -8757,19 +8082,15 @@ ORACLES["packing_stats"] = r"""
            END AS fill
     FROM per
 """
-QUERIES["packing_stats"] = packing_stats_q
 
 
-def burst_windows_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def burst_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user hourly burst flags (operators/windows.burst_windows):
     integer cross-multiplied rate-vs-trailing-24h comparison over the
     (user, window) histogram; the RANGE window reuses the count
     aggregation's partitioning — one corpus exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        burst_windows,
-    )
-
-    return burst_windows(
+    return windows.burst_windows(
         _events(spark, sf_dir),
         entity="user_id",
         ts="ts",
@@ -8797,10 +8118,10 @@ ORACLES["burst_windows"] = """
            (trailing_sum > 0 AND cnt * 24 > 3 * trailing_sum) AS is_burst
     FROM run
 """
-QUERIES["burst_windows"] = burst_windows_q
 
 
-def jsonl_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def jsonl_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSONL ingestion — the lingua-franca training-data interchange
     format: documents serialized to JSON-lines executor-side
     (native to_json + text sink, no driver materialization), read back
@@ -8810,11 +8131,6 @@ def jsonl_ingest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the documents table — the gate proves parse-roundtrip fidelity
     (nulls dropped by to_json and restored as NULL, JSON string
     escaping of newlines/quotes/unicode)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     tag = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
     out_dir = os.path.join(tempfile.gettempdir(), f"graft_jsonl_{tag}")
     shutil.rmtree(out_dir, ignore_errors=True)
@@ -8848,10 +8164,10 @@ ORACLES["jsonl_ingest"] = """
            md5(coalesce(text, '')) AS text_md5
     FROM documents
 """
-QUERIES["jsonl_ingest"] = jsonl_ingest_q
 
 
-def class_weights_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def class_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverse-frequency class weights from the embeddings label
     histogram — the standard imbalance correction handed to a trainer:
     w_k = N / (K·n_k) in exact integer micros (N·1e6 DIV (K·n_k)).
@@ -8895,10 +8211,10 @@ ORACLES["class_weights"] = """
            CAST((nn * 1000000) // (k * n) AS DOUBLE) / 1000000.0 AS weight
     FROM tot
 """
-QUERIES["class_weights"] = class_weights_q
 
 
-def sql_lang_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def sql_lang_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL API surface as a first-class entry: this key is
     implemented ENTIRELY via spark.sql over a registered temp view —
     Catalyst compiles it to the identical plan a DataFrame formulation
@@ -8946,27 +8262,19 @@ ORACLES["sql_lang_report"] = """
            max(CASE WHEN rk = 1 THEN source END) AS top_source
     FROM ranked GROUP BY lang
 """
-QUERIES["sql_lang_report"] = sql_lang_report_q
 
 
-def jl_project_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def jl_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JL Rademacher projection 64→8 dims (operators/linalg.jl_project):
     explicit fixed-order add chains over the md5-parity sign matrix,
     1e-6-floored int64 micros, zero exchanges — the bandwidth-cutting
     first-pass scan for ANN/clustering at corpus scale."""
-    from dane_visual_feature_extraction_worker_spark.operators.linalg import (
-        jl_project,
-    )
-
-    return jl_project(_embeddings(spark, sf_dir), out_dims=8, in_dims=64)
+    return linalg.jl_project(_embeddings(spark, sf_dir), out_dims=8, in_dims=64)
 
 
 def _jl_oracle() -> str:
-    from dane_visual_feature_extraction_worker_spark.operators.similarity import (
-        hyperplane_signs,
-    )
-
-    signs = hyperplane_signs(8, 64, seed="jl")
+    signs = similarity.hyperplane_signs(8, 64, seed="jl")
     sels = []
     for j in range(8):
         terms = " + ".join(
@@ -8981,10 +8289,10 @@ def _jl_oracle() -> str:
 
 
 ORACLES["jl_project"] = _jl_oracle()
-QUERIES["jl_project"] = jl_project_q
 
 
-def dedup_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dedup_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivor SELECTION policy over near-dup clusters: keep the BEST
     doc per cluster — max quality, then max n_tokens, then min doc_id —
     not the first-seen (dedup_first) or the id-min (the CC label).
@@ -8993,19 +8301,11 @@ def dedup_best_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_score and reduces with ONE map-side-combined
     max(struct(quality, n_tokens, -doc_id)) per cluster — lexicographic
     struct max, no window sort over the corpus."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        connected_components,
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        quality_score as _qs,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    clusters = connected_components(
-        minhash_lsh_pairs(docs), docs.select("doc_id")
+    clusters = dedup.connected_components(
+        dedup.minhash_lsh_pairs(docs), docs.select("doc_id")
     )
-    q = _qs(docs).select(
+    q = textstats.quality_score(docs).select(
         "doc_id",
         F.round(F.col("quality") * 1e6).cast("bigint").alias("__qm"),
         F.col("n_tokens"),
@@ -9100,26 +8400,20 @@ ORACLES["dedup_best"] = r"""
            CAST(qm AS DOUBLE) / 1000000.0 AS quality, n_docs
     FROM ranked WHERE rk = 1
 """
-QUERIES["dedup_best"] = dedup_best_q
 
 
-def pr_at_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pr_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Precision@10 / Recall@10 of the BM25 ranking against binary
     term-overlap relevance (operators/retrieval.precision_recall_at_k):
     exact counts, integer micro quotients, one output row."""
-    from dane_visual_feature_extraction_worker_spark.operators.retrieval import (
-        bm25_topk,
-        precision_recall_at_k,
+    d = _documents(spark, sf_dir).select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _documents(spark, sf_dir).select("doc_id", _tokens("text").alias("__t"))
-    ranked = bm25_topk(
+    ranked = retrieval.bm25_topk(
         d, F.col("__t"), ["scan", "merge", "vector"], id_col="doc_id", k=10
     )
-    return precision_recall_at_k(
+    return retrieval.precision_recall_at_k(
         d, F.col("__t"), ["scan", "merge", "vector"], ranked, k=10
     )
 
@@ -9183,22 +8477,18 @@ ORACLES["pr_at_k"] = r"""
            END AS r_at_k
     FROM h, nrel
 """
-QUERIES["pr_at_k"] = pr_at_k_q
 
 
-def bloom_export_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bloom_export(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Portable Bloom filter of the documents' text digests
     (operators/sketches.bloom_export): 1024 bits in 32 int64 words,
     3 md5-slice hashes per key, merged with ONE map-side-combined
     bit_or — the cross-system membership interchange sketch."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        bloom_export,
-    )
-
     d = _documents(spark, sf_dir).select(
         F.md5(F.coalesce(F.col("text"), F.lit(""))).alias("__k")
     )
-    return bloom_export(d, F.col("__k"), m_bits=1024, k=3)
+    return sketches.bloom_export(d, F.col("__k"), m_bits=1024, k=3)
 
 
 ORACLES["bloom_export"] = """
@@ -9241,18 +8531,14 @@ ORACLES["bloom_export"] = """
            n.n_keys
     FROM pos, n GROUP BY 1, 3
 """
-QUERIES["bloom_export"] = bloom_export_q
 
 
-def lifetime_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def lifetime_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user lifetime block (operators/funnel.lifetime_features):
     first/last epoch-micros, integer tenure days, distinct active
     days, event count — ONE exchange on the entity key."""
-    from dane_visual_feature_extraction_worker_spark.operators.funnel import (
-        lifetime_features,
-    )
-
-    return lifetime_features(_events(spark, sf_dir))
+    return funnel.lifetime_features(_events(spark, sf_dir))
 
 
 ORACLES["lifetime_features"] = """
@@ -9266,18 +8552,14 @@ ORACLES["lifetime_features"] = """
            CAST(count(*) AS BIGINT) AS n_events
     FROM events GROUP BY user_id
 """
-QUERIES["lifetime_features"] = lifetime_features_q
 
 
-def ngram_novelty_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc 3-gram novelty (operators/textstats.ngram_novelty): the
     share of a doc's distinct shingles appearing in no other document —
     integer micro quotient over the standard inverted-index shape."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        ngram_novelty,
-    )
-
-    return ngram_novelty(_fan(_documents(spark, sf_dir), "doc_id"))
+    return textstats.ngram_novelty(_fan(_documents(spark, sf_dir), "doc_id"))
 
 
 ORACLES["ngram_novelty"] = r"""
@@ -9304,21 +8586,17 @@ ORACLES["ngram_novelty"] = r"""
              AS novelty
     FROM per
 """
-QUERIES["ngram_novelty"] = ngram_novelty_q
 
 
-def pit_leak_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pit_leak_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temporal-leakage audit (operators/integrity.pit_leak_audit): the
     engine re-derives each sampled anchor's PIT running count/cents-sum
     from the raw <= predicate via a join and certifies it equals the
     windowed path (n_*_leaks must be 0). The oracle computes the
     windowed path only — a hash match proves the definitional join
     agrees with an independent engine's window semantics."""
-    from dane_visual_feature_extraction_worker_spark.operators.integrity import (
-        pit_leak_audit,
-    )
-
-    return pit_leak_audit(_events(spark, sf_dir))
+    return integrity.pit_leak_audit(_events(spark, sf_dir))
 
 
 ORACLES["pit_leak_audit"] = """
@@ -9344,23 +8622,19 @@ ORACLES["pit_leak_audit"] = """
     FROM a WHERE event_id % 16 = 0
     GROUP BY user_id
 """
-QUERIES["pit_leak_audit"] = pit_leak_audit_q
 
 
-def rolling_autocorr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rolling_autocorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-16 lag-1 autocorrelation (operators/windows.
     rolling_autocorr): five exact int64 sums folded from the bounded
     frame, one sqrt/divide in double, floor-truncated to micros. The
     oracle replays the pair sums via lag + 14-PRECEDING window sums —
     an independent formulation of the same consecutive-pair algebra."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        rolling_autocorr,
-    )
-
     e = _events(spark, sf_dir).where(
         F.col("ts").isNotNull() & F.col("value").isNotNull()
     )
-    return rolling_autocorr(e, k=16)
+    return windows.rolling_autocorr(e, k=16)
 
 
 ORACLES["rolling_autocorr"] = """
@@ -9401,19 +8675,15 @@ ORACLES["rolling_autocorr"] = """
            END AS autocorr
     FROM sums
 """
-QUERIES["rolling_autocorr"] = rolling_autocorr_q
 
 
-def recency_gaps_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def recency_gaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type recency (operators/recency.last_seen_gaps): micros since
     the entity's most recent STRICTLY PRECEDING row of each event type
     — K conditional running maxes over ONE window spec (one exchange,
     one sort), NULL before first sighting."""
-    from dane_visual_feature_extraction_worker_spark.operators.recency import (
-        last_seen_gaps,
-    )
-
-    return last_seen_gaps(
+    return recency.last_seen_gaps(
         _events(spark, sf_dir),
         types=("click", "view", "purchase", "signup", "error"),
     )
@@ -9436,19 +8706,15 @@ ORACLES["recency_gaps"] = """
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
 """
-QUERIES["recency_gaps"] = recency_gaps_q
 
 
-def response_latency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def response_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trigger->response turnaround (operators/recency.response_latency):
     for each click, micros since the user's most recent strictly
     preceding view — the user->assistant latency feature on transcript
     schemas. Same one-exchange conditional-window plan."""
-    from dane_visual_feature_extraction_worker_spark.operators.recency import (
-        response_latency,
-    )
-
-    return response_latency(
+    return recency.response_latency(
         _events(spark, sf_dir), trigger="view", response="click"
     )
 
@@ -9463,21 +8729,17 @@ ORACLES["response_latency"] = """
                    ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
     ) WHERE event_type = 'click'
 """
-QUERIES["response_latency"] = response_latency_q
 
 
-def hll_distinct_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic HyperLogLog distinct sketch + exact calibration
     (operators/sketches.hll_distinct): md5-keyed 256-register HLL whose
     registers, scaled-integer harmonic sum, AND final estimate replay
     bit-for-bit in any SQL engine — the oracle rebuilds the whole
     sketch. The only floats are one final division by an int64 and the
     micro-nat-floored linear-counting branch (the PSI/LM discipline)."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        hll_distinct,
-    )
-
-    return hll_distinct(_events(spark, sf_dir))
+    return sketches.hll_distinct(_events(spark, sf_dir))
 
 
 def _hll_oracle() -> str:
@@ -9532,21 +8794,17 @@ def _hll_oracle() -> str:
 
 
 ORACLES["hll_distinct"] = _hll_oracle()
-QUERIES["hll_distinct"] = hll_distinct_q
 
 
-def logbucket_quantiles_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def logbucket_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DDSketch-style γ=2 quantile sketch per event type
     (operators/sketches.logbucket_quantiles): power-of-two cents
     buckets via exact bit_length (length(bin(x)) — no float log), the
     q-quantile bucket found at integer rank ceil(q·n) computed as
     (q_micro·n + 999999) div 1e6 — every column integer-exact except
     the q label itself."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        logbucket_quantiles,
-    )
-
-    return logbucket_quantiles(_events(spark, sf_dir))
+    return sketches.logbucket_quantiles(_events(spark, sf_dir))
 
 
 ORACLES["logbucket_quantiles"] = """
@@ -9587,19 +8845,15 @@ ORACLES["logbucket_quantiles"] = """
                 AS BIGINT) AS hi_cents
     FROM hit
 """
-QUERIES["logbucket_quantiles"] = logbucket_quantiles_q
 
 
-def role_alternation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def role_alternation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transcript structural validation (operators/turns.role_alternation):
     per-conversation repeat-speaker / off-role / first-speaker checks —
     the curation gate in front of sft_pairs. One exchange: the lag
     window and the per-conv aggregation share hash(conv_id)."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        role_alternation,
-    )
-
-    return role_alternation(
+    return turns.role_alternation(
         _tr_proj_lean(spark, sf_dir), order=("ts", "turn_ord")
     )
 
@@ -9630,19 +8884,15 @@ ORACLES["role_alternation"] = f"""
             AND first_role = 'user') AS strict_alternation
     FROM agg
 """
-QUERIES["role_alternation"] = role_alternation_q
 
 
-def km_survival_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def km_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier retention curve over user lifetimes (operators/
     survival.km_survival): right-censored at the corpus cutoff
     (48 h horizon), micro-nat log-survival running sum — one corpus
     exchange (the per-user span rollup), then lifetime-table-sized."""
-    from dane_visual_feature_extraction_worker_spark.operators.survival import (
-        km_survival,
-    )
-
-    return km_survival(_events(spark, sf_dir), horizon_hours=48)
+    return survival.km_survival(_events(spark, sf_dir), horizon_hours=48)
 
 
 ORACLES["km_survival"] = """
@@ -9695,18 +8945,14 @@ ORACLES["km_survival"] = """
                      / 1e6 END AS survival
     FROM run
 """
-QUERIES["km_survival"] = km_survival_q
 
 
-def calibration_bins_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability diagram + per-bin Brier terms (operators/stats.
     calibration_bins) for the linear [0,1]-mapped first embedding
     component scoring the label-0 class — the calibration companion
     to auc_eval's ranking check; ONE map-side-combined 10-group agg."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        calibration_bins,
-    )
-
     e = _embeddings(spark, sf_dir)
     comp = F.col("embedding")[0].cast("double")
     s_micro = F.least(
@@ -9717,7 +8963,7 @@ def calibration_bins_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1_000_000),
     )
     label = F.when(F.col("label") == 0, 1).otherwise(0)
-    return calibration_bins(
+    return stats.calibration_bins(
         e.where(F.col("embedding").isNotNull() & F.col("label").isNotNull()),
         s_micro,
         label,
@@ -9757,18 +9003,14 @@ ORACLES["calibration_bins"] = """
              / 1e6 AS brier_term
     FROM g
 """
-QUERIES["calibration_bins"] = calibration_bins_q
 
 
-def ab_test_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ab_test_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion A/B readout (operators/stats.ab_conversion_report):
     md5-parity arm split, purchase conversion, pooled-z — one corpus
     exchange (per-user conversion flag), O(1) report."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        ab_conversion_report,
-    )
-
-    return ab_conversion_report(_events(spark, sf_dir))
+    return stats.ab_conversion_report(_events(spark, sf_dir))
 
 
 def _ab_oracle() -> str:
@@ -9825,22 +9067,17 @@ def _ab_oracle() -> str:
 
 
 ORACLES["ab_test_report"] = _ab_oracle()
-QUERIES["ab_test_report"] = ab_test_report_q
 
 
-def dq_expectations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectation audit (operators/dq): declarative rule
     counters over orders + customer in ONE aggregate pass per table,
     plus the orders→customer FK check (broadcast dimension keys) — the
     pre-feature contract gate; rule-count-sized output."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        expectations_report,
-        fk_violations,
-    )
-
     o = _read_parquet(spark, f"{sf_dir}/orders.parquet")
     c = _read_parquet(spark, f"{sf_dir}/customer.parquet")
-    r1 = expectations_report(
+    r1 = dq.expectations_report(
         o,
         {
             "totalprice_positive": F.col("o_totalprice") > 0,
@@ -9850,7 +9087,7 @@ def dq_expectations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         table="orders",
     )
-    r2 = expectations_report(
+    r2 = dq.expectations_report(
         c,
         {
             "acctbal_range": F.col("c_acctbal").between(-1000.0, 100000.0),
@@ -9858,7 +9095,7 @@ def dq_expectations_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         },
         table="customer",
     )
-    r3 = fk_violations(
+    r3 = dq.fk_violations(
         o, c, "o_custkey", "c_custkey", table="orders",
         rule="fk_custkey_resolves",
     )
@@ -9909,19 +9146,15 @@ ORACLES["dq_expectations"] = """
     UNION ALL
     SELECT 'orders', 'fk_custkey_resolves', n, f0 FROM fk
 """
-QUERIES["dq_expectations"] = dq_expectations_q
 
 
-def cluster_silhouette_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cluster_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-point simplified silhouette vs label centroids (operators/
     linalg.cluster_silhouette): exact int64 squared distances on the
     micro grid, codebook-sized centroid collect, zero-shuffle scoring
     scan — the clustering-quality feature over the embeddings table."""
-    from dane_visual_feature_extraction_worker_spark.operators.linalg import (
-        cluster_silhouette,
-    )
-
-    return cluster_silhouette(_embeddings(spark, sf_dir))
+    return linalg.cluster_silhouette(_embeddings(spark, sf_dir))
 
 
 ORACLES["cluster_silhouette"] = """
@@ -9963,22 +9196,18 @@ ORACLES["cluster_silhouette"] = """
                 ELSE 0.0 END AS silhouette
     FROM ab
 """
-QUERIES["cluster_silhouette"] = cluster_silhouette_q
 
 
-def rolling_percent_rank_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rolling_percent_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-16 PIT percentile rank of each value among the user's
     prior values (operators/windows.rolling_percent_rank): strictly-
     preceding bounded frame (zero leakage), exact integer rank ratio,
     one kernel-window exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.windows import (
-        rolling_percent_rank,
-    )
-
     e = _events(spark, sf_dir).where(
         F.col("value").isNotNull() & F.col("ts").isNotNull()
     )
-    return rolling_percent_rank(e, k=16)
+    return windows.rolling_percent_rank(e, k=16)
 
 
 ORACLES["rolling_percent_rank"] = """
@@ -10001,10 +9230,10 @@ ORACLES["rolling_percent_rank"] = """
              AS pct_rank_micro
     FROM fr
 """
-QUERIES["rolling_percent_rank"] = rolling_percent_rank_q
 
 
-def interval_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def interval_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user merged-interval union coverage (operators/intervals.
     coverage_stats): events become [s, s+30+(event_id%90)) second
     intervals; the gaps-and-islands sweep reports covered seconds,
@@ -10012,10 +9241,6 @@ def interval_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the reference's shot list, data_handling.py:114-129) before
     trusting containment features. ONE entity exchange, O(n) sweep,
     all-int64 math."""
-    from dane_visual_feature_extraction_worker_spark.operators.intervals import (
-        coverage_stats,
-    )
-
     e = _events(spark, sf_dir).where(F.col("ts").isNotNull())
     s = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 1000000")
     iv = e.select(
@@ -10024,7 +9249,7 @@ def interval_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         s.alias("s"),
         (s + F.lit(30) + F.col("event_id") % 90).alias("e"),
     )
-    return coverage_stats(
+    return intervals.coverage_stats(
         iv, entity="user_id", start="s", end="e", tiebreak="event_id"
     )
 
@@ -10051,10 +9276,10 @@ ORACLES["interval_coverage"] = """
            CAST(max(e) - min(s) AS BIGINT) AS span_seconds
     FROM sw GROUP BY user_id
 """
-QUERIES["interval_coverage"] = interval_coverage_q
 
 
-def regional_revenue_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q5 shape (local-supplier volume): region→nation dims and
     supplier broadcast, orders date-pruned at the scan, ONE big-big
     shuffle (lineitem x orders) hash-clustered on the uniform
@@ -10125,29 +9350,21 @@ ORACLES["regional_revenue"] = """
       AND o_orderdate < TIMESTAMP '1998-01-01 00:00:00'
     GROUP BY n_name
 """
-QUERIES["regional_revenue"] = regional_revenue_q
 
 
-def benford_dq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def benford_dq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford first-digit audit over o_totalprice (operators/dq.
     benford_report): exact string-of-int64-cents digit extraction,
     inlined micro-floored expected shares (no runtime ln), ONE
     9-group map-side-combined aggregate."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        benford_report,
-    )
-
     o = _read_parquet(spark, f"{sf_dir}/orders.parquet")
-    return benford_report(o, "o_totalprice")
+    return dq.benford_report(o, "o_totalprice")
 
 
 def _benford_oracle() -> str:
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        BENFORD_EXPECTED_MICRO,
-    )
-
     case = " ".join(
-        f"WHEN {d} THEN {m}" for d, m in BENFORD_EXPECTED_MICRO.items()
+        f"WHEN {d} THEN {m}" for d, m in dq.BENFORD_EXPECTED_MICRO.items()
     )
     return f"""
     WITH c AS (
@@ -10184,23 +9401,19 @@ def _benford_oracle() -> str:
 
 
 ORACLES["benford_dq"] = _benford_oracle()
-QUERIES["benford_dq"] = benford_dq_q
 
 
-def cramers_v_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cramér's V between lang and source over documents
     (operators/stats.cramers_v_report): r×c categorical association
     with micro-floored integer chi2 terms (order-independent sum);
     ONE corpus groupBy exchange, margins from windows over the
     KB-sized cells frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        cramers_v_report,
-    )
-
     d = _documents(spark, sf_dir).where(
         F.col("lang").isNotNull() & F.col("source").isNotNull()
     )
-    return cramers_v_report(d, "lang", "source")
+    return stats.cramers_v_report(d, "lang", "source")
 
 
 ORACLES["cramers_v"] = """
@@ -10238,20 +9451,16 @@ ORACLES["cramers_v"] = """
            END AS cramers_v
     FROM t
 """
-QUERIES["cramers_v"] = cramers_v_q
 
 
-def gini_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def gini_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Gini coefficient of per-user event concentration
     (operators/stats.gini_report): pair-difference mass from the
     count-value histogram in O(|levels|), decimal(38,0) exact terms,
     ONE entity exchange + a domain-bounded histogram rollup."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        gini_report,
-    )
-
     e = _read_parquet(spark, f"{sf_dir}/events.parquet")
-    return gini_report(e, entity="user_id")
+    return stats.gini_report(e, entity="user_id")
 
 
 ORACLES["gini_activity"] = """
@@ -10287,21 +9496,17 @@ ORACLES["gini_activity"] = """
            END AS gini
     FROM one
 """
-QUERIES["gini_activity"] = gini_q
 
 
-def k_anonymity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity audit over documents with QI = (lang, source,
     n_chars DIV 256) (operators/dq.k_anonymity_report): equivalence-
     class size histogram flagging classes below k=5; ONE map-side-
     combined QI groupBy, class-size rollup over the distinct-QI
     frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        k_anonymity_report,
-    )
-
     d = _documents(spark, sf_dir)
-    return k_anonymity_report(
+    return dq.k_anonymity_report(
         d,
         {
             "lang": F.col("lang"),
@@ -10324,19 +9529,15 @@ ORACLES["k_anonymity"] = """
            s < 5 AS at_risk
     FROM g GROUP BY s
 """
-QUERIES["k_anonymity"] = k_anonymity_q
 
 
-def zipf_slope_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Zipf's-law OLS slope over the top-1000 corpus terms
     (operators/textstats.zipf_slope): micro-floored int64 ln moments
     (exact order-independent sums), reusing vocab_topk's one-explode
     TakeOrdered plan; regression runs over the k-row frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        zipf_slope,
-    )
-
-    return zipf_slope(_documents(spark, sf_dir), k=1000)
+    return textstats.zipf_slope(_documents(spark, sf_dir), k=1000)
 
 
 ORACLES["zipf_slope"] = r"""
@@ -10382,19 +9583,15 @@ ORACLES["zipf_slope"] = r"""
                  * 1000000.0) / 1000000.0 AS intercept_ln
     FROM s
 """
-QUERIES["zipf_slope"] = zipf_slope_q
 
 
-def vocab_growth_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heaps'-law vocabulary-growth curve over 20 doc_id buckets
     (operators/textstats.vocab_growth): term is NEW in the bucket of
     its min doc_id; one spine groupBy + ONE vocabulary-sized
     min-bucket aggregate; running sums over the 20-row frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        vocab_growth,
-    )
-
-    return vocab_growth(_documents(spark, sf_dir), n_buckets=20)
+    return textstats.vocab_growth(_documents(spark, sf_dir), n_buckets=20)
 
 
 ORACLES["vocab_growth"] = r"""
@@ -10433,20 +9630,16 @@ ORACLES["vocab_growth"] = r"""
            ) AS BIGINT) AS vocab_cum
     FROM j
 """
-QUERIES["vocab_growth"] = vocab_growth_q
 
 
-def transition_entropy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def transition_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conditional entropy per source state + count-weighted entropy
     rate of the user event chain (operators/stats.transition_entropy):
     the agent-loop degeneracy detector. Same ONE entity exchange as
     markov_transitions; all micro-nat int64 arithmetic, integer DIV
     (never a double), windows over the |states|-row frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        transition_entropy,
-    )
-
-    return transition_entropy(
+    return stats.transition_entropy(
         _events(spark, sf_dir),
         entity="user_id",
         ts="ts",
@@ -10483,21 +9676,17 @@ ORACLES["transition_entropy"] = """
              // CAST(sum(n_src) OVER () AS BIGINT) AS rate_micro
     FROM n
 """
-QUERIES["transition_entropy"] = transition_entropy_q
 
 
-def lorenz_curve_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lorenz concentration curve of per-user event activity in 10
     ntile buckets (operators/stats.lorenz_curve): the decile view
     behind gini_activity's single number, and the planning input for
     the salted-twin routing threshold. One entity exchange; ntile and
     cumulative shares over the per-entity count frame; integer-micro
     DIV shares."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        lorenz_curve,
-    )
-
-    return lorenz_curve(_events(spark, sf_dir), entity="user_id")
+    return stats.lorenz_curve(_events(spark, sf_dir), entity="user_id")
 
 
 ORACLES["lorenz_curve"] = """
@@ -10526,10 +9715,10 @@ ORACLES["lorenz_curve"] = """
              AS event_cum_micro
     FROM r
 """
-QUERIES["lorenz_curve"] = lorenz_curve_q
 
 
-def poisson_bootstrap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap CI of the mean event value, 32 replicates
     (operators/stats.poisson_bootstrap — Chamandy et al. 2012, the
     one-pass distributed bootstrap): md5-deterministic Poisson(1)
@@ -10537,11 +9726,7 @@ def poisson_bootstrap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     states in ONE map-side-combined pass, zero shuffles; replicate
     means exact-integer cents DIV; CI = 2nd/31st order statistics
     over the 32-row frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        poisson_bootstrap,
-    )
-
-    return poisson_bootstrap(
+    return stats.poisson_bootstrap(
         _fan(_events(spark, sf_dir), "event_id"),
         value="value", id_col="event_id",
         n_replicates=32, salt="boot",
@@ -10549,14 +9734,10 @@ def poisson_bootstrap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _poisson_boot_oracle() -> str:
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        POISSON1_THRESHOLDS,
-    )
-
     k = _sample_key_terms_sql()
     case = "CASE " + " ".join(
         f"WHEN ({k}) < {t} THEN {w}"
-        for w, t in enumerate(POISSON1_THRESHOLDS)
+        for w, t in enumerate(stats.POISSON1_THRESHOLDS)
     ) + " ELSE 8 END"
     return f"""
     WITH rep AS (SELECT CAST(b AS INT) AS replicate FROM range(0, 32) t(b)),
@@ -10590,21 +9771,17 @@ def _poisson_boot_oracle() -> str:
 
 
 ORACLES["poisson_bootstrap"] = _poisson_boot_oracle()
-QUERIES["poisson_bootstrap"] = poisson_bootstrap_q
 
 
-def mann_whitney_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Whitney U drift test between time-halves of event value
     (operators/stats.mann_whitney_drift): the rank-based companion to
     ks_drift/psi_drift — doubled rank sums keep tie-averaged ranks
     exact integer; one distinct-cent exchange, window rank
     accumulation over the cent frame, single float = the z-score
     (exact operands, fixed op order, micro floor)."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        mann_whitney_drift,
-    )
-
-    return mann_whitney_drift(_events(spark, sf_dir), ts="ts", value="value")
+    return stats.mann_whitney_drift(_events(spark, sf_dir), ts="ts", value="value")
 
 
 ORACLES["mann_whitney"] = """
@@ -10652,21 +9829,17 @@ ORACLES["mann_whitney"] = """
            END AS z_micro
     FROM tot
 """
-QUERIES["mann_whitney"] = mann_whitney_q
 
 
-def ngram_diversity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ngram_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct-1/2/3 diversity per source over documents
     (operators/textstats.ngram_diversity — Li et al. 2016): the
     mode-collapse detector for generated sources. N-grams built
     inside the token array (JVM transform/slice, no corpus window),
     one uniform (source, n, gram) exchange, KB-sized rollup,
     integer-micro DIV ratios."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        ngram_diversity,
-    )
-
-    return ngram_diversity(
+    return textstats.ngram_diversity(
         _documents(spark, sf_dir), ns=(1, 2, 3), group_col="source"
     )
 
@@ -10704,19 +9877,15 @@ ORACLES["ngram_diversity"] = r"""
              // CAST(sum(c) AS BIGINT) AS distinct_micro
     FROM per_gram GROUP BY 1, 2
 """
-QUERIES["ngram_diversity"] = ngram_diversity_q
 
 
-def spearman_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between document length (n_chars) and
     token count (operators/stats.spearman_corr) — the length-bias
     audit shape: rank maps from count histograms (domain-bounded, NOT
     a corpus-wide window sort), broadcast back, one exact-decimal
     moment aggregate."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        spearman_corr,
-    )
-
     docs = _documents(spark, sf_dir).select(
         "n_chars",
         F.size(
@@ -10726,7 +9895,7 @@ def spearman_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).cast("bigint").alias("n_tok"),
     )
-    return spearman_corr(docs, x="n_chars", y="n_tok")
+    return stats.spearman_corr(docs, x="n_chars", y="n_tok")
 
 
 ORACLES["spearman"] = r"""
@@ -10777,25 +9946,18 @@ ORACLES["spearman"] = r"""
            END AS rho
     FROM m
 """
-QUERIES["spearman"] = spearman_q
 
 
-def cohen_kappa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between two keyword labeling functions over
     documents (operators/stats.cohen_kappa): rater A fires on 'scan',
     rater B on 'hash' — the redundancy audit for the weak_labels
     rule set. Zero shuffles: one CASE-sum contingency aggregate,
     exact decimal(38,0) identity, single double divide + micro
     floor."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        cohen_kappa,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _documents(spark, sf_dir).select(_tokens("text").alias("__t"))
-    return cohen_kappa(
+    d = _documents(spark, sf_dir).select(textstats._tokens("text").alias("__t"))
+    return stats.cohen_kappa(
         d,
         rater_a=F.array_contains(F.col("__t"), "scan"),
         rater_b=F.array_contains(F.col("__t"), "hash"),
@@ -10834,19 +9996,15 @@ ORACLES["cohen_kappa"] = r"""
            END AS kappa
     FROM m
 """
-QUERIES["cohen_kappa"] = cohen_kappa_q
 
 
-def cuped_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cuped_ab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance-reduced A/B readout over event value
     (operators/stats.cuped_report — Deng et al. WSDM 2013): pre-cut
     entity sums as the control variate, pooled theta, md5-parity
     arms; one entity exchange + one nine-moment scalar aggregate."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        cuped_report,
-    )
-
-    return cuped_report(_events(spark, sf_dir))
+    return stats.cuped_report(_events(spark, sf_dir))
 
 
 def _cuped_oracle() -> str:
@@ -10920,19 +10078,15 @@ def _cuped_oracle() -> str:
 
 
 ORACLES["cuped_ab"] = _cuped_oracle()
-QUERIES["cuped_ab"] = cuped_q
 
 
-def pii_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pii_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source PII exposure scan over documents
     (operators/dq.pii_audit): email-shape and long-digit-run regex
     counts in the RE2∩Java-identical pattern subset; one tagged union
     + one map-side-combined group aggregate, corpus never shuffles."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        pii_audit,
-    )
-
-    return pii_audit(_documents(spark, sf_dir), group_col="source")
+    return dq.pii_audit(_documents(spark, sf_dir), group_col="source")
 
 
 ORACLES["pii_audit"] = r"""
@@ -10956,19 +10110,17 @@ ORACLES["pii_audit"] = r"""
              * 1000000 // CAST(count(*) AS BIGINT) AS hit_doc_micro
     FROM tagged GROUP BY 1, 2
 """
-QUERIES["pii_audit"] = pii_audit_q
 
 
-def char_entropy_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source character-level Shannon entropy over documents
     (operators/textstats.char_entropy): the one-scan garbage/base64
     detector; micro-nat integer identity, one (source, char) exchange
     carrying alphabet-sized partials."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        char_entropy,
+    return textstats.char_entropy(
+        _fan(_documents(spark, sf_dir), "doc_id"), group_col="source"
     )
-
-    return char_entropy(_fan(_documents(spark, sf_dir), "doc_id"), group_col="source")
 
 
 ORACLES["char_entropy"] = r"""
@@ -10992,20 +10144,16 @@ ORACLES["char_entropy"] = r"""
              - slc // n_chars AS entropy_micro
     FROM per
 """
-QUERIES["char_entropy"] = char_entropy_q
 
 
-def echo_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def echo_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation assistant echo rate (operators/turns.echo_rate):
     distinct-token containment of each assistant turn in its
     predecessor — the parroting gate ahead of sft_pairs. One conv
     exchange shared by the lag window and the rollup; pure integer
     set-cardinality math."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        echo_rate,
-    )
-
-    return echo_rate(_tr_proj_lean(spark, sf_dir), turn_idx="turn_ord")
+    return turns.echo_rate(_tr_proj_lean(spark, sf_dir), turn_idx="turn_ord")
 
 
 ORACLES["echo_rate"] = f"""
@@ -11035,19 +10183,15 @@ ORACLES["echo_rate"] = f"""
            CAST(max(m) AS BIGINT) AS echo_max_micro
     FROM scored GROUP BY 1
 """
-QUERIES["echo_rate"] = echo_rate_q
 
 
-def template_openers_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def template_openers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 boilerplate assistant openers across conversations
     (operators/turns.template_openers): struct-min first-turn
     selection (no per-group sort), fingerprint count, TakeOrdered —
     the scrub-list report for canned openers."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        template_openers,
-    )
-
-    return template_openers(
+    return turns.template_openers(
         _tr_proj_lean(spark, sf_dir), turn_idx="turn_ord", k=20
     )
 
@@ -11079,20 +10223,16 @@ ORACLES["template_openers"] = f"""
     ORDER BY n_convs DESC, fp
     LIMIT 20
 """
-QUERIES["template_openers"] = template_openers_q
 
 
-def retry_runs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def retry_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation retry-loop report (operators/turns.retry_runs):
     consecutive same-(role,text) runs via the collapse_repeats islands
     plan, rolled up to run counts / max run / wasted turns — the
     curation gate that flags double-submit and stuck-agent loops.
     Single hash(conv) exchange end to end."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        retry_runs,
-    )
-
-    return retry_runs(
+    return turns.retry_runs(
         _tr_proj_lean(spark, sf_dir), order=("ts", "turn_ord")
     )
 
@@ -11125,19 +10265,15 @@ ORACLES["retry_runs"] = f"""
                 AS BIGINT) AS wasted_turns
     FROM per_run GROUP BY 1
 """
-QUERIES["retry_runs"] = retry_runs_q
 
 
-def conv_outcomes_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def conv_outcomes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation-outcome distribution (operators/turns.conv_outcomes):
     which role speaks last, per-outcome conversation count/share/mean
     length. Struct-max last-turn selection (no window sort), two
     map-side-combined aggregations, integer-micro ratios."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        conv_outcomes,
-    )
-
-    return conv_outcomes(_tr_proj_lean(spark, sf_dir), turn_idx="turn_ord")
+    return turns.conv_outcomes(_tr_proj_lean(spark, sf_dir), turn_idx="turn_ord")
 
 
 ORACLES["conv_outcomes"] = f"""
@@ -11162,21 +10298,17 @@ ORACLES["conv_outcomes"] = f"""
            turns * 1000000 // n_convs AS turns_avg_micro
     FROM per_role
 """
-QUERIES["conv_outcomes"] = conv_outcomes_q
 
 
-def conv_dedup_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def conv_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conversation-level exact dedup
     (operators/turns.dedup_conversations): md5 digest of the full
     (role, text) turn sequence in stable order, group size + keeper per
     digest. One corpus exchange for the digest, one entity-sized
     exchange for the grouping — the transcript-native twin of
     dedup_exact."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        dedup_conversations,
-    )
-
-    return dedup_conversations(
+    return turns.dedup_conversations(
         _tr_proj_lean(spark, sf_dir), order=("ts", "turn_ord")
     )
 
@@ -11198,22 +10330,18 @@ ORACLES["conv_dedup"] = f"""
              AS is_keep
     FROM digests
 """
-QUERIES["conv_dedup"] = conv_dedup_q
 
 
 _MF1_CLASSES = ["click", "error", "purchase", "signup", "view"]
 
 
-def macro_f1_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def macro_f1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-class classification report (operators/stats.macro_f1):
     per-class tp/fp/fn + P/R/F1 and a __macro__ row, sklearn
     zero_division=0 conventions. The synthetic classifier predicts the
     true event_type ~80% of the time and a deterministic md5-chosen
     class otherwise — portable across engines (no rand())."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        macro_f1,
-    )
-
     e = _events(spark, sf_dir)
     hx = F.md5(
         F.concat_ws("|", F.lit("mf1"), F.col("event_id").cast("string"))
@@ -11229,7 +10357,7 @@ def macro_f1_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(noise)
         .alias("y_pred"),
     )
-    return macro_f1(preds)
+    return stats.macro_f1(preds)
 
 
 ORACLES["macro_f1"] = f"""
@@ -11289,19 +10417,15 @@ ORACLES["macro_f1"] = f"""
            CAST(sum(f1_micro) // count(*) AS BIGINT)
     FROM f1
 """
-QUERIES["macro_f1"] = macro_f1_q
 
 
-def fleiss_kappa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def fleiss_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fleiss' kappa over a 3-rater panel (operators/stats.fleiss_kappa)
     — the m-rater generalization next to cohen_kappa. Raters agree with
     event_type ~70% of the time, else say 'noise', via portable
     md5-keyed choices; exact decimal(38,0) identity, one double
     divide."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        fleiss_kappa,
-    )
-
     e = _fan(_events(spark, sf_dir), "event_id")
     long = e.select(
         F.col("event_id").alias("item_id"),
@@ -11323,7 +10447,7 @@ def fleiss_kappa_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("noise"))
         .alias("category"),
     )
-    return fleiss_kappa(rated)
+    return stats.fleiss_kappa(rated)
 
 
 ORACLES["fleiss_kappa"] = f"""
@@ -11375,18 +10499,14 @@ ORACLES["fleiss_kappa"] = f"""
            END AS kappa
     FROM si, sc
 """
-QUERIES["fleiss_kappa"] = fleiss_kappa_q
 
 
-def readability_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flesch reading-ease per document (operators/textstats.readability):
     vowel-run syllable heuristic, clamped sentence count, pure integer
     identity — zero exchanges, one codegen projection."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        readability,
-    )
-
-    return readability(_documents(spark, sf_dir))
+    return textstats.readability(_documents(spark, sf_dir))
 
 
 ORACLES["readability"] = r"""
@@ -11411,20 +10531,16 @@ ORACLES["readability"] = r"""
            END AS flesch_micro
     FROM c
 """
-QUERIES["readability"] = readability_q
 
 
-def containment_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric containment near-dup pairs
     (operators/dedup.containment_pairs): |A∩B|/|A| catches
     subset-duplicates (wire copy embedded in a long article) that
     Jaccard's union denominator hides. Same df-capped candidate plan
     as dedup_jaccard; both directions integer-micro DIV."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        containment_pairs,
-    )
-
-    return containment_pairs(
+    return dedup.containment_pairs(
         _fan(_documents(spark, sf_dir), "doc_id"), threshold=0.8, k=3, max_df=1000
     )
 
@@ -11468,19 +10584,15 @@ ORACLES["containment_pairs"] = r"""
     SELECT * FROM scored
     WHERE greatest(cont_a_micro, cont_b_micro) >= 800000
 """
-QUERIES["containment_pairs"] = containment_pairs_q
 
 
-def prefix_reuse_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def prefix_reuse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-sharing report at depths 1/2/4
     (operators/turns.prefix_reuse): the KV-cache planning view and
     multi-turn template detector. One corpus exchange; all depth
     digests from one sorted array."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        prefix_reuse,
-    )
-
-    return prefix_reuse(
+    return turns.prefix_reuse(
         _tr_proj_lean(spark, sf_dir), depths=(1, 2, 4),
         order=("ts", "turn_ord"),
     )
@@ -11513,19 +10625,15 @@ ORACLES["prefix_reuse"] = f"""
            CAST(count(*) AS BIGINT) AS n_prefixes
     FROM groups GROUP BY depth
 """
-QUERIES["prefix_reuse"] = prefix_reuse_q
 
 
-def length_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-conversation turn-length OLS slope
     (operators/turns.length_drift): the degeneracy detector next to
     echo_rate — collapsing or runaway-verbose conversations show in
     the tails. Exact decimal moments, one double divide, no window."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        length_drift,
-    )
-
-    return length_drift(_tr_proj(spark, sf_dir))
+    return turns.length_drift(_tr_proj(spark, sf_dir))
 
 
 ORACLES["length_drift"] = f"""
@@ -11554,19 +10662,15 @@ ORACLES["length_drift"] = f"""
            END AS slope
     FROM m
 """
-QUERIES["length_drift"] = length_drift_q
 
 
-def charclass_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def charclass_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source character-class composition
     (operators/textstats.charclass_profile): letters/digits/space/
     punct/other shares via the length-difference trick — five codegen
     regex passes, zero corpus shuffle, integer-micro shares."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        charclass_profile,
-    )
-
-    return charclass_profile(_documents(spark, sf_dir), group_col="source")
+    return textstats.charclass_profile(_documents(spark, sf_dir), group_col="source")
 
 
 # Classes are explicit ASCII ranges (never \s / POSIX classes) so the
@@ -11612,19 +10716,15 @@ ORACLES["charclass_profile"] = r"""
                 ELSE 0 END AS other_micro
     FROM agg
 """
-QUERIES["charclass_profile"] = charclass_profile_q
 
 
-def js_unigram_divergence_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def js_unigram_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jensen-Shannon divergence between two sources' unigram
     distributions (operators/textstats.js_unigram_divergence): exact
     decimal micro-nat accumulation, two final double divides, the
     corpus never shuffles full rows."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        js_unigram_divergence,
-    )
-
-    return js_unigram_divergence(
+    return textstats.js_unigram_divergence(
         _documents(spark, sf_dir), group_col="source",
         group_a="src0", group_b="src1",
     )
@@ -11680,18 +10780,14 @@ ORACLES["js_unigram_divergence"] = r"""
            END AS js
     FROM s
 """
-QUERIES["js_unigram_divergence"] = js_unigram_divergence_q
 
 
-def rare_collapse_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def rare_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail-category collapse report over documents.lang
     (operators/encoding.rare_collapse): levels with < 100 rows fold
     into __other__; two level-sized exchanges, corpus read once."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        rare_collapse,
-    )
-
-    return rare_collapse(_documents(spark, sf_dir), "lang", min_count=100)
+    return encoding.rare_collapse(_documents(spark, sf_dir), "lang", min_count=100)
 
 
 ORACLES["rare_collapse"] = """
@@ -11708,18 +10804,16 @@ ORACLES["rare_collapse"] = """
            CAST(count(*) AS BIGINT) AS n_levels_merged
     FROM f GROUP BY 1
 """
-QUERIES["rare_collapse"] = rare_collapse_q
 
 
-def hapax_share_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hapax_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source hapax-legomena report (operators/textstats.
     hapax_share): share of each source's vocabulary occurring exactly
     once — one (grp, token) exchange, integer-micro shares."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        hapax_share,
+    return textstats.hapax_share(
+        _fan(_documents(spark, sf_dir), "doc_id"), group_col="source"
     )
-
-    return hapax_share(_fan(_documents(spark, sf_dir), "doc_id"), group_col="source")
 
 
 ORACLES["hapax_share"] = r"""
@@ -11744,19 +10838,17 @@ ORACLES["hapax_share"] = r"""
              // sum(n) AS BIGINT) AS hapax_token_micro
     FROM counts GROUP BY 1
 """
-QUERIES["hapax_share"] = hapax_share_q
 
 
-def dup_ngram_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicate 3-gram coverage per source
     (operators/textstats.dup_ngram_coverage): share of gram
     occurrences whose gram appears in >=2 distinct docs — the
     corpus-level boilerplate detector next to repetition_stats."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        dup_ngram_coverage,
+    return textstats.dup_ngram_coverage(
+        _fan(_documents(spark, sf_dir), "doc_id"), group_col="source", k=3
     )
-
-    return dup_ngram_coverage(_fan(_documents(spark, sf_dir), "doc_id"), group_col="source", k=3)
 
 
 ORACLES["dup_ngram_coverage"] = r"""
@@ -11793,16 +10885,14 @@ ORACLES["dup_ngram_coverage"] = r"""
                 ELSE 0 END AS dup_occ_micro
     FROM agg
 """
-QUERIES["dup_ngram_coverage"] = dup_ngram_coverage_q
 
 
-def refusal_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def refusal_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source refusal-phrase rate (operators/dq.refusal_rate):
     case-insensitive substring lexicon (no regex dialect surface at
     all), one map-side-combined aggregate, zero corpus shuffle."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import refusal_rate
-
-    return refusal_rate(_documents(spark, sf_dir), group_col="source")
+    return dq.refusal_rate(_documents(spark, sf_dir), group_col="source")
 
 
 # The lexicon is inlined with doubled single-quotes; matching is plain
@@ -11828,10 +10918,10 @@ ORACLES["refusal_rate"] = """
              // count(*) AS BIGINT) AS hit_doc_micro
     FROM per GROUP BY 1
 """
-QUERIES["refusal_rate"] = refusal_rate_q
 
 
-def curriculum_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest-first curriculum rank over documents
     (operators/layout.curriculum_order → global_index): contiguous
     0-based global rank with NO single-partition window — one range
@@ -11839,11 +10929,7 @@ def curriculum_order_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the single-window row_number the plan refuses to use, so the
     hash gate proves the two-phase index replays the total order
     bit-for-bit."""
-    from dane_visual_feature_extraction_worker_spark.operators.layout import (
-        curriculum_order,
-    )
-
-    out = curriculum_order(_fan(_documents(spark, sf_dir), "doc_id"))
+    out = layout.curriculum_order(_fan(_documents(spark, sf_dir), "doc_id"))
     return out.select(
         "doc_id",
         F.col("n_chars").cast("bigint").alias("n_chars"),
@@ -11858,19 +10944,15 @@ ORACLES["curriculum_order"] = """
                 AS BIGINT) AS curriculum_rank
     FROM documents
 """
-QUERIES["curriculum_order"] = curriculum_order_q
 
 
-def periodicity_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def periodicity_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user hour-of-day chi-square periodicity score
     (operators/stats.periodicity_report): closed-form
     (B·Σo² − n²)/n over decimal(38,0), two count-frame exchanges,
     events never shuffle full rows."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        periodicity_report,
-    )
-
-    return periodicity_report(_events(spark, sf_dir))
+    return stats.periodicity_report(_events(spark, sf_dir))
 
 
 ORACLES["periodicity_report"] = """
@@ -11891,19 +10973,15 @@ ORACLES["periodicity_report"] = """
                 // CAST(n_events AS HUGEINT) AS BIGINT) AS chi2_micro
     FROM agg
 """
-QUERIES["periodicity_report"] = periodicity_report_q
 
 
-def walk_forward_splits_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def walk_forward_splits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Walk-forward CV report over events
     (operators/sampling.walk_forward_splits): equal-count contiguous
     folds over the (ts, event_id) total order via the two-phase
     global index; k-row output."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        walk_forward_splits,
-    )
-
-    return walk_forward_splits(_events(spark, sf_dir), k=4)
+    return sampling.walk_forward_splits(_events(spark, sf_dir), k=4)
 
 
 ORACLES["walk_forward_splits"] = """
@@ -11926,20 +11004,16 @@ ORACLES["walk_forward_splits"] = """
            ts_min, ts_max
     FROM folds
 """
-QUERIES["walk_forward_splits"] = walk_forward_splits_q
 
 
-def krippendorff_alpha_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha over a RAGGED 3-rater panel
     (operators/stats.krippendorff_alpha) — the missing-data agreement
     coefficient fleiss_kappa refuses. Panel: rater r rates item u only
     when md5-key('kp',r,u) % 10 < 8 (~80% response), and agrees with
     event_type ~70% of the time (md5-key('ka',r,u)), else 'noise' —
     both portable md5 constructions (fleiss precedent)."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        krippendorff_alpha,
-    )
-
     e = _fan(_events(spark, sf_dir), "event_id")
     long = e.select(
         F.col("event_id").alias("item_id"),
@@ -11964,7 +11038,7 @@ def krippendorff_alpha_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("noise"))
         .alias("category"),
     )
-    return krippendorff_alpha(rated, max_raters=3)
+    return stats.krippendorff_alpha(rated, max_raters=3)
 
 
 ORACLES["krippendorff_alpha"] = f"""
@@ -12026,18 +11100,14 @@ ORACLES["krippendorff_alpha"] = f"""
            END AS alpha
     FROM unit_scal, cat_scal
 """
-QUERIES["krippendorff_alpha"] = krippendorff_alpha_q
 
 
-def tokenizer_fertility_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language tokenizer-fertility report (operators/textstats.
     tokenizer_fertility): chars/token + tokens/doc, zero corpus
     shuffle — the multilingual budget-planning table."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        tokenizer_fertility,
-    )
-
-    return tokenizer_fertility(_documents(spark, sf_dir), group_col="lang")
+    return textstats.tokenizer_fertility(_documents(spark, sf_dir), group_col="lang")
 
 
 ORACLES["tokenizer_fertility"] = r"""
@@ -12063,18 +11133,16 @@ ORACLES["tokenizer_fertility"] = r"""
              AS tokens_per_doc_micro
     FROM agg
 """
-QUERIES["tokenizer_fertility"] = tokenizer_fertility_q
 
 
-def pass_at_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbiased pass@2 per task (operators/stats.pass_at_k): task =
     user_id, sample correct = (event_type = 'click') — the Codex
     estimator 1 − C(n−c,k)/C(n,k) as exact k-factor decimal products
     + one integer DIV; one map-side-combined exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import pass_at_k
-
     e = _events(spark, sf_dir)
-    return pass_at_k(
+    return stats.pass_at_k(
         e.select(
             F.col("user_id").alias("task_id"),
             (F.col("event_type") == "click").alias("correct"),
@@ -12106,19 +11174,15 @@ ORACLES["pass_at_k"] = """
            END AS pass_micro
     FROM agg
 """
-QUERIES["pass_at_k"] = pass_at_k_q
 
 
-def token_entropy_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def token_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source token bigram conditional entropy H(next|prev)
     (operators/textstats.token_entropy_rate): micro-nat int64 ln,
     decimal(38,0) products, one integer DIV — the text-structure
     degeneracy number next to char_entropy."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        token_entropy_rate,
-    )
-
-    return token_entropy_rate(
+    return textstats.token_entropy_rate(
         _fan(_documents(spark, sf_dir), "doc_id"), group_col="source"
     )
 
@@ -12162,24 +11226,19 @@ ORACLES["token_entropy_rate"] = r"""
              AS rate_micro_nat
     FROM agg
 """
-QUERIES["token_entropy_rate"] = token_entropy_rate_q
 
 
-def mrr_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch MRR@10 of BM25 rankings against strict ALL-terms
     relevance (operators/retrieval.mrr_at_k): three queries evaluated
     in ONE pass via a broadcast (qid, term) table; per-query
     reciprocal rank + a __mrr__ mean row — completes the retrieval
     eval shelf next to ndcg_eval and pr_at_k."""
-    from dane_visual_feature_extraction_worker_spark.operators.retrieval import (
-        mrr_at_k,
+    d = _fan(_documents(spark, sf_dir), "doc_id").select(
+        "doc_id", textstats._tokens("text").alias("__t")
     )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    d = _fan(_documents(spark, sf_dir), "doc_id").select("doc_id", _tokens("text").alias("__t"))
-    return mrr_at_k(
+    return retrieval.mrr_at_k(
         d,
         F.col("__t"),
         {
@@ -12258,10 +11317,10 @@ ORACLES["mrr_eval"] = r"""
            CAST(sum(rr_micro) // count(*) AS BIGINT)
     FROM perq
 """
-QUERIES["mrr_eval"] = mrr_eval_q
 
 
-def compression_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source zlib compression-ratio garbage detector
     (operators/textstats.compression_ratio): Arrow-batched
     mapInPandas + one map-side-combined aggregate. ROWS-ONLY gate by
@@ -12269,24 +11328,16 @@ def compression_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     the compressed byte counts; exactness is pytest-asserted against
     direct zlib (tests/test_eval_entropy.py) the way
     checkpoint_resume asserts resume semantics."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        compression_ratio,
-    )
-
-    return compression_ratio(_documents(spark, sf_dir), group_col="source")
+    return textstats.compression_ratio(_documents(spark, sf_dir), group_col="source")
 
 
-QUERIES["compression_ratio"] = compression_ratio_q
-
-
-def dp_histogram_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dp_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DP histogram release over events.event_type
     (operators/dq.dp_histogram): Laplace(b=2) noise as the exact
     micro-nat difference of two md5-exponentials; signed DIV routed
     through abs (trunc-vs-floor divergence documented in the op)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import dp_histogram
-
-    return dp_histogram(
+    return dq.dp_histogram(
         _events(spark, sf_dir), category_col="event_type",
         eps_inv_micro=2_000_000,
     )
@@ -12324,18 +11375,14 @@ ORACLES["dp_histogram"] = f"""
              AS released_micro
     FROM dln
 """
-QUERIES["dp_histogram"] = dp_histogram_q
 
 
-def token_f1_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def token_f1_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQuAD-style token F1 over even/odd document pairs
     (operators/textstats.token_f1_eval): multiset-overlap P/R/F1 as
     pure array expressions — zero shuffle for the metric itself; the
     -1 row is the corpus mean."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        token_f1_eval,
-    )
-
     d = _fan(_documents(spark, sf_dir), "doc_id")
     pred = d.filter(F.col("doc_id") % 2 == 0).select(
         (F.col("doc_id") / 2).cast("bigint").alias("pair_id"),
@@ -12345,7 +11392,7 @@ def token_f1_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("doc_id") - 1) / 2).cast("bigint").alias("pair_id"),
         F.col("text").alias("gold"),
     )
-    return token_f1_eval(pred.join(gold, "pair_id"))
+    return textstats.token_f1_eval(pred.join(gold, "pair_id"))
 
 
 ORACLES["token_f1_eval"] = r"""
@@ -12396,18 +11443,14 @@ ORACLES["token_f1_eval"] = r"""
            CAST(sum(f1_micro) // count(*) AS BIGINT)
     FROM per
 """
-QUERIES["token_f1_eval"] = token_f1_eval_q
 
 
-def self_consistency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def self_consistency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-consistency majority vote per task (operators/stats.
     self_consistency_vote): task = user_id, samples = event_types,
     gold = md5-keyed pick of the five types (constant per task by
     construction); lexicographic tie-break is engine-replayable."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        self_consistency_vote,
-    )
-
     e = _events(spark, sf_dir)
     hx = F.md5(F.concat_ws("|", F.lit("gold"), F.col("user_id").cast("string")))
     key = F.conv(F.substring(hx, 1, 8), 16, 10).cast("bigint")
@@ -12415,7 +11458,7 @@ def self_consistency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit("click"), F.lit("error"), F.lit("purchase"),
         F.lit("signup"), F.lit("view"),
     )
-    return self_consistency_vote(
+    return stats.self_consistency_vote(
         e.select(
             F.col("user_id").alias("task_id"),
             F.col("event_type").alias("answer"),
@@ -12453,24 +11496,20 @@ ORACLES["self_consistency"] = f"""
            g.gold, (m.majority_answer = g.gold) AS is_correct
     FROM majority m JOIN golds g ON g.task = m.task
 """
-QUERIES["self_consistency"] = self_consistency_q
 
 
-def truncation_loss_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-limit truncation pricing over events-as-turns
     (operators/turns.truncation_loss): per-turn token proxy =
     length(props); one entity rollup + |limits| explode."""
-    from dane_visual_feature_extraction_worker_spark.operators.turns import (
-        truncation_loss,
-    )
-
     e = _events(spark, sf_dir).select(
         F.col("user_id").alias("conv_id"),
         F.length(F.coalesce(F.col("props"), F.lit("")))
         .cast("bigint")
         .alias("n_tokens"),
     )
-    return truncation_loss(e, limits=(300, 600, 1200))
+    return turns.truncation_loss(e, limits=(300, 600, 1200))
 
 
 ORACLES["truncation_loss"] = """
@@ -12500,19 +11539,15 @@ ORACLES["truncation_loss"] = """
                 ELSE 0 END AS lost_share_micro
     FROM agg
 """
-QUERIES["truncation_loss"] = truncation_loss_q
 
 
-def cross_perplexity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cross_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-entropy of src1 under src0's add-1 bigram LM
     (operators/textstats.cross_perplexity): every ln of a bare
     integer, decimal(38,0) products, one integer DIV — the
     directional domain-shift number."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        cross_perplexity,
-    )
-
-    return cross_perplexity(
+    return textstats.cross_perplexity(
         _documents(spark, sf_dir), group_col="source",
         group_a="src0", group_b="src1",
     )
@@ -12565,18 +11600,14 @@ ORACLES["cross_perplexity"] = r"""
              AS h_micro_nat
     FROM agg
 """
-QUERIES["cross_perplexity"] = cross_perplexity_q
 
 
-def vocab_coverage_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 src0 vocabulary coverage of src1 token mass
     (operators/textstats.vocab_coverage): k-row TakeOrdered +
     broadcast join, exact integer-micro share."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        vocab_coverage,
-    )
-
-    return vocab_coverage(
+    return textstats.vocab_coverage(
         _documents(spark, sf_dir), group_col="source",
         group_a="src0", group_b="src1", k=10,
     )
@@ -12610,20 +11641,16 @@ ORACLES["vocab_coverage"] = r"""
                 ELSE 0 END AS coverage_micro
     FROM agg
 """
-QUERIES["vocab_coverage"] = vocab_coverage_q
 
 
-def tool_trigrams_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def tool_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-15 3-step action chains over events-as-agent-actions
     (operators/toolusage.tool_trigrams): one conv exchange, array-side
     trigrams, TakeOrdered — the depth-3 pattern miner next to
     markov_transitions."""
-    from dane_visual_feature_extraction_worker_spark.operators.toolusage import (
-        tool_trigrams,
-    )
-
     e = _events(spark, sf_dir)
-    return tool_trigrams(
+    return toolusage.tool_trigrams(
         e.select(
             F.col("user_id").alias("conv_id"),
             F.col("event_type").alias("tool"),
@@ -12658,29 +11685,22 @@ ORACLES["tool_trigrams"] = """
     FROM counts, total
     ORDER BY n_occ DESC, chain LIMIT 15
 """
-QUERIES["tool_trigrams"] = tool_trigrams_q
 
 
-def mixture_knapsack_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mixture_knapsack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy budgeted mixture plan over per-source stats
     (operators/sampling.mixture_knapsack): demo score = chars/token
     micro (tokenizer_fertility's exact integer), budget = 100k
     tokens; the window orders the |sources|-row frame only."""
-    from dane_visual_feature_extraction_worker_spark.operators.sampling import (
-        mixture_knapsack,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        tokenizer_fertility,
-    )
-
-    stats = tokenizer_fertility(
+    per_source = textstats.tokenizer_fertility(
         _documents(spark, sf_dir), group_col="source"
     ).select(
         F.col("grp").alias("source"),
         "n_tokens",
         F.col("chars_per_token_micro").alias("score_micro"),
     )
-    return mixture_knapsack(stats, budget_tokens=100_000)
+    return sampling.mixture_knapsack(per_source, budget_tokens=100_000)
 
 
 ORACLES["mixture_knapsack"] = r"""
@@ -12724,17 +11744,15 @@ ORACLES["mixture_knapsack"] = r"""
                 ELSE 0 END AS take_micro
     FROM take
 """
-QUERIES["mixture_knapsack"] = mixture_knapsack_q
 
 
-def canary_scan_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def canary_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Canary/secret literal scan over documents
     (operators/dq.canary_scan): exact occurrence counts via the
     literal-replace length-difference trick — two corpus words plus
     one guaranteed-absent canary."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import canary_scan
-
-    return canary_scan(
+    return dq.canary_scan(
         _documents(spark, sf_dir),
         canaries=("spark", "window", "canary-7f3a-xyzzy"),
     )
@@ -12760,23 +11778,19 @@ ORACLES["canary_scan"] = """
                 // count(*) AS BIGINT) AS hit_doc_micro
     FROM per GROUP BY 1
 """
-QUERIES["canary_scan"] = canary_scan_q
 
 
-def slice_gap_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def slice_gap_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type accuracy audit with the __gap__ summary
     (operators/stats.slice_gap_report): correctness is an md5-keyed
     70% coin per event (portable), slices are event types."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        slice_gap_report,
-    )
-
     e = _events(spark, sf_dir)
     hx = F.md5(
         F.concat_ws("|", F.lit("acc"), F.col("event_id").cast("string"))
     )
     key = F.conv(F.substring(hx, 1, 8), 16, 10).cast("bigint")
-    return slice_gap_report(
+    return stats.slice_gap_report(
         e.select(
             F.col("event_type").alias("slice"),
             (key % 10 < 7).alias("correct"),
@@ -12812,19 +11826,15 @@ ORACLES["slice_gap_report"] = f"""
            CAST(max(acc_micro) - min(acc_micro) AS BIGINT)
     FROM scored
 """
-QUERIES["slice_gap_report"] = slice_gap_report_q
 
 
-def disorder_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def disorder_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-planning disorder audit over events
     (operators/integrity.disorder_audit): arrival order = event_id,
     event time = ts; per-user late rate + worst regression in exact
     integer microseconds."""
-    from dane_visual_feature_extraction_worker_spark.operators.integrity import (
-        disorder_audit,
-    )
-
-    return disorder_audit(
+    return integrity.disorder_audit(
         _events(spark, sf_dir), entity="user_id", ts="ts", seq="event_id"
     )
 
@@ -12850,19 +11860,15 @@ ORACLES["disorder_audit"] = """
                 AS BIGINT) AS max_disorder_us
     FROM flagged GROUP BY 1
 """
-QUERIES["disorder_audit"] = disorder_audit_q
 
 
-def order_inversions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def order_inversions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact inversion count between event_id order and event time
     per user (operators/integrity.order_inversions): one entity
     exchange, array-side O(n²) count; the oracle is the quadratic
     pair self-join the operator avoids shuffling."""
-    from dane_visual_feature_extraction_worker_spark.operators.integrity import (
-        order_inversions,
-    )
-
-    return order_inversions(
+    return integrity.order_inversions(
         _events(spark, sf_dir), entity="user_id", ts="ts", seq="event_id"
     )
 
@@ -12889,18 +11895,14 @@ ORACLES["order_inversions"] = """
                 ELSE 0 END AS inversion_micro
     FROM per LEFT JOIN inv ON inv.entity = per.entity
 """
-QUERIES["order_inversions"] = order_inversions_q
 
 
-def activity_streaks_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-day activity streaks per user
     (operators/recency.activity_streaks): gaps-and-islands over the
     distinct (user, day) frame, exact integer day math."""
-    from dane_visual_feature_extraction_worker_spark.operators.recency import (
-        activity_streaks,
-    )
-
-    return activity_streaks(_events(spark, sf_dir))
+    return recency.activity_streaks(_events(spark, sf_dir))
 
 
 ORACLES["activity_streaks"] = """
@@ -12927,21 +11929,17 @@ ORACLES["activity_streaks"] = """
            CAST(arg_max(len, endd) AS BIGINT) AS latest_streak
     FROM islands GROUP BY 1
 """
-QUERIES["activity_streaks"] = activity_streaks_q
 
 
-def join_size_estimate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact join-size + hot-key pricing for a self-join of events on
     user_id (operators/joins.join_size_estimate): two count frames,
     never the join itself. The decimal pair counts are cast to bigint
     for the gate (testdata scale fits; the operator keeps
     decimal(38,0) for 10^24-pair hot keys)."""
-    from dane_visual_feature_extraction_worker_spark.operators.joins import (
-        join_size_estimate,
-    )
-
     e = _events(spark, sf_dir)
-    out = join_size_estimate(e, e, "user_id", "user_id", k=10)
+    out = joins.join_size_estimate(e, e, "user_id", "user_id", k=10)
     return out.select(
         "key",
         "c_left",
@@ -12974,22 +11972,15 @@ ORACLES["join_size_estimate"] = """
     SELECT '__total__', NULL, nk, CAST(tot AS BIGINT), 1000000
     FROM total
 """
-QUERIES["join_size_estimate"] = join_size_estimate_q
 
 
-def hashing_collisions_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def hashing_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Feature-hasher collision audit at dim 16 over the documents
     vocabulary (operators/encoding.hashing_collisions): same md5
     bucket as hashed_bow, token-mass-weighted collision share."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        hashing_collisions,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        _tokens,
-    )
-
-    return hashing_collisions(
-        _documents(spark, sf_dir), _tokens("text"), n_buckets=16
+    return encoding.hashing_collisions(
+        _documents(spark, sf_dir), textstats._tokens("text"), n_buckets=16
     )
 
 
@@ -13023,18 +12014,14 @@ ORACLES["hashing_collisions"] = rf"""
              AS mass_collided_micro
     FROM agg
 """
-QUERIES["hashing_collisions"] = hashing_collisions_q
 
 
-def partition_balance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def partition_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-balance pre-flight for events.user_id at P in
     {8, 32} (operators/encoding.partition_balance): md5-bucket
     max/mean load per candidate P, exact integers."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        partition_balance,
-    )
-
-    return partition_balance(
+    return encoding.partition_balance(
         _events(spark, sf_dir), "user_id", n_partitions=(8, 32)
     )
 
@@ -13061,18 +12048,16 @@ ORACLES["partition_balance"] = f"""
              AS balance_micro
     FROM per_bucket GROUP BY p
 """
-QUERIES["partition_balance"] = partition_balance_q
 
 
-def psi_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def psi_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three-feature PSI drift sweep in one corpus pass
     (operators/stats.psi_sweep): event_type raw, hour-of-day, and
     decile-floored value — stacked into one (feature, category)
     aggregate; per-term math identical to psi_drift."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import psi_sweep
-
     e = _events(spark, sf_dir)
-    return psi_sweep(
+    return stats.psi_sweep(
         e,
         features={
             "etype": F.col("event_type"),
@@ -13123,17 +12108,13 @@ ORACLES["psi_sweep"] = """
            END AS psi_term
     FROM counts JOIN totals ON totals.feature = counts.feature
 """
-QUERIES["psi_sweep"] = psi_sweep_q
 
 
-def comissing_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def comissing_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise co-missingness over three derived nullable columns
     (operators/dq.comissing_matrix): one aggregate, zero shuffles;
     lift over independence in decimal-exact micro."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        comissing_matrix,
-    )
-
     e = _events(spark, sf_dir).select(
         F.when(F.col("value") <= 50, F.col("value")).alias("a"),
         F.when(F.length("props") <= 9, F.col("props")).alias("b"),
@@ -13141,7 +12122,7 @@ def comissing_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             "c"
         ),
     )
-    return comissing_matrix(e, ["a", "b", "c"])
+    return dq.comissing_matrix(e, ["a", "b", "c"])
 
 
 ORACLES["comissing_matrix"] = """
@@ -13180,18 +12161,14 @@ ORACLES["comissing_matrix"] = """
            END AS lift_micro
     FROM longf
 """
-QUERIES["comissing_matrix"] = comissing_matrix_q
 
 
-def fano_burstiness_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily-count Fano factor per user (operators/stats.
     fano_burstiness): the over-dispersion anomaly score; exact
     decimal rational, two count-frame exchanges."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        fano_burstiness,
-    )
-
-    return fano_burstiness(_events(spark, sf_dir))
+    return stats.fano_burstiness(_events(spark, sf_dir))
 
 
 ORACLES["fano_burstiness"] = """
@@ -13215,18 +12192,14 @@ ORACLES["fano_burstiness"] = """
              AS fano_micro
     FROM agg
 """
-QUERIES["fano_burstiness"] = fano_burstiness_q
 
 
-def trending_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def trending_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Half-over-half trending categories (operators/stats.
     trending_report): CASE-split counts, two dense-rank windows over
     the |categories|-row frame, rank deltas."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        trending_report,
-    )
-
-    return trending_report(_events(spark, sf_dir), k=10)
+    return stats.trending_report(_events(spark, sf_dir), k=10)
 
 
 ORACLES["trending_report"] = """
@@ -13259,18 +12232,14 @@ ORACLES["trending_report"] = """
              category
     LIMIT 10
 """
-QUERIES["trending_report"] = trending_report_q
 
 
-def ending_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ending_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source response-ending profile (operators/textstats.
     ending_profile): terminal-punct / ellipsis / question rates, one
     map-side-combined aggregate."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        ending_profile,
-    )
-
-    return ending_profile(_documents(spark, sf_dir), group_col="source")
+    return textstats.ending_profile(_documents(spark, sf_dir), group_col="source")
 
 
 ORACLES["ending_profile"] = """
@@ -13295,18 +12264,14 @@ ORACLES["ending_profile"] = """
              AS question_micro
     FROM per GROUP BY 1
 """
-QUERIES["ending_profile"] = ending_profile_q
 
 
-def code_like_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def code_like_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source code-likeness rate (operators/textstats.
     code_like_rate): braces/semicolon/camelCase majority vote, zero
     corpus shuffle."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        code_like_rate,
-    )
-
-    return code_like_rate(_documents(spark, sf_dir), group_col="source")
+    return textstats.code_like_rate(_documents(spark, sf_dir), group_col="source")
 
 
 ORACLES["code_like_rate"] = """
@@ -13329,19 +12294,15 @@ ORACLES["code_like_rate"] = """
            CAST(sum(s) AS BIGINT) AS signal_sum
     FROM per GROUP BY 1
 """
-QUERIES["code_like_rate"] = code_like_rate_q
 
 
-def watermark_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def watermark_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-delay pricing over events
     (operators/integrity.watermark_sweep): drop counts at candidate
     delays {60s, 3600s, 86400s} — same running-max pass as
     disorder_audit plus a |delays| explode."""
-    from dane_visual_feature_extraction_worker_spark.operators.integrity import (
-        watermark_sweep,
-    )
-
-    return watermark_sweep(
+    return integrity.watermark_sweep(
         _events(spark, sf_dir),
         delays_seconds=(60, 3600, 86400),
         entity="user_id", ts="ts", seq="event_id",
@@ -13369,17 +12330,13 @@ ORACLES["watermark_sweep"] = """
                 AS BIGINT) AS drop_micro
     FROM fanned GROUP BY 1
 """
-QUERIES["watermark_sweep"] = watermark_sweep_q
 
 
-def len_by_lang_grid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def len_by_lang_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-by-language grid (operators/textstats.len_by_lang_grid):
     exact DIV buckets, within-language shares."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        len_by_lang_grid,
-    )
-
-    return len_by_lang_grid(
+    return textstats.len_by_lang_grid(
         _documents(spark, sf_dir), bucket_chars=100, max_bucket=9
     )
 
@@ -13399,22 +12356,20 @@ ORACLES["len_by_lang_grid"] = """
              AS lang_share_micro
     FROM counts JOIN totals ON totals.grp = counts.grp
 """
-QUERIES["len_by_lang_grid"] = len_by_lang_grid_q
 
 
-def nzv_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def nzv_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-zero-variance screen over four stacked event features
     (operators/stats.nzv_report): event_type (healthy), a constant, a
     near-constant (md5 1-in-50 flag), and the high-cardinality
     event_id — exercising all three NZV arms."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import nzv_report
-
     e = _events(spark, sf_dir)
     hx = F.md5(
         F.concat_ws("|", F.lit("nzv"), F.col("event_id").cast("string"))
     )
     key = F.conv(F.substring(hx, 1, 8), 16, 10).cast("bigint")
-    return nzv_report(
+    return stats.nzv_report(
         e,
         features={
             "etype": F.col("event_type"),
@@ -13468,20 +12423,16 @@ ORACLES["nzv_report"] = f"""
             AND n_distinct * 1000000 // n_rows < 100000) AS nzv
     FROM per
 """
-QUERIES["nzv_report"] = nzv_report_q
 
 
-def identical_features_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def identical_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Duplicate-column detector over four event projections
     (operators/stats.identical_features): one of the pairs IS
     identical by construction (event_type vs its copy), the rest
     differ — one zero-shuffle aggregate."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        identical_features,
-    )
-
     e = _events(spark, sf_dir)
-    return identical_features(
+    return stats.identical_features(
         e,
         features={
             "etype": F.col("event_type"),
@@ -13530,23 +12481,19 @@ ORACLES["identical_features"] = """
     UNION ALL
     SELECT 'nullable', 'uid', n, d_nu, (d_nu = 0) FROM agg
 """
-QUERIES["identical_features"] = identical_features_q
 
 
-def peak_concurrency_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Peak simultaneous user activity spans
     (operators/intervals.peak_concurrency): per-user [min ts, max ts]
     intervals, exact sweep-line via the two-phase parallel running
     sum — no single-partition window over the delta frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.intervals import (
-        peak_concurrency,
-    )
-
     e = _events(spark, sf_dir)
     spans = e.groupBy(F.col("user_id").alias("entity")).agg(
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts")
     )
-    return peak_concurrency(spans)
+    return intervals.peak_concurrency(spans)
 
 
 ORACLES["peak_concurrency"] = """
@@ -13575,19 +12522,17 @@ ORACLES["peak_concurrency"] = """
                            WHERE depth = peak)) AS peak_ts
     FROM agg
 """
-QUERIES["peak_concurrency"] = peak_concurrency_q
 
 
-def scrub_verification_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def scrub_verification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scrubber-effectiveness gate over documents
     (operators/dq.scrub_verification): pii_audit patterns counted
     before and after the replacement chain in one plan; removal
     share exact micro."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        scrub_verification,
+    return dq.scrub_verification(
+        _fan(_documents(spark, sf_dir), "doc_id"), group_col="source"
     )
-
-    return scrub_verification(_fan(_documents(spark, sf_dir), "doc_id"), group_col="source")
 
 
 ORACLES["scrub_verification"] = r"""
@@ -13626,18 +12571,14 @@ ORACLES["scrub_verification"] = r"""
                           AS BIGINT) END AS removed_micro
     FROM tagged GROUP BY 1, 2
 """
-QUERIES["scrub_verification"] = scrub_verification_q
 
 
-def time_to_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def time_to_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-to-5th-event activation speed per user
     (operators/recency.time_to_k): one entity exchange, k-th element
     array-side, exact integer microseconds."""
-    from dane_visual_feature_extraction_worker_spark.operators.recency import (
-        time_to_k,
-    )
-
-    return time_to_k(_events(spark, sf_dir), k=5)
+    return recency.time_to_k(_events(spark, sf_dir), k=5)
 
 
 ORACLES["time_to_k"] = """
@@ -13653,16 +12594,14 @@ ORACLES["time_to_k"] = """
                 THEN CAST(xs[5] - xs[1] AS BIGINT) END AS us_to_k
     FROM per
 """
-QUERIES["time_to_k"] = time_to_k_q
 
 
-def forget_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def forget_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Right-to-be-forgotten purge audit (operators/dq.forget_audit):
     tombstone keys (every user_id = 3 mod 97, plus one key the table
     has never seen) broadcast against the fact table; one scan, one
     global aggregate, the not-found request surfaced."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import forget_audit
-
     e = _events(spark, sf_dir)
     tomb = (
         e.where(F.col("user_id") % 97 == 3)
@@ -13672,7 +12611,7 @@ def forget_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark.range(1).select(F.lit(-1).cast("long").alias("user_id"))
         )
     )
-    return forget_audit(e, tomb, entity_col="user_id")
+    return dq.forget_audit(e, tomb, entity_col="user_id")
 
 
 ORACLES["forget_audit"] = """
@@ -13702,10 +12641,10 @@ ORACLES["forget_audit"] = """
              AS purged_share_micro
     FROM agg, req
 """
-QUERIES["forget_audit"] = forget_audit_q
 
 
-def revision_distance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def revision_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive-turn revision churn per conversation
     (operators/textstats.revision_distance): Levenshtein between each
     'view' turn and the same user's previous one, one entity exchange.
@@ -13713,10 +12652,6 @@ def revision_distance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's levenshtein counts codepoints, DuckDB's counts BYTES, and
     they agree exactly on the ASCII subset (é: Spark 1 edit, DuckDB
     2); the engine operator itself runs on raw codepoints."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        revision_distance,
-    )
-
     e = _events(spark, sf_dir)
     tr = e.where(F.col("event_type") == "view").select(
         F.col("user_id").alias("entity"),
@@ -13726,7 +12661,7 @@ def revision_distance_q(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.coalesce(F.col("props"), F.lit("")), r"[^\x00-\x7F]", ""
         ).alias("text"),
     )
-    return revision_distance(
+    return textstats.revision_distance(
         tr, entity_col="entity", ts_col="ts", order_col="turn_idx"
     )
 
@@ -13755,19 +12690,15 @@ ORACLES["revision_distance"] = r"""
            CAST(max(lev) AS BIGINT) AS max_lev
     FROM p WHERE lev IS NOT NULL GROUP BY entity
 """
-QUERIES["revision_distance"] = revision_distance_q
 
 
-def welch_ttest_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's t between click and view purchase values
     (operators/stats.welch_t_report): exact cent moments in ONE
     conditional aggregate, floats only in the final scalar formula
     with a fixed IEEE op order both engines replay bit for bit."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        welch_t_report,
-    )
-
-    return welch_t_report(
+    return stats.welch_t_report(
         _events(spark, sf_dir), "event_type", "value", "click", "view"
     )
 
@@ -13817,10 +12748,10 @@ ORACLES["welch_ttest"] = """
                   * 1000000.0) AS BIGINT) END AS df_micro
     FROM f
 """
-QUERIES["welch_ttest"] = welch_ttest_q
 
 
-def kcore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core of the MinHash-LSH candidate graph
     (operators/graph.kcore_peel): iterative peeling with a shrinking
     checkpointed edge list, gated against a fixed-depth recursive-CTE
@@ -13828,16 +12759,9 @@ def kcore_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     slow peel raises engine-side rather than silently diverging).
     triangle_count scores cohesion, near_dup_clusters reachability;
     the 2-core strips chain appendages off dup cliques."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.graph import (
-        kcore_peel,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    return kcore_peel(
-        minhash_lsh_pairs(docs), docs.select("doc_id"), k=2, max_iters=30
+    return graph.kcore_peel(
+        dedup.minhash_lsh_pairs(docs), docs.select("doc_id"), k=2, max_iters=30
     )
 
 
@@ -13863,19 +12787,15 @@ ORACLES["kcore"] = (
     FROM last
 """
 )
-QUERIES["kcore"] = kcore_q
 
 
-def cosine_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TF-cosine near-dup pairs >= 0.5 (operators/dedup.cosine_pairs):
     all-integer cos² (dot², norm products, one DIV), candidates from
     the df-capped inverted index, exact dot from the full tf table —
     the multiset-weighted twin of dedup_jaccard."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        cosine_pairs,
-    )
-
-    return cosine_pairs(
+    return dedup.cosine_pairs(
         _fan(_documents(spark, sf_dir), "doc_id"), cos_threshold=0.5, max_df=1000
     )
 
@@ -13914,17 +12834,15 @@ ORACLES["cosine_pairs"] = r"""
     JOIN n2 nb ON nb.doc_id = dot.doc_b
     WHERE dot * dot * 1000000 // (na.n2 * nb.n2) >= 250000
 """
-QUERIES["cosine_pairs"] = cosine_pairs_q
 
 
-def srm_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch gate (operators/stats.srm_check) over the
     distinct-user spine: md5-deterministic 2:1:1 assignment (no
     rand()), one ghost variant injected (user_id % 101 == 7) to
     exercise the unassigned-leak counter; chi² exact-integer, flagged
     at the df=2 α=0.001 critical value 13.816."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import srm_check
-
     users = _events(spark, sf_dir).select("user_id").distinct()
     hx = F.md5(F.concat_ws("|", F.lit("srm"), F.col("user_id").cast("string")))
     key = F.conv(F.substring(hx, 1, 8), 16, 10).cast("bigint")
@@ -13937,7 +12855,7 @@ def srm_check_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("variant")
     )
-    return srm_check(
+    return stats.srm_check(
         assigned,
         "variant",
         {"control": 2, "a": 1, "b": 1},
@@ -13983,18 +12901,16 @@ ORACLES["srm_check"] = """
            coalesce(num * 1000000 // 8 // t > 13816000, false) AS srm_flag
     FROM f
 """
-QUERIES["srm_check"] = srm_check_q
 
 
-def mcc_eval_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mcc_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matthews correlation of sign(first embedding component) as a
     detector for the label-0 class (operators/stats.mcc_report): one
     conditional aggregate; exact decimal numerator, fixed-order
     sqrt-product denominator both engines replay bit for bit."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import mcc_report
-
     e = _embeddings(spark, sf_dir)
-    return mcc_report(
+    return stats.mcc_report(
         e,
         label=F.col("label") == 0,
         pred=F.col("embedding")[0].cast("double") > F.lit(0.0),
@@ -14035,20 +12951,16 @@ ORACLES["mcc_eval"] = """
            END AS mcc_micro
     FROM m
 """
-QUERIES["mcc_eval"] = mcc_eval_q
 
 
-def l_diversity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """l-diversity audit (operators/dq.l_diversity_report): QI =
     (lang, n_chars DIV 512), sensitive = source; diversity histogram
     flagging homogeneous classes below l=3 — the homogeneity-attack
     gate k_anonymity alone misses."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        l_diversity_report,
-    )
-
     d = _documents(spark, sf_dir)
-    return l_diversity_report(
+    return dq.l_diversity_report(
         d,
         {"lang": F.col("lang"), "len_bucket": F.expr("n_chars DIV 512")},
         sensitive=F.col("source"),
@@ -14073,20 +12985,16 @@ ORACLES["l_diversity"] = """
            l < 3 AS below_l
     FROM classes GROUP BY l
 """
-QUERIES["l_diversity"] = l_diversity_q
 
 
-def resample_ffill_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def resample_ffill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly-grid forward fill per user (operators/asof.resample_ffill):
     sequence()-exploded epoch-aligned ticks + ONE last(ignorenulls)
     running window over the grid∪events union — two entity exchanges
     total, never a per-tick probe join; gated against DuckDB's native
     ASOF LEFT JOIN on the identical floored-seconds frame."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        resample_ffill,
-    )
-
-    return resample_ffill(
+    return asof.resample_ffill(
         _events(spark, sf_dir),
         entity_col="user_id",
         ts_col="ts",
@@ -14115,24 +13023,19 @@ ORACLES["resample_ffill"] = """
     FROM g ASOF LEFT JOIN ev e
       ON g.entity = e.entity AND g.tick >= e.t
 """
-QUERIES["resample_ffill"] = resample_ffill_q
 
 
-def clustering_coeff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient over the MinHash-LSH candidate
     graph (operators/graph.clustering_coefficients): all-integer
     cc_micro per node with degree >= 2; pairs pinned once
     (localCheckpoint) so the degree spine and the wedge pipeline read
     a materialized edge list, not three LSH replays."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.graph import (
-        clustering_coefficients,
-    )
-
-    pairs = minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id")).localCheckpoint()
-    return clustering_coefficients(pairs, src="doc_a", dst="doc_b").select(
+    pairs = dedup.minhash_lsh_pairs(
+        _fan(_documents(spark, sf_dir), "doc_id")
+    ).localCheckpoint()
+    return graph.clustering_coefficients(pairs, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "degree", "n_triangles", "cc_micro"
     )
 
@@ -14175,24 +13078,19 @@ ORACLES["clustering_coeff"] = f"""
     FROM deg LEFT JOIN tcnt ON tcnt.node = deg.v
     WHERE deg.d >= 2
 """.format(lsh=ORACLES["dedup_minhash_lsh"])
-QUERIES["clustering_coeff"] = clustering_coeff_q
 
 
-def assortativity_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree assortativity of the MinHash-LSH candidate graph
     (operators/graph.degree_assortativity): Newman's estimator as
     pearson_corr_exact over the degree-joined symmetric edge frame —
     exact decimal moments, graph-size scalars riding the |V|-row
     degree frame (no driver counts), edges pinned once."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.graph import (
-        degree_assortativity,
-    )
-
-    pairs = minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id")).localCheckpoint()
-    return degree_assortativity(pairs, src="doc_a", dst="doc_b")
+    pairs = dedup.minhash_lsh_pairs(
+        _fan(_documents(spark, sf_dir), "doc_id")
+    ).localCheckpoint()
+    return graph.degree_assortativity(pairs, src="doc_a", dst="doc_b")
 
 
 ORACLES["assortativity"] = f"""
@@ -14229,10 +13127,10 @@ ORACLES["assortativity"] = f"""
                 ELSE NULL END AS assort_r
     FROM m, sz
 """.format(lsh=ORACLES["dedup_minhash_lsh"])
-QUERIES["assortativity"] = assortativity_q
 
 
-def linear_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def linear_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear multi-touch attribution over a 7-day lookback
     (operators/funnel.linear_attribution): the algebraic two-window
     inversion — trailing RANGE frame sizes each purchase's touch set,
@@ -14240,11 +13138,7 @@ def linear_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange, zero joins, exact micro-cents.  The NULL campaign row
     carries unattributed purchases (no in-window touch) plus credit
     of clicks without a campaign tag."""
-    from dane_visual_feature_extraction_worker_spark.operators.funnel import (
-        linear_attribution,
-    )
-
-    return linear_attribution(
+    return funnel.linear_attribution(
         _events(spark, sf_dir),
         entity_col="user_id",
         ts_col="ts",
@@ -14299,22 +13193,17 @@ ORACLES["linear_attribution"] = """
            CAST(sum(amt) AS BIGINT) AS credit_microcents
     FROM amts WHERE amt IS NOT NULL GROUP BY campaign
 """
-QUERIES["linear_attribution"] = linear_attribution_q
 
 
-def blocking_quality_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reduction ratio + pair completeness of the MinHash-LSH blocker
     against exact-duplicate ground truth (operators/dedup.
     blocking_quality): one digest scan (persisted across the two
     membership joins), truth pairs from one hash groupBy, candidates
     never self-joined."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        blocking_quality,
-        minhash_lsh_pairs,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    return blocking_quality(docs, minhash_lsh_pairs(docs))
+    return dedup.blocking_quality(docs, dedup.minhash_lsh_pairs(docs))
 
 
 ORACLES["blocking_quality"] = f"""
@@ -14349,20 +13238,16 @@ ORACLES["blocking_quality"] = f"""
              CAST(f * 1000000 // t AS BIGINT) END AS pair_completeness_micro
     FROM n, t, c
 """.format(lsh=ORACLES["dedup_minhash_lsh"])
-QUERIES["blocking_quality"] = blocking_quality_q
 
 
-def encoding_audit_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def encoding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source mojibake / replacement-char / control-byte audit
     (operators/textstats.encoding_audit): literal fingerprint panel
     (pure `contains`, no regex — no Java/RE2 escape divergence) +
     one ASCII-only control-class rlike; single |sources|-key
     groupBy, the corpus never shuffles."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        encoding_audit,
-    )
-
-    return encoding_audit(_documents(spark, sf_dir))
+    return textstats.encoding_audit(_documents(spark, sf_dir))
 
 
 ORACLES["encoding_audit"] = """
@@ -14393,10 +13278,10 @@ ORACLES["encoding_audit"] = """
                 * 1000000 // count(*) AS BIGINT) AS clean_share_micro
     FROM flags GROUP BY 1
 """
-QUERIES["encoding_audit"] = encoding_audit_q
 
 
-def multimodal_decode_wav_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def multimodal_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode under the gate: deterministic RIFF/WAVE PCM
     payloads (multimodal.encode_wav — the text's UTF-8 byte pairs as
     little-endian int16 samples) synthesized Spark-side, decoded with
@@ -14406,13 +13291,8 @@ def multimodal_decode_wav_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     replays the byte-pair sign math over hex(text) — encode→decode is
     lossless so byte identity is what the gate checks.  Closes the
     audio modality next to PPM/PNG/NPZ/JPEG."""
-    from dane_visual_feature_extraction_worker_spark.multimodal import (
-        decode_audio_features,
-        synth_wav_payloads,
-    )
-
-    mm = synth_wav_payloads(_documents(spark, sf_dir))
-    return decode_audio_features(mm)
+    mm = multimodal.synth_wav_payloads(_documents(spark, sf_dir))
+    return multimodal.decode_audio_features(mm)
 
 
 ORACLES["multimodal_decode_wav"] = """
@@ -14450,20 +13330,16 @@ ORACLES["multimodal_decode_wav"] = """
                 AS BIGINT) AS mean_abs_micro
     FROM s
 """
-QUERIES["multimodal_decode_wav"] = multimodal_decode_wav_q
 
 
-def theil_sen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user Theil-Sen spend trend over daily cent totals
     (operators/stats.theil_sen_trend): robust median-of-pairwise-
     slopes — signed integer division truncates toward zero in BOTH
     engines (Spark DIV and DuckDB //), so negative slopes replay
     exactly; bounded k(k-1)/2 pair fan-out per entity (k <= 31 days
     here), lazy in-plan max_points guard."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        theil_sen_trend,
-    )
-
     e = _events(spark, sf_dir)
     daily = e.groupBy(
         "user_id",
@@ -14475,7 +13351,7 @@ def theil_sen_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    return theil_sen_trend(
+    return stats.theil_sen_trend(
         daily, entity_col="user_id", x_col="day", y_col="cents"
     ).withColumnRenamed("entity", "user_id")
 
@@ -14507,20 +13383,16 @@ ORACLES["theil_sen"] = """
     FROM ranked r JOIN np ON np.entity = r.entity
     WHERE r.rn = (r.npair + 1) // 2
 """
-QUERIES["theil_sen"] = theil_sen_q
 
 
-def cold_start_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cold_start(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cold-start coverage at a 2024-01-20 train/serve split
     (operators/dq.cold_start_report): one conditional entity
     aggregate + one-row rollup, zero joins — the share of post-split
     entities (and their events) a split-backfilled feature store
     would serve featureless."""
-    from dane_visual_feature_extraction_worker_spark.operators.dq import (
-        cold_start_report,
-    )
-
-    return cold_start_report(
+    return dq.cold_start_report(
         _events(spark, sf_dir), split_ts="2024-01-20 00:00:00"
     )
 
@@ -14546,22 +13418,18 @@ ORACLES["cold_start"] = """
                 AS BIGINT) AS cold_event_share_micro
     FROM f
 """
-QUERIES["cold_start"] = cold_start_q
 
 
-def wilson_ctr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def wilson_ctr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-campaign click-through Wilson lower bound
     (operators/stats.wilson_lower_bounds): clicks over views by
     props.k in ONE conditional aggregate; the small-n-honest ranking
     statistic with fixed-IEEE-order bound math."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        wilson_lower_bounds,
-    )
-
     e = _events(spark, sf_dir).withColumn(
         "campaign", F.get_json_object("props", "$.k").cast("bigint")
     )
-    return wilson_lower_bounds(
+    return stats.wilson_lower_bounds(
         e,
         "campaign",
         success=F.col("event_type") == "click",
@@ -14597,23 +13465,19 @@ ORACLES["wilson_ctr"] = """
            END AS wilson_lb_micro
     FROM f
 """
-QUERIES["wilson_ctr"] = wilson_ctr_q
 
 
-def kmv_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KMV overlap sketch between clicker and viewer user sets
     (operators/sketches.kmv_overlap, k=64): one distinct-hash
     exchange with max-combined membership flags, three
     TakeOrderedAndProject k-smallest reads — per-set estimates, union
     estimate, bottom-k Jaccard, derived intersection."""
-    from dane_visual_feature_extraction_worker_spark.operators.sketches import (
-        kmv_overlap,
-    )
-
     e = _events(spark, sf_dir).where(
         F.col("event_type").isin("click", "view")
     )
-    return kmv_overlap(
+    return sketches.kmv_overlap(
         e,
         "user_id",
         in_a=F.col("event_type") == "click",
@@ -14673,23 +13537,19 @@ ORACLES["kmv_overlap"] = (
     FROM est
 """
 )
-QUERIES["kmv_overlap"] = kmv_overlap_q
 
 
-def diff_in_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2x2 difference-in-differences on purchase value
     (operators/stats.diff_in_diff): md5-deterministic treatment
     cohort x 2024-01-15 cutover, four exact cell moments in ONE
     conditional aggregate, DiD from floored micro-cent means."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        diff_in_diff,
-    )
-
     e = _events(spark, sf_dir)
     hx = F.md5(F.concat_ws("|", F.lit("did"), F.col("user_id").cast("string")))
     treated = F.conv(F.substring(hx, 1, 8), 16, 10).cast("bigint") % 2 == 0
     post = F.col("ts") >= F.lit("2024-01-15 00:00:00").cast("timestamp")
-    return diff_in_diff(e, treated=treated, post=post, value_col="value")
+    return stats.diff_in_diff(e, treated=treated, post=post, value_col="value")
 
 
 ORACLES["diff_in_diff"] = """
@@ -14730,18 +13590,14 @@ ORACLES["diff_in_diff"] = """
            END AS did_micro
     FROM m
 """
-QUERIES["diff_in_diff"] = diff_in_diff_q
 
 
-def mde_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def mde_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Observed-power MDE for click-vs-view value
     (operators/stats.mde_report): exact cent moments, fixed-IEEE
     two-sample MDE at alpha=0.05 / 80% power, absolute and relative."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        mde_report,
-    )
-
-    return mde_report(
+    return stats.mde_report(
         _events(spark, sf_dir), "event_type", "value", "click", "view"
     )
 
@@ -14792,24 +13648,20 @@ ORACLES["mde_report"] = """
                         * 1000000.0) AS BIGINT) END AS mde_rel_micro
     FROM f
 """
-QUERIES["mde_report"] = mde_report_q
 
 
-def anova_eta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def anova_eta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonality strength of event value
     (operators/stats.anova_eta_squared): eta-squared over the
     calendar-free dow = (epoch_days + 4) % 7 factor (both engines
     compute the grouping from epoch integers — no locale/week-start
     divergence); one |groups|-key exchange."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        anova_eta_squared,
-    )
-
     e = _events(spark, sf_dir).withColumn(
         "dow",
         F.expr("(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 + 4) % 7"),
     )
-    return anova_eta_squared(e, "dow", value_col="value")
+    return stats.anova_eta_squared(e, "dow", value_col="value")
 
 
 ORACLES["anova_eta"] = """
@@ -14840,23 +13692,18 @@ ORACLES["anova_eta"] = """
            END AS eta2_micro
     FROM f
 """
-QUERIES["anova_eta"] = anova_eta_q
 
 
-def dedup_strategy_diff_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dedup_strategy_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Keep-set diff: exact md5 dedup vs MinHash-LSH + connected
     components (operators/dedup.dedup_strategy_diff) — the go/no-go
     report for swapping dedup stages; only_exact_cut > 0 would mean
     the blocker misses exact copies (the blocking_quality recall
     alarm, cross-checked here from the keep-set side)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        dedup_strategy_diff,
-        minhash_lsh_pairs,
-    )
-
     docs = _fan(_documents(spark, sf_dir), "doc_id")
-    return dedup_strategy_diff(
-        docs, minhash_lsh_pairs(docs).localCheckpoint()
+    return dedup.dedup_strategy_diff(
+        docs, dedup.minhash_lsh_pairs(docs).localCheckpoint()
     )
 
 
@@ -14891,19 +13738,15 @@ ORACLES["dedup_strategy_diff"] = ORACLES["near_dup_clusters"].rsplit(
                 // count(*) AS BIGINT) AS agree_share_micro
     FROM fl
 """
-QUERIES["dedup_strategy_diff"] = dedup_strategy_diff_q
 
 
-def gibberish_rate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def gibberish_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source gibberish screen (operators/textstats.
     gibberish_report): ASCII consonant-run + vowel-floor flags, pure
     codegen, one |sources|-key exchange — the model-free cousin of
     perplexity filtering."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        gibberish_report,
-    )
-
-    return gibberish_report(_documents(spark, sf_dir))
+    return textstats.gibberish_report(_documents(spark, sf_dir))
 
 
 ORACLES["gibberish_rate"] = r"""
@@ -14931,19 +13774,15 @@ ORACLES["gibberish_rate"] = r"""
                 // count(*) AS BIGINT) AS gibberish_share_micro
     FROM g GROUP BY 1
 """
-QUERIES["gibberish_rate"] = gibberish_rate_q
 
 
-def audience_overlap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise audience overlap across event types
     (operators/funnel.audience_overlap): one distinct membership pass,
     |C|-row size aggregate, entity-key self-join bounded at |C|² per
     entity — exact Jaccard for every category pair."""
-    from dane_visual_feature_extraction_worker_spark.operators.funnel import (
-        audience_overlap,
-    )
-
-    return audience_overlap(_events(spark, sf_dir))
+    return funnel.audience_overlap(_events(spark, sf_dir))
 
 
 ORACLES["audience_overlap"] = """
@@ -14959,10 +13798,10 @@ ORACLES["audience_overlap"] = """
              AS jaccard_micro
     FROM b JOIN s sa ON sa.c = b.cat_a JOIN s sb ON sb.c = b.cat_b
 """
-QUERIES["audience_overlap"] = audience_overlap_q
 
 
-def link_prediction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Common-neighbor + resource-allocation scores for non-edges of
     the MinHash-LSH graph (operators/graph.link_prediction_scores):
     the transitive near-dups banding recall missed, ranked; hub cut
@@ -14972,19 +13811,12 @@ def link_prediction_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     a blocker with a recall gap, which also keeps the sf0.01 gate
     non-trivial (the unthinned LSH graph is transitively closed near-
     cliques with zero distance-2 non-edges at that SF; 82 at sf0.1)."""
-    from dane_visual_feature_extraction_worker_spark.operators.dedup import (
-        minhash_lsh_pairs,
-    )
-    from dane_visual_feature_extraction_worker_spark.operators.graph import (
-        link_prediction_scores,
-    )
-
     pairs = (
-        minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id"))
+        dedup.minhash_lsh_pairs(_fan(_documents(spark, sf_dir), "doc_id"))
         .where((F.col("doc_a") + F.col("doc_b")) % 3 != 0)
         .localCheckpoint()
     )
-    return link_prediction_scores(pairs)
+    return graph.link_prediction_scores(pairs)
 
 
 ORACLES["link_prediction"] = f"""
@@ -15019,19 +13851,15 @@ ORACLES["link_prediction"] = f"""
     FROM sc LEFT JOIN ex ON ex.a = sc.doc_a AND ex.b = sc.doc_b
     WHERE ex.a IS NULL
 """.format(lsh=ORACLES["dedup_minhash_lsh"])
-QUERIES["link_prediction"] = link_prediction_q
 
 
-def median_of_means_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def median_of_means(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median-of-means robust mean of event value, 32 md5 shards
     (operators/stats.median_of_means): one |shards|-key exchange, the
     median picked over the 32-row bounded frame; the mean-vs-MoM gap
     is the heavy-tail diagnostic."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        median_of_means,
-    )
-
-    return median_of_means(
+    return stats.median_of_means(
         _events(spark, sf_dir), "value", key=F.col("event_id"), shards=32
     )
 
@@ -15070,19 +13898,15 @@ ORACLES["median_of_means"] = (
     FROM ranked WHERE rn = (k + 1) // 2
 """
 )
-QUERIES["median_of_means"] = median_of_means_q
 
 
-def band_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Numeric band join (operators/joins.band_join): click values
     matched to same-user purchase values within 5.00 — the bucketed
     equi-join decomposition (3x narrow explode + exact post-filter),
     never the quadratic theta join DuckDB's oracle runs; rollup to
     per-user match stats so the gate frame stays bounded."""
-    from dane_visual_feature_extraction_worker_spark.operators.joins import (
-        band_join,
-    )
-
     e = _events(spark, sf_dir)
     cents = (F.col("value").cast("decimal(18,2)") * 100).cast("bigint")
     clicks = e.where(F.col("event_type") == "click").select(
@@ -15091,7 +13915,7 @@ def band_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchases = e.where(F.col("event_type") == "purchase").select(
         "user_id", cents.alias("pv")
     )
-    pairs = band_join(
+    pairs = joins.band_join(
         clicks,
         purchases,
         on=["user_id"],
@@ -15126,19 +13950,15 @@ ORACLES["band_join"] = """
            CAST(max(abs(d)) AS BIGINT) AS max_abs_diff
     FROM m GROUP BY user_id
 """
-QUERIES["band_join"] = band_join_q
 
 
-def template_contamination_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def template_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chat/SFT-template contamination audit per source
     (operators/textstats.template_contamination): literal marker
     panel (ChatML / [INST] / Alpaca / turn prefixes), one
     |sources|-key exchange, zero joins."""
-    from dane_visual_feature_extraction_worker_spark.operators.textstats import (
-        template_contamination,
-    )
-
-    return template_contamination(_documents(spark, sf_dir))
+    return textstats.template_contamination(_documents(spark, sf_dir))
 
 
 ORACLES["template_contamination"] = """
@@ -15171,7 +13991,6 @@ ORACLES["template_contamination"] = """
                 // count(*) AS BIGINT) AS contaminated_share_micro
     FROM f GROUP BY 1
 """
-QUERIES["template_contamination"] = template_contamination_q
 
 
 def _power_iter_sql(iters: int) -> str:
@@ -15233,34 +14052,27 @@ def _power_iter_sql(iters: int) -> str:
     return "".join(parts)
 
 
-def pca_power_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-PC collapse diagnostic by exact-integer power iteration
     (operators/linalg.power_iteration_top, 8 rounds): the Gramian is
     the one corpus pass; the iteration runs on the pinned d^2-row G
     frame with truncating-division rescaling both engines replay bit
     for bit; gated against an unrolled 8-round HUGEINT oracle."""
-    from dane_visual_feature_extraction_worker_spark.operators.linalg import (
-        power_iteration_top,
-    )
-
     emb = _embeddings(spark, sf_dir)
-    return power_iteration_top(emb, iters=8)
+    return linalg.power_iteration_top(emb, iters=8)
 
 
 ORACLES["pca_power"] = _power_iter_sql(8)
-QUERIES["pca_power"] = pca_power_q
 
 
-def activity_bitmap_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def activity_bitmap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-activity bitmap features for Jan 2024 (operators/recency.
     activity_bitmap): one bit_or groupBy + row-local bit arithmetic —
     popcount, 31-term trailing-ones greatest() for the longest
     streak, run count — the zero-window twin of activity_streaks."""
-    from dane_visual_feature_extraction_worker_spark.operators.recency import (
-        activity_bitmap,
-    )
-
-    return activity_bitmap(
+    return recency.activity_bitmap(
         _events(spark, sf_dir), epoch_day0=19723, horizon_days=31
     )
 
@@ -15290,19 +14102,15 @@ ORACLES["activity_bitmap"] = """
         for s in range(31)
     )
 )
-QUERIES["activity_bitmap"] = activity_bitmap_q
 
 
-def target_encode_loo_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out smoothed target encoding of event_type against
     value (operators/encoding.target_encode_loo, prior weight 10):
     one |categories|-key aggregate + broadcast global mean; the
     self-leak fix alongside target_encode_pit's temporal guard."""
-    from dane_visual_feature_extraction_worker_spark.operators.encoding import (
-        target_encode_loo,
-    )
-
-    return target_encode_loo(
+    return encoding.target_encode_loo(
         _events(spark, sf_dir),
         cat_col="event_type",
         label_col="value",
@@ -15328,20 +14136,16 @@ ORACLES["target_encode_loo"] = """
                 // (pc.nc - 1 + 10) AS BIGINT) AS enc_micro
     FROM base b JOIN pc USING (category), g
 """
-QUERIES["target_encode_loo"] = target_encode_loo_q
 
 
-def centroid_drift_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Centroid drift between the label<5 and label>=5 embedding
     cohorts (operators/linalg.centroid_drift): exact 2^-24-quantized
     component sums in one 128-key aggregate; cosine + norm ratio from
     the exact decimals in fixed IEEE order — the encoder-swap tripwire
     next to embedding_gram's second-moment view."""
-    from dane_visual_feature_extraction_worker_spark.operators.linalg import (
-        centroid_drift,
-    )
-
-    return centroid_drift(
+    return linalg.centroid_drift(
         _embeddings(spark, sf_dir),
         in_a=F.col("label") < 5,
         in_b=F.col("label") >= 5,
@@ -15382,20 +14186,16 @@ ORACLES["centroid_drift"] = """
                   * 1000000.0) AS BIGINT) END AS norm_ratio_micro
     FROM cnt, mom
 """
-QUERIES["centroid_drift"] = centroid_drift_q
 
 
-def isotonic_calibration_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) calibration of purchase share against value
     buckets (operators/stats.isotonic_calibration): the corpus
     collapses to |bins| rows in one rollup, then PAV runs per group
     in an applyInPandas stage — sequential in x by nature, which is
     why this key is rows-only (no SQL oracle; brute-force parity
     pinned in tests/test_drift_isotonic.py)."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        isotonic_calibration,
-    )
-
     e = _events(spark, sf_dir)
     bins = e.groupBy(
         F.lit("all").alias("model"),
@@ -15410,25 +14210,19 @@ def isotonic_calibration_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("s"),
         F.count(F.lit(1)).cast("bigint").alias("n"),
     )
-    return isotonic_calibration(
+    return stats.isotonic_calibration(
         bins, group_col="model", x_col="x", sum_col="s", count_col="n"
     )
 
 
-QUERIES["isotonic_calibration"] = isotonic_calibration_q
-
-
-def resample_linear_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def resample_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly-grid linear interpolation per user (operators/asof.
     resample_linear): the flow-series twin of resample_ffill — same
     two-entity-exchange grid∪events shape plus a backward/forward
     ignorenulls window pair sharing one sort; exact integer
     interpolation (cents·µs products, one truncating DIV)."""
-    from dane_visual_feature_extraction_worker_spark.operators.asof import (
-        resample_linear,
-    )
-
-    return resample_linear(
+    return asof.resample_linear(
         _events(spark, sf_dir),
         entity_col="user_id",
         ts_col="ts",
@@ -15476,19 +14270,15 @@ ORACLES["resample_linear"] = """
                      AS BIGINT) END AS value_interp_cents
     FROM ann WHERE isg = 1
 """
-QUERIES["resample_linear"] = resample_linear_q
 
 
-def seasonal_naive_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user 7-day seasonal-naive backtest over daily cent totals
     (operators/stats.seasonal_naive_error): the 'same as last Tuesday'
     baseline every forecast feature must beat — one equi self-join of
     the daily rollup on (entity, day-7) + one entity rollup, exact
     integer MAE/bias."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        seasonal_naive_error,
-    )
-
     e = _events(spark, sf_dir)
     daily = e.groupBy(
         F.col("user_id").alias("entity"),
@@ -15499,7 +14289,7 @@ def seasonal_naive_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("cents")
     )
-    return seasonal_naive_error(
+    return stats.seasonal_naive_error(
         daily, entity_col="entity", day_col="day", value_col="cents",
         season_days=7,
     )
@@ -15522,20 +14312,16 @@ ORACLES["seasonal_naive"] = """
            CAST(max(abs(err)) AS BIGINT) AS max_abs_err
     FROM scored GROUP BY entity
 """
-QUERIES["seasonal_naive"] = seasonal_naive_q
 
 
-def session_gap_sweep_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def session_gap_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-gap decision table at 5m/15m/30m/1h/4h candidates
     (operators/sessionize.session_gap_sweep): session counts + mean
     covered span per threshold from ONE lag pass — no
     re-sessionization per candidate; the sessionize twin of
     watermark_sweep."""
-    from dane_visual_feature_extraction_worker_spark.operators.sessionize import (
-        session_gap_sweep,
-    )
-
-    return session_gap_sweep(
+    return sessionize.session_gap_sweep(
         _events(spark, sf_dir),
         gaps_seconds=[300, 900, 1800, 3600, 14400],
         entity_col="user_id",
@@ -15570,10 +14356,10 @@ ORACLES["session_gap_sweep"] = """
              AS mean_session_span_us
     FROM per
 """
-QUERIES["session_gap_sweep"] = session_gap_sweep_q
 
 
-def bh_fdr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini–Hochberg FDR over 24 hour-of-day purchase-rate
     anomaly tests (operators/stats.bh_fdr_report): the multiple-
     testing control a per-slice dashboard needs.  Chi-square scalar
@@ -15582,9 +14368,7 @@ def bh_fdr_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     touches erf/igamma.  chi2 = 0 slices take an explicit p = 1
     branch on BOTH sides (Spark ANSI raises on 1.0/0.0; DuckDB
     yields NULL — neither is the cap the math wants)."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import bh_fdr_report
-
-    return bh_fdr_report(
+    return stats.bh_fdr_report(
         _events(spark, sf_dir),
         F.hour("ts").cast("bigint"),
         F.col("event_type") == "purchase",
@@ -15643,18 +14427,16 @@ ORACLES["bh_fdr"] = """
                 AS BIGINT) AS rejected
     FROM flagged
 """
-QUERIES["bh_fdr"] = bh_fdr_q
 
 
-def ipw_ate_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hour-of-day-stratified IPW/standardized treatment effect of
     click vs view on value (operators/stats.ipw_ate_report), next to
     the naive gap it corrects.  All-integer: per-stratum micro means
     via decimal DIV, bigint weighted combine — no float aggregation,
     so engine summation order cannot matter."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import ipw_ate_report
-
-    return ipw_ate_report(
+    return stats.ipw_ate_report(
         _events(spark, sf_dir),
         F.col("event_type") == "click",
         F.col("event_type") == "view",
@@ -15698,20 +14480,16 @@ ORACLES["ipw_ate"] = """
                 // sum(CASE WHEN ok THEN ns END) AS BIGINT) AS ate_micro
     FROM sc
 """
-QUERIES["ipw_ate"] = ipw_ate_q
 
 
-def conformal_intervals_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def conformal_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal ±qhat intervals per event_type with holdout
     coverage (operators/stats.conformal_interval_report): calibrate on
     even event_ids, verify coverage >= 90% on odd.  Exact integer
     micro residuals; the order statistic comes from a value-histogram
     cumulative window (O(distinct cents), never a corpus-row rank)."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        conformal_interval_report,
-    )
-
-    return conformal_interval_report(
+    return stats.conformal_interval_report(
         _events(spark, sf_dir), "event_type", "value", "event_id", 9, 10
     )
 
@@ -15757,20 +14535,16 @@ ORACLES["conformal_intervals"] = """
     WHERE NOT res.cal
     GROUP BY res.grp, res.n_calib, res.yhat_micro, q.qhat_micro
 """
-QUERIES["conformal_intervals"] = conformal_intervals_q
 
 
-def moment_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def moment_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type skewness + excess kurtosis from exact power sums
     (operators/stats.moment_profile): the tail-shape drift report the
     second-moment operators can't see.  One conditional-free
     map-side-combined aggregate — a single |types|-key exchange, floats
     only in the final 5-row formula with fixed IEEE op order."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        moment_profile,
-    )
-
-    return moment_profile(_events(spark, sf_dir), "event_type", "value")
+    return stats.moment_profile(_events(spark, sf_dir), "event_type", "value")
 
 
 ORACLES["moment_profile"] = """
@@ -15809,10 +14583,10 @@ ORACLES["moment_profile"] = """
            END AS kurtosis_micro
     FROM m
 """
-QUERIES["moment_profile"] = moment_profile_q
 
 
-def first_touch_attribution_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def first_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch revenue attribution — the acquisition-side twin of
     ``last_touch_attribution`` (and the third member of the attribution
     family with ``linear_attribution``): every purchase credits the
@@ -15858,10 +14632,10 @@ ORACLES["first_touch_attribution"] = r"""
                 AS DOUBLE) AS attributed_revenue
     FROM t WHERE event_type = 'purchase' GROUP BY campaign
 """
-QUERIES["first_touch_attribution"] = first_touch_attribution_q
 
 
-def activity_grid_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def activity_grid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week × hour-of-day activity grid: per-cell event count,
     corpus share, and exact revenue cents — the seasonality heatmap
     behind staffing/capacity curves and the calendar feature table a
@@ -15921,19 +14695,15 @@ ORACLES["activity_grid"] = """
                 // sum(n_events) OVER () AS BIGINT) AS share_micro
     FROM cells
 """
-QUERIES["activity_grid"] = activity_grid_q
 
 
-def cliffs_delta_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def cliffs_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cliff's delta of click vs view on value (operators/stats.
     cliffs_delta) — the robust [-1,1] effect size beside the same
     pair's welch_ttest (units) and ipw_ate (stratified): exact pair
     counts from the distinct-cent histogram, never a corpus sort."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        cliffs_delta,
-    )
-
-    return cliffs_delta(
+    return stats.cliffs_delta(
         _events(spark, sf_dir), "event_type", "value", "click", "view"
     )
 
@@ -15972,24 +14742,20 @@ ORACLES["cliffs_delta"] = """
            END AS delta_micro
     FROM tot
 """
-QUERIES["cliffs_delta"] = cliffs_delta_q
 
 
-def lift_at_k_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def lift_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k% cumulative-gain table (operators/stats.lift_at_k) for the
     auc_eval scorer (first embedding component micro vs label-0) — the
     campaign-facing scorecard beside the single AUC number.  Take-ties
     cutoff convention keeps the report deterministic under any
     physical row order; built on the DESC score histogram, one corpus
     exchange + domain-bounded windows."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        lift_at_k,
-    )
-
     e = _embeddings(spark, sf_dir)
     score = F.floor(F.col("embedding")[0].cast("double") * 1e6)
     label = F.when(F.col("label") == 0, 1).otherwise(0)
-    return lift_at_k(e, score, label)
+    return stats.lift_at_k(e, score, label)
 
 
 ORACLES["lift_at_k"] = """
@@ -16035,22 +14801,18 @@ ORACLES["lift_at_k"] = """
            nn AS n_total, pp AS pos_total
     FROM hit
 """
-QUERIES["lift_at_k"] = lift_at_k_q
 
 
-def odds_ratio_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def odds_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day-of-week odds ratio + risk ratio of high-value (> 100)
     outcomes for click vs view exposure (operators/stats.
     odds_ratio_report) — the 2x2 association read beside the same
     pair's welch_ttest/ipw_ate/cliffs_delta; calendar-free dow."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        odds_ratio_report,
-    )
-
     e = _events(spark, sf_dir).where(
         F.col("event_type").isin("click", "view")
     )
-    return odds_ratio_report(
+    return stats.odds_ratio_report(
         e,
         F.expr(
             "(unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000 + 4) % 7"
@@ -16090,10 +14852,10 @@ ORACLES["odds_ratio"] = """
            END AS risk_ratio_micro
     FROM per
 """
-QUERIES["odds_ratio"] = odds_ratio_q
 
 
-def conversion_lag_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def conversion_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Click→purchase conversion-lag profile per campaign: how long
     after the LAST prior click (the `last_touch_attribution` carry) a
     purchase lands — n, exact mean lag, and p50/p90 from the
@@ -16221,10 +14983,10 @@ ORACLES["conversion_lag"] = """
                     THEN lag_s END) AS p90_lag_s
     FROM run GROUP BY campaign
 """
-QUERIES["conversion_lag"] = conversion_lag_q
 
 
-def new_vs_returning_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def new_vs_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily new-vs-returning active-user split: per epoch day, how
     many distinct users were active, how many were active for the
     FIRST time ever, and the new-user share — the growth/lifecycle
@@ -16296,10 +15058,10 @@ ORACLES["new_vs_returning"] = """
              AS new_share_micro
     FROM pairs GROUP BY day
 """
-QUERIES["new_vs_returning"] = new_vs_returning_q
 
 
-def turn_position_profile_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def turn_position_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-sequence position profile: how value and payload size
     evolve over an entity's event sequence, by position DECILE
     (0 = opening tenth, 9 = closing tenth) — the transcript-verbosity
@@ -16371,10 +15133,10 @@ ORACLES["turn_position_profile"] = """
                 AS BIGINT) AS mean_props_len_micro
     FROM ranked GROUP BY 1
 """
-QUERIES["turn_position_profile"] = turn_position_profile_q
 
 
-def role_latency_matrix_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def role_latency_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Transition-latency matrix: exact mean inter-event gap per
     (previous type → type) pair — `markov_transitions` counts WHERE a
     sequence goes; this adds HOW LONG each hop takes (the user-thinks
@@ -16430,10 +15192,10 @@ ORACLES["role_latency_matrix"] = """
     FROM t WHERE from_type IS NOT NULL
     GROUP BY from_type, to_type
 """
-QUERIES["role_latency_matrix"] = role_latency_matrix_q
 
 
-def tool_loop_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def tool_loop_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consecutive same-type run ("loop") report per event type: run
     count, longest run, mean run length — the stuck-agent detector for
     transcripts (an agent re-issuing the same tool call turn after
@@ -16513,10 +15275,10 @@ ORACLES["tool_loop_report"] = """
                 AS BIGINT) AS mean_run_len_micro
     FROM runs GROUP BY event_type
 """
-QUERIES["tool_loop_report"] = tool_loop_report_q
 
 
-def copypasta_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def copypasta_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-user duplicated-content report: payloads posted verbatim
     by MULTIPLE distinct users, top-20 by spread — the spam/bot/
     template signal a within-corpus dedup key (`dedup_exact` keeps one
@@ -16567,10 +15329,10 @@ ORACLES["copypasta_report"] = """
     ORDER BY n_users DESC, n_events DESC, digest
     LIMIT 20
 """
-QUERIES["copypasta_report"] = copypasta_report_q
 
 
-def session_bounce_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def session_bounce_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Session-depth report on the gap-sessionized corpus (>3600 s
     starts a new session — the same cut as `sessionize_gaps`): total
     sessions, single-event ("bounce") sessions, integer-micro bounce
@@ -16583,11 +15345,7 @@ def session_bounce_report_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollup the gate key already pays, then ONE more strictly-coarser
     collapse to a single row (map-side combined).  No new corpus
     exchange beyond the sessionization itself."""
-    from dane_visual_feature_extraction_worker_spark.operators.sessionize import (
-        session_stats,
-    )
-
-    s = session_stats(
+    s = sessionize.session_stats(
         _events(spark, sf_dir),
         gap_seconds=3600.0,
         entity="user_id",
@@ -16639,10 +15397,10 @@ ORACLES["session_bounce_report"] = """
            CAST(max(n_turns) AS BIGINT) AS max_depth
     FROM per
 """
-QUERIES["session_bounce_report"] = session_bounce_report_q
 
 
-def value_by_returning_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def value_by_returning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Do returning-day events carry different value than first-day
     events?  Welch's t between the two lifecycle groups — the
     monetization-maturity read behind `new_vs_returning`'s counts,
@@ -16650,10 +15408,6 @@ def value_by_returning_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     welch kernel (operators/stats.welch_t_report), so the lifecycle
     flag costs one entity exchange and the test itself is the usual
     zero-shuffle conditional aggregate."""
-    from dane_visual_feature_extraction_worker_spark.operators.stats import (
-        welch_t_report,
-    )
-
     e = _events(spark, sf_dir)
     day = F.expr("unix_micros(CAST(ts AS TIMESTAMP)) DIV 86400000000")
     wu = Window.partitionBy("user_id").rowsBetween(
@@ -16665,7 +15419,7 @@ def value_by_returning_q(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("returning"))
         .alias("lifecycle"),
     )
-    return welch_t_report(flagged, "lifecycle", "value", "returning", "first")
+    return stats.welch_t_report(flagged, "lifecycle", "value", "returning", "first")
 
 
 ORACLES["value_by_returning"] = """
@@ -16726,10 +15480,10 @@ ORACLES["value_by_returning"] = """
            END AS df_micro
     FROM f
 """
-QUERIES["value_by_returning"] = value_by_returning_q
 
 
-def dau_wau_stickiness_q(spark: SparkSession, sf_dir: str) -> DataFrame:
+@query
+def dau_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU/WAU stickiness per day: daily actives, trailing-7-day
     actives, and the integer-micro ratio — THE product-engagement
     headline (how much of the weekly audience shows up on a given
@@ -16802,4 +15556,3 @@ ORACLES["dau_wau_stickiness"] = """
              AS stickiness_micro
     FROM dau d JOIN wau w ON d.day = w.day CROSS JOIN mn
 """
-QUERIES["dau_wau_stickiness"] = dau_wau_stickiness_q

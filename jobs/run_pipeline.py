@@ -34,7 +34,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--checkpoints", required=True, help="_checkpoints table root")
     ap.add_argument("--n-buckets", type=int, default=256)
     ap.add_argument("--entity-col", default="conv_id")
-    ap.add_argument("--session-gap-seconds", type=float, default=1800.0)
     ap.add_argument(
         "--config",
         action="append",

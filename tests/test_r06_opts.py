@@ -32,10 +32,18 @@ def test_fan_is_identity_when_scan_is_wide_enough(spark):
     # inputFiles is the same parquet, but the memo key is probed on the
     # df handed in — a wide frame must come back unchanged (no extra
     # exchange at production split counts).
+    # The key is shared with the narrow scan of the same file, so the
+    # prior entry is restored: later tests must see the real split count.
     key = (tuple(sorted(wide.inputFiles())), spark.sparkContext.defaultParallelism)
-    dq._SCAN_PARTS.pop(key, None)
+    prior = dq._SCAN_PARTS.pop(key, None)
     dq._SCAN_PARTS[key] = wide.rdd.getNumPartitions()
-    assert dq._fan(wide) is wide
+    try:
+        assert dq._fan(wide) is wide
+    finally:
+        if prior is None:
+            dq._SCAN_PARTS.pop(key, None)
+        else:
+            dq._SCAN_PARTS[key] = prior
 
 
 def test_fan_off_switch_restores_plain_scan(spark):
@@ -66,49 +74,64 @@ def test_read_parquet_memoized_schema_matches_inference(spark):
 def test_textstats_has_no_eager_collect():
     """VERDICT r5 #4 done-criterion: the LM scorers route their corpus
     totals through lazy broadcast scalars — no `.collect()` barrier
-    anywhere in operators/textstats.py."""
+    anywhere in operators/textstats.py.  Scans the AST for action calls
+    (``x.collect()``, ``toPandas``, ``first``, ``head``), so prose that
+    mentions them does not count; ``F.first`` is a lazy aggregate."""
+    import ast
     import inspect
 
     from dane_visual_feature_extraction_worker_spark.operators import textstats
 
-    src = inspect.getsource(textstats)
-    assert ".collect(" not in src
+    tree = ast.parse(inspect.getsource(textstats))
+    actions = [
+        (node.lineno, node.func.attr)
+        for node in ast.walk(tree)
+        if isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr in {"collect", "toPandas", "first", "head"}
+        and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "F")
+    ]
+    assert actions == []
 
 
 def test_lean_projection_order_matches_turn_idx(spark):
     """The `_tr_proj_lean` contract: within a conversation, ordering by
     (ts, turn_ord=event_id) is exactly the full projection's turn_idx
     order — so operators that only ORDER by turn_idx are result-
-    identical on the lean frame (no corpus rank window)."""
-    from dane_visual_feature_extraction_worker_spark.plans import driver_queries as dq
-
-    full = dq._tr_proj(spark, SF).select("conv_id", "turn_idx", "ts")
-    lean = dq._tr_proj_lean(spark, SF)
+    identical on the lean frame (no corpus rank window).  Checked row by
+    row: the full projection is re-derived here with ``event_id`` kept
+    (and pinned to ``_tr_proj``), then joined on (conv_id, ts, event_id)."""
     from pyspark.sql import Window
 
+    from dane_visual_feature_extraction_worker_spark.plans import driver_queries as dq
+
+    cols = ["conv_id", "turn_idx", "ts"]
+    w_full = Window.partitionBy("user_id").orderBy("ts", "event_id")
+    full = dq._events(spark, SF).select(
+        F.col("user_id").cast("string").alias("conv_id"),
+        (F.row_number().over(w_full) - 1).cast("int").alias("turn_idx"),
+        F.col("ts").cast("timestamp").alias("ts"),
+        "event_id",
+    )
+    ref = dq._tr_proj(spark, SF).select(*cols)
+    assert full.select(*cols).exceptAll(ref).count() == 0
+    assert ref.exceptAll(full.select(*cols)).count() == 0
+
+    lean = dq._tr_proj_lean(spark, SF)
     w = Window.partitionBy("conv_id").orderBy("ts", "turn_ord")
     rederived = lean.select(
         "conv_id",
-        (F.row_number().over(w) - 1).cast("int").alias("turn_idx2"),
         "ts",
-        "turn_ord",
+        F.col("turn_ord").alias("event_id"),
+        (F.row_number().over(w) - 1).cast("int").alias("turn_idx2"),
     )
-    joined = full.join(
-        rederived,
-        on=["conv_id", "ts"],
-        how="full_outer",
-    )
-    # every (conv, ts) pairing carries equal rank sets; compare the
-    # multisets per conversation to be tie-safe
-    bad = (
-        joined.groupBy("conv_id")
-        .agg(
-            F.sort_array(F.collect_list("turn_idx")).alias("a"),
-            F.sort_array(F.collect_list("turn_idx2")).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .count()
-    )
+    joined = full.join(rederived, on=["conv_id", "ts", "event_id"], how="full_outer")
+    assert joined.count() == ref.count() > 0
+    bad = joined.where(
+        F.col("turn_idx").isNull()
+        | F.col("turn_idx2").isNull()
+        | (F.col("turn_idx") != F.col("turn_idx2"))
+    ).count()
     assert bad == 0
     # and the lean plan really has no Window node
     plan = lean._jdf.queryExecution().executedPlan().toString()

@@ -218,3 +218,15 @@ def test_corrupt_checkpoint_table_fails_loudly(spark, transcripts, tmp_path):
         r.run(transcripts, lambda df: df)
     assert "injected failure" not in str(err.value)
     assert not os.path.exists(r.output_dir + "/bucket=0")
+
+
+def test_run_pipeline_rejects_session_gap_flag():
+    """The job always sessionizes at ``kernel.SESSION_GAP_S``; a gap flag
+    it would ignore is rejected at parse time instead of silently
+    producing 1800-s sessions."""
+    from jobs import run_pipeline
+
+    args = ["--input", "i", "--output", "o", "--checkpoints", "c"]
+    with pytest.raises(SystemExit) as exc:
+        run_pipeline.main(args + ["--session-gap-seconds", "600"])
+    assert exc.value.code == 2
